@@ -1,6 +1,11 @@
 package graft.model
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+import scala.util.Try
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver test tables (`/root/repo/TESTDATA.md`,
   * `/root/repo/FIXTURES.md` §B) plus the star-schema StructTypes the
@@ -11,10 +16,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown reach the scan. At 100 TB these would be
   * partitioned tables; nothing here assumes single-file layout — the
   * path can be a directory/glob.
+  *
+  * Read contract: `table` returns the same DataFrame a schema-less
+  * `spark.read.parquet(path)` would, but infers each file's schema
+  * once per session per file stamp. A schema-less read launches a
+  * one-task job that reads the footer every time the DataFrame is
+  * built; the report queries build hundreds of small reads, so that
+  * job was a fixed share of every query. The memo is keyed on the
+  * qualified path and the file's modification time and length, so a
+  * rewritten file re-infers. It is kept per session because inference
+  * depends on session confs (`events` sets `nanosAsLong`), and holds
+  * sessions weakly: a stopped session's memo goes with it.
+  * Directories, globs and missing paths take the plain read, so
+  * Spark's own listing and errors are unchanged.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private case class Stamp(path: String, modified: Long, length: Long)
+
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[Stamp, StructType]]())
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    stamp(spark, path) match {
+      case Some(key) =>
+        val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+        Option(memo.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            memo.putIfAbsent(key, df.schema)
+            df
+        }
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The memo key of a single existing file; None for anything else. */
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else Try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      (fs.makeQualified(p), fs.getFileStatus(p))
+    }.toOption.collect { case (q, st) if st.isFile =>
+      Stamp(q.toString, st.getModificationTime, st.getLen)
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -2,11 +2,18 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.etl.StarEtl
 
-class EtlSpec extends AnyFunSuite {
+class EtlSpec extends AnyFunSuite with TimeLimits {
   import TestSpark._
+  implicit val signaler: Signaler = ThreadSignaler
+
+  /** Row counts of the tables a batch wrote, read back from disk. */
+  def readBack(out: String, tables: Iterable[String]): Map[String, Long] =
+    tables.map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
 
   test("runBatch writes all 7 star tables with consistent counts") {
     val out = Files.createTempDirectory("graft_etl").toString
@@ -28,6 +35,11 @@ class EtlSpec extends AnyFunSuite {
     val s1 = spark.read.parquet(s"$out/stats_mask1")
     assert(s1.join(access.withColumnRenamed("line_id", "hub_id"),
       s1("line_id") === col("hub_id")).count() == counts("stats_mask1"))
+    // the counts are taken during the write; they match what landed
+    assert(readBack(out, counts.keys) == counts)
+    // a re-run overwrites the same tables and reports the same counts
+    assert(StarEtl.runBatch(spark, sf, out) == counts)
+    assert(readBack(out, counts.keys) == counts)
   }
 
   test("stats tables carry the reference's full column arity") {
@@ -54,7 +66,9 @@ class EtlSpec extends AnyFunSuite {
     assert(StarEtl.maskedStatTypes(5) == Seq("Stat1", "Stat3"))
     assert(StarEtl.maskedStatTypes(7) == Seq("Stat1", "Stat2", "Stat3"))
     val out = Files.createTempDirectory("graft_etl_mask").toString
-    val counts = StarEtl.runBatch(spark, sf, out, statsMask = 1)
+    // empty stats tables still report (0) rather than block on the count
+    val counts = failAfter(5.minutes)(StarEtl.runBatch(spark, sf, out, statsMask = 1))
+    assert(readBack(out, counts.keys) == counts)
     assert(counts("stats_mask1") > 0)
     assert(counts("stats_mask2") == 0)
     assert(counts("stats_mask3") == 0)
