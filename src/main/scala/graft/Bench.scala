@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract benchmark: one JSON line with per-query seconds.
   *
   * Timing uses the `noop` sink so every query fully materializes its
@@ -13,16 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // warmup: pay session/codegen startup once, outside the timings
     graft.model.Tables.region(spark, sfDir).count()
@@ -65,14 +54,7 @@ object Bench {
       // a failure must not masquerade as a fast run: -1 is the sentinel
       name -> (if (ts.contains(-1.0)) -1.0 else ts.min)
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    // a failed query poisons the total — it must not make the run
-    // look faster than a clean one
-    val total =
-      if (results.exists(_._2 < 0)) -1.0 else results.map(_._2).sum
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val json = line(results, sfDir)
     println(json)
     // stderr copy with a unique greppable prefix: sbt's stdout gets
     // [info] decoration and interleaved log4j chatter, and the r02
@@ -90,5 +72,18 @@ object Bench {
     // before teardown — the lifecycle a long-lived driver must follow
     graft.util.Staged.clearSession(spark)
     spark.stop()
+  }
+
+  /** Bench's one stdout JSON line: per-query seconds sorted by name,
+    * every value `%.3f`, and their sum as `total`. */
+  def line(results: Seq[(String, Double)], sfDir: String): String = {
+    val sorted = results.sortBy(_._1)
+    val qs = sorted.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+      .mkString("{", ",", "}")
+    // a failed query poisons the total — it must not make the run
+    // look faster than a clean one
+    val total =
+      if (sorted.exists(_._2 < 0)) -1.0 else sorted.map(_._2).sum
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
   }
 }

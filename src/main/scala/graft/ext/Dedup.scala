@@ -615,14 +615,6 @@ object Dedup {
   private[graft] def fuzzyEditOf(docs: DataFrame): DataFrame =
     fuzzyEditFromSig(signaturesOf(docs), docs)
 
-  /** (candidate pairs, verified output) of the fuzzy-edit pipeline
-    * over one shared signature build — the [[graft.tools.ProfileNgram]]
-    * stage handle. */
-  private[graft] def fuzzyEditStagesOf(docs: DataFrame): (DataFrame, DataFrame) = {
-    val sig = signaturesOf(docs)
-    (lshCandidatesOf(sig), fuzzyEditFromSig(sig, docs))
-  }
-
   private def fuzzyEditFromSig(sig: DataFrame, docs: DataFrame): DataFrame = {
     val cand = lshCandidatesOf(sig)
     val t = docs.select(col("doc_id"), col("text"))
@@ -1076,13 +1068,7 @@ object Dedup {
 
   /** [[dedupIncremental]] over an arbitrary (doc_id, text) corpus —
     * the guard-contract test entry point. */
-  private[graft] def dedupIncrementalOf(docs: DataFrame): DataFrame =
-    incrementalStagesOf(docs)._2
-
-  /** (old×new candidate pairs, verified output) of the incremental
-    * dedup pipeline over one shared signature build — the
-    * [[graft.tools.ProfileNgram]] stage handle. */
-  private[graft] def incrementalStagesOf(docs: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def dedupIncrementalOf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val d = docs
       .select(
@@ -1097,14 +1083,10 @@ object Dedup {
         concat(col("text"), lit(" vv9")).as("text"))
     val inc = d.unionAll(newBatch)
       .repartition(spark.sparkContext.defaultParallelism)
-    val sig = signaturesOf(inc)
-    val cand = lshCandidatesOf(sig)
-      .filter(col("id1") < NEW_BATCH_FLOOR && col("id2") >= NEW_BATCH_FLOOR)
-    val out = lshPairsOf(sig)
+    lshPairsOf(signaturesOf(inc))
       .filter(col("id1") < NEW_BATCH_FLOOR && col("id2") >= NEW_BATCH_FLOOR)
       .select(col("id2").as("new_id"), col("id1").as("old_id"), col("jaccard"))
       .orderBy(col("new_id"), col("old_id"))
-    (cand, out)
   }
 
   val dedupIncrementalSql: String =
@@ -1132,9 +1114,10 @@ object Dedup {
     * 33) longs per document through a shuffle that a per-row kernel
     * never needed — measured 1.16→0.45 s (documents) and 2.47→0.25 s
     * (event feed) at sf1, bit-identical on both corpora
-    * (tools/ProfileSimPack). Output is a NARROW MAP: consumers that
-    * read it more than once (or sort it) fence it themselves. Docs
-    * whose token array is empty (null/blank text) are dropped, the
+    * (the ProfileSimPack A/B main, last in commit d665464). Output
+    * is a NARROW MAP: consumers that read it more than once (or sort
+    * it) fence it themselves. Docs whose token array is empty
+    * (null/blank text) are dropped, the
     * explode semantics of the aggregate form. */
   private[graft] def simhashOf(docs: DataFrame): DataFrame =
     simhashOf(docs, Nil)
@@ -1385,15 +1368,7 @@ object Dedup {
     * Recall at the 0.8 threshold: P(candidate) = 1-(1-s²)⁸ ≥ 0.9997
     * for unigram-Jaccard s ≥ 0.8 — and identical in both engines,
     * since the minhash family is the same deterministic arithmetic. */
-  private[graft] def ngramJaccardOf(docs: DataFrame): DataFrame =
-    ngramStagesOf(docs)._2
-
-  /** (candidate pairs, verified output) of the ngram-Jaccard
-    * pipeline over ONE shared signature build — the stage handle
-    * [[graft.tools.ProfileNgram]] uses to measure whether this
-    * family's at-scale growth is candidate-driven (a blocking
-    * problem) or output-driven (true pairs). */
-  private[graft] def ngramStagesOf(docs: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def ngramJaccardOf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     val d = docs
       // verify runs on the 32-bit token hashes, not the token strings:
@@ -1441,7 +1416,7 @@ object Dedup {
     // here: the sf0.1 corpus holds ~148k true near-dup pairs, so
     // candidates are O(100k), each paying the array ops)
     val toks = d.select(col("doc_id"), col("hs"))
-    val out = cand
+    cand
       .join(toks.select(col("doc_id").as("id1"), col("hs").as("ts1")), Seq("id1"))
       .join(toks.select(col("doc_id").as("id2"), col("hs").as("ts2")), Seq("id2"))
       .withColumn("inter", size(array_intersect(col("ts1"), col("ts2"))))
@@ -1456,7 +1431,6 @@ object Dedup {
               (size(col("ts1")) + size(col("ts2")) - col("inter")) * 10000 + 0.5) / 10000)
       .select(col("source"), col("id1"), col("id2"), col("jaccard"))
       .orderBy(col("source"), col("id1"), col("id2"))
-    (cand, out)
   }
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =

@@ -755,7 +755,7 @@ object Graph {
     // AQE, so the per-round joins keep their own Exchange either way,
     // and ReuseExchange already dedupes those identical exchanges
     // within the one unrolled plan. The repartitioned variant shuffled
-    // MORE (2.64M vs 2.36M records at sf1, ShuffleMeter).
+    // MORE (2.64M vs 2.36M records at sf1, tools.Measure).
     val edges = und.select(col("u").as("a"), col("v").as("b"))
       .unionAll(und.select(col("v").as("a"), col("u").as("b")))
       .localCheckpoint(eager = false)
@@ -859,7 +859,7 @@ object Graph {
     val edges = edgesOf(nodes).localCheckpoint(eager = false)
     // NOTE (r11, measured): a src-keyed second checkpoint for the auth
     // half-steps shuffles MORE, not less (1.69M vs 1.49M records at
-    // sf1, ShuffleMeter): the lazy checkpoint reports
+    // sf1, tools.Measure): the lazy checkpoint reports
     // UnknownPartitioning under AQE, so the auth joins keep their
     // Exchange either way and ReuseExchange already shares the
     // repeated src-exchange within the one unrolled plan — the extra

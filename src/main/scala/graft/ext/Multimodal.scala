@@ -205,8 +205,8 @@ object Multimodal {
     * it, `repartition(parallelism)` sizing the decode to the decoder
     * count rather than the data size (`parallelism <= 0`, the
     * default, takes the session's `defaultParallelism` — the repo's
-    * repartition convention — so the kernels saturate local[32] and
-    * any cluster alike). A JPEG/H.264 deployment swaps
+    * repartition convention — so the kernels saturate a local master
+    * and any cluster alike). A JPEG/H.264 deployment swaps
     * the parser body for the codec call; schema, batching and
     * partition layout stay as they are here. */
   def decodeImages(spark: SparkSession, dir: String, parallelism: Int = -1): Dataset[DecodedImage] = {

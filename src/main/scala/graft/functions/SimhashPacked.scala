@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `2·c_j > tc` with tc = token count — the `sims` CTE in every
   * DuckDB oracle twin, and byte-for-byte the streaming
   * [[graft.ext.Dedup.simhash64]] kernel), so no oracle SQL changes.
-  * What it removes per document, measured at sf1 (ProfileSimPack):
+  * What it removes per document, measured at sf1 (the ProfileSimPack
+  * A/B main, last in commit d665464):
   * the Generate (explode), the 33-long-wide hash-aggregate buffer,
   * the doc-keyed exchange that shipped those 33 longs per document,
   * and HALF the md5 work (h1 and h2 come from one digest here, where

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.parse.Style5
@@ -19,12 +18,7 @@ object ScaleTrial {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(50)
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     // Materialize the corpus as text files first (untimed): the real
     // ingest parses a file source, and measuring parseLines over an

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.ext.Dedup
@@ -21,13 +21,7 @@ object ScaleTrial2 {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     def corpus(m: Int): DataFrame = {
       val d = Tables.documents(spark, dir).select("source", "doc_id", "text")

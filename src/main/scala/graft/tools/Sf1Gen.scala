@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize an sf1-scale test directory by replicating
@@ -32,13 +32,8 @@ object Sf1Gen {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val inDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.drop(2).headOption.getOrElse("/tmp/sf1")
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def reps(df: DataFrame): DataFrame =
       df.crossJoin(spark.range(mult).toDF("rep"))
