@@ -673,7 +673,7 @@ object Curation {
     * two map-side-combined aggregates, one 1-row broadcast rewrite.
     * ROUNDS is a fixed constant; a production run raises it and
     * persists the vocab frame between rounds exactly as the
-    * per-round localCheckpoint does here. */
+    * per-round [[graft.util.Fence.lineage]] does here. */
   def bpeLearn(spark: SparkSession, dir: String): DataFrame =
     bpeLearnOf(Tables.documents(spark, dir).select(col("text")))
 
@@ -692,7 +692,7 @@ object Curation {
     var vocab = words
       .select(regexp_replace(col("word"), "(\\S)", "|$1 ").as("enc"),
         col("freq"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val rounds = (1 to BPE_LEARN_ROUNDS).map { r =>
       val syms = filter(split(col("enc"), "\\|"), s => s =!= "")
       // A prior round can collapse a 2-char word to ONE symbol; Spark
@@ -719,7 +719,7 @@ object Curation {
             concat(lit("|"), col("a"), lit("|"), col("b")),
             concat(lit("|"), rtrim(col("a")), col("b"))).as("enc"),
           col("freq"))
-        .localCheckpoint(eager = false)
+        .transform(graft.util.Fence.lineage)
       val toksAfter = vocab.agg(
         sum(col("freq") *
           (length(col("enc")) - length(replace(col("enc"), lit("|")))))

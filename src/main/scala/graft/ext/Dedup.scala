@@ -163,21 +163,13 @@ object Dedup {
     * whole LSH family consumes (pair mining, threshold calibration,
     * split-leakage audit, fuzzy-edit blocking, the signature dump
     * itself). Computed once per (session, corpus) and persisted via
-    * [[graft.util.StagedCache]] — five operators each re-deriving the
+    * [[graft.util.Staged]] — five operators each re-deriving the
     * shingle→hash→K-minima pipeline is exactly the repeated work a
     * production pipeline avoids by writing the signature parquet
     * once. Same immutable-corpus contract and lifecycle as the
-    * keeper table ([[keeperTable]]); [[invalidateStaged]] drops both. */
-  private val sigCache = new graft.util.StagedCache
-
+    * keeper table ([[keeperTable]]). */
   private def signatures(spark: SparkSession, dir: String): DataFrame =
-    sigCache.getOrCompute(spark, dir) {
-      signaturesOf(corpus(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private[graft] def stagedSigKeys: Set[(SparkSession, String)] =
-    sigCache.stagedKeys
+    graft.util.Staged.once(spark, "sigs", dir)(signaturesOf(corpus(spark, dir)))
 
   private val signaturesSql: String = {
     val mins = affine.map { case (a, b) =>
@@ -408,20 +400,18 @@ object Dedup {
     * standard staged-signature LSH over the strictly smaller survivor
     * set — the collapse and signature build are STAGED once per
     * (session, corpus) via [[pipelineSigs]], the same pattern as the
-    * raw corpus's [[sigCache]]; the three 1-row stage counts ride
+    * raw corpus's [[signatures]]; the three 1-row stage counts ride
     * broadcast cross joins and the 2-row report explodes from a
     * single assembled row, so every aggregate runs exactly once. */
   /** Staged SURVIVOR signature table for [[dedupPipeline]] — the
     * md5 collapse + shingle→minhash build runs once per (session,
-    * corpus) exactly like [[sigCache]] does for the raw corpus; a
+    * corpus) exactly like [[signatures]] does for the raw corpus; a
     * production pipeline writes the collapsed corpus and its
     * signature parquet once and every near-dup pass reads them. One
     * row per survivor, so the stage-1 output count reads off this
     * table for free. */
-  private val pipeSigCache = new graft.util.StagedCache
-
   private def pipelineSigs(spark: SparkSession, dir: String): DataFrame =
-    pipeSigCache.getOrCompute(spark, dir) {
+    graft.util.Staged.once(spark, "pipeline-sigs", dir) {
       val survivors = corpus3(spark, dir)
         // key-only digest: the 16-byte binary halves the key bytes vs
         // the 32-char hex render (same groups — unhex is a bijection)
@@ -429,7 +419,6 @@ object Dedup {
         .agg(min(col("doc_id")).as("doc_id"), min(col("text")).as("text"))
         .select(col("doc_id"), col("text"))
       signaturesOf(survivors)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def dedupPipeline(spark: SparkSession, dir: String): DataFrame = {
@@ -696,10 +685,11 @@ object Dedup {
     * iteration count is bounded by the component diameter — O(log N)
     * with path-doubling variants (large-star/small-star) if deep
     * chains ever appear; near-dup graphs in practice are shallow.
-    * Each iteration ends in an EAGER localCheckpoint so the plan does
-    * not grow exponentially; at cluster scale use a reliable
-    * checkpoint dir or a staging write instead (see
-    * [[graft.util.Fence]] for the trade-off).
+    * Each iteration ends in a non-eager [[graft.util.Fence.lineage]]
+    * cut so the plan does not grow exponentially; the round's
+    * convergence `count()` materializes it (see
+    * [[minLabelComponentsWithRounds]], and [[graft.util.Fence]] for
+    * the cluster-scale trade-off).
     *
     * The DuckDB twin computes the same fixpoint with a recursive CTE
     * over the identical edge set, so the grouping itself is
@@ -717,21 +707,13 @@ object Dedup {
     * local checkpoint — and at cluster scale the same role is played
     * by the staging parquet the job would write anyway.
     *
-    * Lifecycle via [[graft.util.StagedCache]]: the corpus at `dir`
-    * must be immutable while staged — rewriting it in-session requires
-    * [[invalidateStaged]] first, and session teardown should call
-    * [[graft.util.Staged.clearSession]] so the persisted blocks are
-    * freed rather than accumulating across corpora. */
-  private val keeperCache = new graft.util.StagedCache
-
-  /** Drop the staged keeper table for `dir` (unpersisting its blocks)
-    * — required before re-running dedup over a rewritten corpus. */
-  def invalidateStaged(spark: SparkSession, dir: String): Unit = {
-    keeperCache.invalidate(spark, dir)
-    pairCache.invalidate(spark, dir)
-    sigCache.invalidate(spark, dir)
-    pipeSigCache.invalidate(spark, dir)
-  }
+    * Lifecycle via [[graft.util.Staged]]: the corpus at `dir` must be
+    * immutable while staged — rewriting it in-session requires
+    * [[graft.util.Staged.invalidate]] first, and session teardown
+    * should call [[graft.util.Staged.clearSession]] so the persisted
+    * blocks are freed rather than accumulating across corpora. */
+  private def keeperTable(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Staged.once(spark, "keeper", dir)(keeperAssignment(spark, dir))
 
   /** Staged VERIFIED near-dup pair list over [[corpus2]] — the edge
     * set [[keeperAssignment]] propagates AND the pair generator
@@ -739,22 +721,9 @@ object Dedup {
     * keeper table so the certificate reads the pairs the keeper table
     * was actually built from instead of re-running the dominant LSH
     * cost a second time per query. */
-  private val pairCache = new graft.util.StagedCache
-
   private def verifiedPairs2(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrCompute(spark, dir) {
-      lshPairsOf(signaturesOf(corpus2(spark, dir)))
-        .select(col("id1"), col("id2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private[graft] def stagedKeeperKeys: Set[(SparkSession, String)] =
-    keeperCache.stagedKeys
-
-  private def keeperTable(spark: SparkSession, dir: String): DataFrame =
-    keeperCache.getOrCompute(spark, dir) {
-      keeperAssignment(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.util.Staged.once(spark, "pairs", dir) {
+      lshPairsOf(signaturesOf(corpus2(spark, dir))).select(col("id1"), col("id2"))
     }
 
   private def keeperAssignment(spark: SparkSession, dir: String): DataFrame = {
@@ -822,7 +791,7 @@ object Dedup {
     var labels = edges.groupBy(col("id1").as("id"))
       .agg(min(col("id2")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("label"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     var converged = false
     var iter = 0
     while (!converged && iter < 20) {
@@ -845,7 +814,7 @@ object Dedup {
           least(next("label"), coalesce(col("jlabel"), next("label")))
             .as("label"),
           col("prev"))
-        .localCheckpoint(eager = false)
+        .transform(graft.util.Fence.lineage)
       // min-label is monotone non-increasing: any strict decrease
       // means another round is needed. count() (not isEmpty) both
       // answers that and fully materializes the non-eager checkpoint

@@ -61,7 +61,7 @@ object Graph {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val edgesD = edges.join(deg, Seq("src"))
       .select(col("src"), col("dst"), col("deg"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     // Loop state is the SPARSE per-node in-sum (only nodes that
     // receive mass): rank(v) = 150000 + idiv(85·coalesce(inc, 0),
     // 100) everywhere, so the dense rank frame never materializes
@@ -85,8 +85,8 @@ object Graph {
     // only the two frames with a second consumer (round K's input and
     // the convergence certificate below) are fenced.
     for (_ <- 2 to K - 1) inc = step(inc)
-    val prevInc = inc.localCheckpoint(eager = false)
-    inc = step(prevInc).localCheckpoint(eager = false)
+    val prevInc = inc.transform(graft.util.Fence.lineage)
+    inc = step(prevInc).transform(graft.util.Fence.lineage)
     // convergence certificate: the final round's max |Δrank| in
     // micro-units — K is a fixed constant, so every result carries
     // the evidence that K rounds sufficed on THIS graph (a judge/user
@@ -166,7 +166,7 @@ object Graph {
   def degreeDistribution(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val edges = edgesOf(nodes).localCheckpoint(eager = false)
+    val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     def hist(keyed: DataFrame, out: String): DataFrame =
       nodes.join(keyed, Seq("id"), "left")
         .select(coalesce(col("d"), lit(0L)).as("degree"))
@@ -229,7 +229,7 @@ object Graph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val wedges = deg.agg(
@@ -392,7 +392,7 @@ object Graph {
     import graft.util.Hashing
     val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val edges = edgesOf(nodes).localCheckpoint(eager = false)
+    val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     def step(df: DataFrame, t: Int, curCol: String, outCol: String): DataFrame = {
       val pick = edges
         .select(col("src"), struct(
@@ -459,10 +459,10 @@ object Graph {
     * Scale shape per round: degree is a node-keyed partial-sum
     * groupBy over the SYMMETRIZED id-only edge frame; survivors
     * filter edges via two left_semi equi-joins (never a collect of
-    * the keep-set); each round's frame is fenced with a non-eager
-    * localCheckpoint (the [[pagerankOf]] convention) because the
-    * next round AND the round's stats row both consume it. Rounds
-    * are a fixed constant, oracle = unrolled CTE chain. */
+    * the keep-set); each round's frame is fenced with
+    * [[graft.util.Fence.lineage]] (the [[pagerankOf]] convention)
+    * because the next round AND the round's stats row both consume
+    * it. Rounds are a fixed constant, oracle = unrolled CTE chain. */
   def kCore(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       .repartition(spark.sparkContext.defaultParallelism)
@@ -474,7 +474,7 @@ object Graph {
     var sym = und
       .unionByName(und.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     // the per-round degree frame serves BOTH the next peel's keep-set
     // and this round's census: n_nodes is its row count (distinct src
     // of the symmetric frame) and n_edges is sum(deg) div 2 — the
@@ -488,7 +488,7 @@ object Graph {
         .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(eager = false)
+        .transform(graft.util.Fence.lineage)
       deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       deg.agg(
         lit(r.toLong).as("round"),
@@ -563,11 +563,11 @@ object Graph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val sym = und
       .unionByName(und.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val wedges = sym.select(col("src").as("w"), col("dst").as("cu"))
       .join(sym.select(col("src").as("w"), col("dst").as("cv")), Seq("w"))
@@ -651,12 +651,12 @@ object Graph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val lab = docs.select(col("id"), col("source"))
     val labeled = und
       .join(lab.select(col("id").as("u"), col("source").as("su")), Seq("u"))
       .join(lab.select(col("id").as("v"), col("source").as("sv")), Seq("v"))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     val m = labeled.agg(count(lit(1)).cast("long").as("m"))
     val degMass = labeled
       .select(explode(array(col("su"), col("sv"))).as("source"))
@@ -758,7 +758,7 @@ object Graph {
     // MORE (2.64M vs 2.36M records at sf1, tools.Measure).
     val edges = und.select(col("u").as("a"), col("v").as("b"))
       .unionAll(und.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(eager = false)
+      .transform(graft.util.Fence.lineage)
     // The loop state covers only EDGE-TOUCHED nodes: the symmetric
     // edge set puts every touched node on the `b` side, so each
     // round's plurality pick is total over that domain and the old
@@ -777,8 +777,8 @@ object Graph {
     var labels = edges.select(col("a").as("id"))
       .distinct().withColumn("label", col("id"))
     for (_ <- 1 to LPA_ROUNDS - 1) labels = pickOf(labels)
-    val prev = labels.localCheckpoint(eager = false)
-    labels = pickOf(prev).localCheckpoint(eager = false)
+    val prev = labels.transform(graft.util.Fence.lineage)
+    labels = pickOf(prev).transform(graft.util.Fence.lineage)
     val moves = labels
       .join(prev.withColumnRenamed("label", "prev_label"), Seq("id"))
       .agg(count(when(col("label") =!= col("prev_label"), 1))
@@ -856,7 +856,7 @@ object Graph {
   def hitsScores(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val edges = edgesOf(nodes).localCheckpoint(eager = false)
+    val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     // NOTE (r11, measured): a src-keyed second checkpoint for the auth
     // half-steps shuffles MORE, not less (1.69M vs 1.49M records at
     // sf1, tools.Measure): the lazy checkpoint reports
@@ -874,7 +874,7 @@ object Graph {
       // `raw` (the expensive edges-join + groupBy) is referenced
       // TWICE — by the max knob and by the normalize projection — so
       // it is the frame to fence.
-      val rawCp = raw.localCheckpoint(eager = false)
+      val rawCp = raw.transform(graft.util.Fence.lineage)
       val mx = rawCp.agg(greatest(max(col("raw")), lit(1L)).as("mx"))
       rawCp.crossJoin(broadcast(mx))
         .select(col("dst").as("id"),

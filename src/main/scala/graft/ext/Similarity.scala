@@ -373,23 +373,12 @@ object Similarity {
     * production deployment writes ONCE (train centroids, assign every
     * vector to its NPROBE nearest cells, persist) and every query
     * then reads: `(vec_id, cluster, rk)` per (session, corpus),
-    * MEMORY_AND_DISK like [[Dedup]]'s staged keeper table. Both
-    * (same immutable-corpus-per-session contract as Dedup's staged
-    * keeper table.)
+    * staged through [[graft.util.Staged]] like [[Dedup]]'s keeper
+    * table, with the same immutable-corpus-per-session contract. Both
     * [[knnIvfKmeans]] and [[annRecall]] consume it, so the train +
     * assign pipeline runs once per corpus, not once per query. */
-  private val ivfIndexCache = new graft.util.StagedCache
-
-  /** Drop the staged IVF assignment for `dir` (unpersisting its
-    * blocks) — required before re-indexing a rewritten corpus. */
-  def invalidateStaged(spark: SparkSession, dir: String): Unit =
-    ivfIndexCache.invalidate(spark, dir)
-
-  private[graft] def stagedIvfKeys: Set[(SparkSession, String)] =
-    ivfIndexCache.stagedKeys
-
   private def kmeansIvfAssignment(spark: SparkSession, dir: String): DataFrame =
-    ivfIndexCache.getOrCompute(spark, dir) {
+    graft.util.Staged.once(spark, "ivf", dir) {
       val e = Cluster.quantized(spark, dir)
       // trained centroids to the driver (K is a bounded training
       // constant) + fused per-row nearest-NPROBE assignment
@@ -403,7 +392,6 @@ object Similarity {
             col("qv"), centRows, Cluster.SCALE, NPROBE)))
         .select(col("vec_id"), col("col").as("cluster"),
           (col("pos") + 1).cast("int").as("rk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   val knnIvfKmeansSql: String =

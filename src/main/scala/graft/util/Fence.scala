@@ -15,26 +15,22 @@ import org.apache.spark.sql.DataFrame
   *
   * 100 TB contract: in production these operators read lines from a
   * FILE SOURCE (the `ScaleTrial` shape — `spark.read.text` /
-  * `readStream.text`), where the scan itself is the barrier, the
-  * filter on a parsed column cannot be pushed into the render (there
-  * is none), and the fence is unnecessary. Moreover local checkpoints
-  * are NON-RELIABLE: losing an executor loses its checkpointed blocks
-  * with no recompute path, which is unacceptable on a real cluster.
-  * Set `spark.graft.lineageFence=false` there (or simply feed the
-  * operators from files) — the fence is a test-corpus device, not a
-  * scale device. Production alternatives when an expensive
-  * multi-referenced intermediate DOES need a barrier at scale: write
-  * it to a staging parquet, or `persist(StorageLevel.DISK_ONLY)`
-  * (both recomputable / re-readable on loss).
+  * `readStream.text`), where the scan itself is the barrier and a
+  * filter on a parsed column has no render to be pushed into. Local
+  * checkpoints are NON-RELIABLE: losing an executor loses its
+  * checkpointed blocks with no recompute path. This object and
+  * [[Staged.once]] are the only places that choose how an
+  * intermediate is materialized, so the reliable-storage swap
+  * (`persist(StorageLevel.DISK_ONLY)`, or a staging parquet write)
+  * is a one-line change in [[lineage]] and every fenced frame
+  * follows it.
   */
 object Fence {
 
-  /** Non-eager lineage fence, gated by `spark.graft.lineageFence`
-    * (default true — the local test shape). */
-  def lineage(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.lineageFence", "true").toBoolean)
-      df.localCheckpoint(eager = false)
-    else df
+  /** Non-eager lineage fence: the plan above it reads the
+    * checkpointed RDD (`Scan ExistingRDD`), and the first action that
+    * consumes it materializes the blocks. */
+  def lineage(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** ZERO-COST optimizer barrier ([[graft.plans.OptimizationFence]])
     * — the scale-correct fence for SINGLE-consumer pipelines: blocks

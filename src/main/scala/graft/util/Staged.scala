@@ -1,86 +1,69 @@
 package graft.util
 
-import java.util.concurrent.ConcurrentHashMap
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memoizer for STAGED tables — expensive pipeline
-  * outputs (keeper assignments, ANN index assignments) computed once
-  * per (session, corpus dir) and persisted for every downstream
-  * consumer. Locally the stage is a MEMORY_AND_DISK persist; at
-  * cluster scale the same role is played by the staging parquet the
-  * job would write anyway.
+/** Session-scoped memo for STAGED tables — expensive pipeline outputs
+  * (keeper assignments, verified pair lists, signature tables, ANN
+  * index assignments) computed once per (session, stage, corpus dir)
+  * and persisted for every downstream consumer. Locally the stage is
+  * a MEMORY_AND_DISK persist — recomputable on block loss, unlike a
+  * local checkpoint; at cluster scale the same role is played by the
+  * staging parquet the job would write anyway, and that swap is one
+  * line in [[once]].
   *
   * Contract: the corpus at `dir` is IMMUTABLE for the lifetime of the
-  * entry. A caller that rewrites data at a cached path must call
-  * [[StagedCache.invalidate]] (or [[Staged.invalidateAll]]) first —
-  * the cache cannot see the filesystem change, and a stale persisted
-  * frame would silently serve the old corpus's assignments.
+  * entry. A caller that rewrites data at a staged path must call
+  * [[invalidate]] first — the memo cannot see the filesystem change,
+  * and a stale persisted frame would silently serve the old corpus.
   *
-  * Lifecycle: every cache self-registers with [[Staged]] so
-  * [[Staged.clearSession]] can unpersist and drop every staged frame
-  * of a finished session in one call — a long-lived driver iterating
+  * Lifecycle: [[clearSession]] unpersists and drops every staged frame
+  * of a finished session in one call, so a long-lived driver iterating
   * many corpora (or many short-lived sessions) does not accumulate
-  * persisted blocks. Eviction always unpersists (non-blocking), so
-  * dropping an entry frees its storage rather than orphaning it.
-  */
-final class StagedCache {
-  private val cache =
-    new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  Staged.register(this)
-
-  /** Memoized build: runs `build` once per (session, dir) and persists
-    * nothing itself — the builder decides the storage level. */
-  def getOrCompute(spark: SparkSession, dir: String)
-                  (build: => DataFrame): DataFrame =
-    cache.computeIfAbsent((spark, dir), _ => build)
-
-  /** Drop (and unpersist) the staged frame for one corpus — REQUIRED
-    * before re-reading a path whose data was rewritten in-session. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    Option(cache.remove((spark, dir)))
-      .foreach(_.unpersist(blocking = false))
-
-  /** Drop (and unpersist) every staged frame of one session. */
-  def clearSession(spark: SparkSession): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        e.getValue.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
-
-  /** Keys currently staged (test/introspection surface). */
-  def stagedKeys: Set[(SparkSession, String)] = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.toSet
-  }
-}
-
-/** Registry over every [[StagedCache]] in the library, so corpus
-  * invalidation and session teardown reach all staged tables without
-  * the caller knowing which modules stage what. */
+  * persisted blocks. Eviction always unpersists (non-blocking).
+  *
+  * Nested builds: a build may read another stage (the keeper table's
+  * build reads the staged pair list), so `once` runs `build` under
+  * this object's reentrant monitor rather than inside a map update.
+  * Every build runs exactly once per key; concurrent builds from
+  * different threads are serialized. */
 object Staged {
-  private val caches =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[StagedCache]())
+  private val memo = mutable.HashMap.empty[(SparkSession, String, String), DataFrame]
 
-  private[util] def register(c: StagedCache): Unit = caches.add(c)
-
-  private def all: Seq[StagedCache] = {
-    import scala.jdk.CollectionConverters._
-    caches.synchronized(caches.asScala.toList)
+  /** The persisted output of `build` for (`stage`, `dir`) in this
+    * session, built on first use. `stage` names the table kind and
+    * must be unique across the library. */
+  def once(spark: SparkSession, stage: String, dir: String)
+          (build: => DataFrame): DataFrame = synchronized {
+    val key = (spark, stage, dir)
+    memo.getOrElse(key, {
+      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+      memo(key) = df
+      df
+    })
   }
 
-  /** Invalidate one corpus dir across every staged table. */
-  def invalidateAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(_.invalidate(spark, dir))
+  /** Drop (and unpersist) every stage of one corpus — REQUIRED before
+    * re-reading a path whose data was rewritten in-session. */
+  def invalidate(spark: SparkSession, dir: String): Unit =
+    evict { case (s, _, d) => (s eq spark) && d == dir }
 
   /** Unpersist and drop every staged frame of a session — call before
     * `spark.stop()` in a long-lived driver. */
   def clearSession(spark: SparkSession): Unit =
-    all.foreach(_.clearSession(spark))
+    evict { case (s, _, _) => s eq spark }
+
+  /** `(stage, dir)` of every frame staged for `spark`. */
+  private[graft] def keys(spark: SparkSession): Set[(String, String)] =
+    synchronized {
+      memo.keysIterator.collect { case (s, st, d) if s eq spark => (st, d) }.toSet
+    }
+
+  private def evict(hit: ((SparkSession, String, String)) => Boolean): Unit =
+    synchronized {
+      memo.keys.filter(hit).toList
+        .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = false)))
+    }
 }
