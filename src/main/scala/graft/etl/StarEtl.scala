@@ -24,34 +24,15 @@ import graft.parse.Style5
 object StarEtl {
 
   /** One wide parsed frame from rendered style-5 lines: every column
-    * every satellite needs, computed in a single pass. */
-  def wideParsed(spark: SparkSession, dir: String): DataFrame = {
-    val l = Style5.renderedLines(spark, dir)
-      .withColumn("m", Style5.dropHead(Style5.spaceMatches(col("line"))))
-      .withColumn("cinfo", element_at(Style5.brackets(col("line")), 2))
-    l.select(
-      col("event_id").as("line_id"),
-      col("line"),
-      Style5.clientIp(col("line")).as("client_ip_address"),
-      Style5.logTimestamp(col("line")).as("datetime"),
-      Style5.gmtOffset(col("line")).as("gmt_offset"),
-      Style5.reqMethod(col("line")).as("method"),
-      Style5.filePath(Style5.reqFile(col("line"))).as("path"),
-      Style5.fileName(Style5.reqFile(col("line"))).as("name"),
-      Style5.reqProto(col("line")).as("protocol_version"),
-      element_at(col("m"), 1).cast("long").as("status_code"),
-      element_at(col("m"), 2).cast("long").as("bytes_sent"),
-      element_at(col("m"), -6).cast("long").as("file_size"),
-      element_at(col("m"), -5).cast("long").as("file_time"),
-      element_at(col("m"), -4).cast("long").as("sent_time"),
-      element_at(col("m"), -3).cast("long").as("resends"),
-      element_at(col("m"), -2).cast("long").as("failed_resends"),
-      element_at(col("m"), -1).cast("long").as("presentation_id"),
-      col("cinfo").as("client_info"),
-      element_at(Style5.brackets(col("line")), 3).as("client_guid"),
-      slice(Style5.brackets(col("line")), lit(4),
-        greatest(size(Style5.brackets(col("line"))) - 3, lit(0))).as("stat_blocks"))
-  }
+    * every satellite needs, computed in a single pass
+    * ([[graft.parse.Style5.parsed]]). */
+  def wideParsed(spark: SparkSession, dir: String): DataFrame =
+    Style5.parsed(Style5.renderedLines(spark, dir)).select(
+      col("event_id").as("line_id"), col("line"), col("client_ip_address"),
+      col("datetime"), col("gmt_offset"), col("method"), col("path"), col("name"),
+      col("protocol_version"), col("status_code"), col("bytes_sent"), col("file_size"),
+      col("file_time"), col("sent_time"), col("resends"), col("failed_resends"),
+      col("presentation_id"), col("client_info"), col("client_guid"), col("stat_blocks"))
 
   /** StatsMask semantics (`real_parse.pl:218-235`): `StatsMask="1-7"`
     * in rmserver.cfg is a 3-bit mask of which stat block types the
@@ -95,10 +76,7 @@ object StarEtl {
         lit(null).cast("long").as("packets_sent"),
         lit(null).cast("long").as("average_bitrate"))
       val enabled = maskedStatTypes(statsMask)
-      val stats = Style5.statFields(
-        wide.select(col("line_id").as("event_id"),
-            explode_outer(col("stat_blocks")).as("stat"))
-          .filter(col("stat").isNotNull))
+      val stats = Style5.statRows(wide, col("line_id").as("event_id"))
         .filter(col("stat_type").isin(enabled: _*))
       // per-table projections at the reference's full INSERT arity;
       // stats_mask2's `late` is `s2_late` in the unified frame (name

@@ -40,21 +40,13 @@ object Cluster {
   private val DIM = 64
   private[ext] val SCALE = 1000L   // centroid micro-units per vector milli-unit
 
-  /** float vector → exact integer milli-quantized vector (same
-    * construction as [[Similarity]]). */
-  private def quant(v: org.apache.spark.sql.Column) =
-    transform(v, x => floor(x.cast("double") * 1000 + 0.5).cast("long"))
-
-  private val quantSql: String =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-
   /** The milli-quantized embeddings frame — referenced by the seed
     * pick and every assignment pass, so the quantization is fenced
     * once. Shared with [[Similarity.knnIvfKmeans]]. */
   private[ext] def quantized(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("vec_id"), quant(col("embedding")).as("qv"))
+      .select(col("vec_id"), Similarity.quant(col("embedding")).as("qv"))
       .transform(graft.util.Fence.lineage)
 
   /** Nearest centroid per vector: K exact integer distances, argmin
@@ -131,7 +123,7 @@ object Cluster {
     * and the IVF-composition oracle so both engines index against the
     * byte-identical centroid table. */
   private[ext] val trainCtesSql: String =
-    s"""e AS (SELECT vec_id, $quantSql AS qv FROM embeddings),
+    s"""e AS (SELECT vec_id, ${Similarity.quantSql} AS qv FROM embeddings),
        seeds AS (
          SELECT vec_id AS cluster, list_transform(qv, x -> x * $SCALE) AS cent
          FROM e WHERE vec_id < $K),
@@ -174,7 +166,7 @@ object Cluster {
   def embeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("vec_id"), col("label"), quant(col("embedding")).as("qv"))
+      .select(col("vec_id"), col("label"), Similarity.quant(col("embedding")).as("qv"))
       .transform(graft.util.Fence.lineage)
     val sums = e.select(col("label"), posexplode_outer(col("qv")).as(Seq("pos", "v")))
       .filter(col("pos").isNotNull)
@@ -198,7 +190,7 @@ object Cluster {
   }
 
   val embeddingOutliersSql: String =
-    s"""WITH e AS (SELECT vec_id, label, $quantSql AS qv FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, label, ${Similarity.quantSql} AS qv FROM embeddings),
        dims AS (
          SELECT label, unnest(generate_series(1, $DIM)) AS pos, unnest(qv) AS v
          FROM e),
@@ -250,7 +242,7 @@ object Cluster {
   def embeddingPca(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("vec_id"), quant(col("embedding")).as("q0"))
+      .select(col("vec_id"), Similarity.quant(col("embedding")).as("q0"))
       .select(col("vec_id"),
         when(array_max(transform(col("q0"), x => abs(x))) <= PCA_QCAP, col("q0"))
           .otherwise(raise_error(lit(
@@ -320,7 +312,7 @@ object Cluster {
                 THEN q0
                 ELSE error('embedding_pca: |q| exceeds $PCA_QCAP milli')
            END AS q
-         FROM (SELECT vec_id, $quantSql AS q0 FROM embeddings)),
+         FROM (SELECT vec_id, ${Similarity.quantSql} AS q0 FROM embeddings)),
        dims AS (SELECT unnest(generate_series(1, $DIM)) AS i),
        v0 AS (SELECT list_transform(generate_series(1, $DIM), i -> 1000) AS v),
        $iters

@@ -184,8 +184,24 @@ object Style5 {
     * a bracket holding a style-5 timestamp. Kept in sync with
     * [[logTimestamp]]'s pattern — a line passing a gate built on
     * this cannot throw in to_timestamp under ANSI mode. */
-  val timestampShapeRe: String =
+  private[parse] val timestampShapeRe: String =
     "^\\S+ \\S+ \\S+ \\[\\d\\d/\\w\\w\\w/\\d{4}:\\d\\d:\\d\\d:\\d\\d [^\\]]*\\] "
+
+  /** The full style-5 shape: [[timestampShapeRe]], then the quoted
+    * request, status, bytes and a numeric tail. */
+  private val lineShapeRe: String = timestampShapeRe + "\"[^\"]*\" \\d+ \\d+ .*\\d$"
+
+  /** The one style-5 gate. Malformed lines (truncated partial writes,
+    * foreign formats, blank lines) fail it: under Spark 4's default
+    * ANSI mode an element_at on a short token array, or a to_timestamp
+    * of a foreign date, would otherwise throw and fail the whole job —
+    * in a stream, a restart loop replaying the same poison file
+    * forever. A line passing it binds every [[parsed]] field without
+    * throwing: the bracket holds a parseable timestamp (a bare `[^]]*`
+    * would admit foreign date formats) and there are at least the
+    * eight numeric tokens the positional binding reads. */
+  def wellFormed(line: Column): Column =
+    line.rlike(lineShapeRe) && size(spaceMatches(line)) >= 8
 
   /** P1 — leading token (`real_parse.pl:65-66`). */
   def clientIp(line: Column): Column = regexp_extract(line, "^(\\S*)", 1)
@@ -238,20 +254,68 @@ object Style5 {
   val renderSql: String =
     s"WITH $renderCtes SELECT event_id, line FROM lines ORDER BY event_id"
 
+  /** The one style-5 line → row binding. `lines` is any frame with a
+    * `line` column (and none named `m`, `b` or `cinfo`, the scratch
+    * columns dropped on the way out); every named field is appended:
+    * the access hub (P1, P8), the request line and path/name split
+    * (P9, P10), the variable-arity positional numeric binding
+    * (P3/P4/P6 — status and bytes from the front, the last six from
+    * the end, whatever stats digits landed in the middle absorbed),
+    * the client-info and guid brackets and the stat blocks (P7). It
+    * does not gate: apply [[wellFormed]] first where input may be
+    * malformed.
+    *
+    * Consumers select what they need and column pruning drops the
+    * rest, so each projection plans exactly like a hand-bound one.
+    * The token array `m` and the bracket list `b` sit in their own
+    * projections: each is referenced several times above, so
+    * CollapseProject leaves them bound and the regex runs once per
+    * line, not once per field. The client-info bracket `cinfo` is
+    * bound there too, so the star projections read it as an
+    * attribute. */
+  def parsed(lines: DataFrame): DataFrame = {
+    val line = col("line")
+    val (m, b) = (col("m"), col("b"))
+    lines
+      .withColumn("m", dropHead(spaceMatches(line)))
+      .withColumn("b", brackets(line))
+      .withColumn("cinfo", element_at(b, 2))
+      .select(col("*"),
+        clientIp(line).as("client_ip_address"),
+        logTimestamp(line).as("datetime"),
+        unix_timestamp(logTimestamp(line)).as("epoch"),
+        gmtOffset(line).as("gmt_offset"),
+        reqMethod(line).as("method"),
+        filePath(reqFile(line)).as("path"),
+        fileName(reqFile(line)).as("name"),
+        reqProto(line).as("protocol_version"),
+        element_at(m, 1).cast("long").as("status_code"),
+        element_at(m, 2).cast("long").as("bytes_sent"),
+        element_at(m, -6).cast("long").as("file_size"),
+        element_at(m, -5).cast("long").as("file_time"),
+        element_at(m, -4).cast("long").as("sent_time"),
+        element_at(m, -3).cast("long").as("resends"),
+        element_at(m, -2).cast("long").as("failed_resends"),
+        element_at(m, -1).cast("long").as("presentation_id"),
+        col("cinfo").as("client_info"),
+        element_at(b, 3).as("client_guid"),
+        slice(b, lit(4), greatest(size(b) - 3, lit(0))).as("stat_blocks"))
+      .drop("m", "b", "cinfo")
+  }
+
   /** Reject-lane ETL quality gate: corrupt a deterministic slice of
     * the rendered lines (event_id%13==7 truncated mid-record, the way
     * a crashed logger leaves partial writes), classify every line
-    * against the full style-5 shape, and count accepted vs rejected
-    * per status class. Real 100 TB ingest always needs this lane —
-    * bad rows quarantine instead of poisoning the load (the reference
-    * would die or silently mis-parse). */
+    * with the production gate [[wellFormed]], and count accepted vs
+    * rejected. Real 100 TB ingest always needs this lane — bad rows
+    * quarantine instead of poisoning the load (the reference would
+    * die or silently mis-parse). */
   def parseRejects(spark: SparkSession, dir: String): DataFrame = {
-    val shape = "^\\S+ \\S+ \\S+ \\[[^\\]]*\\] \"[^\"]*\" \\d+ \\d+ .*\\d$"
     val l = renderedLines(spark, dir)
       .withColumn("corrupt_key", col("event_id") % 13)
       .withColumn("line2",
         when(col("corrupt_key") === 7, substring(col("line"), 1, 40)).otherwise(col("line")))
-      .withColumn("ok", col("line2").rlike(shape))
+      .withColumn("ok", wellFormed(col("line2")))
     l.groupBy(col("ok"))
       .agg(count(lit(1)).as("n"),
            min(col("event_id")).as("first_event"))
@@ -264,24 +328,19 @@ object Style5 {
          SELECT event_id,
            CASE WHEN event_id % 13 = 7 THEN substr(line, 1, 40) ELSE line END AS line2
          FROM lines)
-       SELECT regexp_matches(line2, '^\\S+ \\S+ \\S+ \\[[^\\]]*\\] "[^"]*" \\d+ \\d+ .*\\d$$') AS ok,
+       SELECT regexp_matches(line2, '$lineShapeRe')
+           AND len(regexp_extract_all(line2, '\\s(\\d+)', 1)) >= 8 AS ok,
          CAST(count(*) AS BIGINT) AS n,
          min(event_id) AS first_event
        FROM c GROUP BY 1 ORDER BY ok"""
 
   /** The `access` hub projection (S7; `real_parse.pl:96-106`). */
-  def parseAccess(spark: SparkSession, dir: String): DataFrame = {
-    val l = renderedLines(spark, dir)
-    l.select(
-      col("event_id"),
-      clientIp(col("line")).as("client_ip_address"),
-      lit("-").as("identuser"),
-      lit("-").as("authuser"),
-      logTimestamp(col("line")).as("datetime"),
-      gmtOffset(col("line")).as("gmt_offset"),
-      unix_timestamp(logTimestamp(col("line"))).as("epoch"))
+  def parseAccess(spark: SparkSession, dir: String): DataFrame =
+    parsed(renderedLines(spark, dir))
+      .select(col("event_id"), col("client_ip_address"),
+        lit("-").as("identuser"), lit("-").as("authuser"),
+        col("datetime"), col("gmt_offset"), col("epoch"))
       .orderBy("event_id")
-  }
 
   val parseAccessSql: String =
     s"""WITH $renderCtes
@@ -294,30 +353,13 @@ object Style5 {
          CAST(epoch(strptime(regexp_extract(line, '\\[(\\d\\d/\\w\\w\\w/\\d{4}:\\d\\d:\\d\\d:\\d\\d)', 1), '%d/%b/%Y:%H:%M:%S')) AS BIGINT) AS epoch
        FROM lines ORDER BY event_id"""
 
-  /** The `file` satellite projection (S8; `real_parse.pl:117-155`):
-    * request-line parse (P9), path/name split (P10), and the
-    * variable-arity positional numeric binding (P3/P4/P6) — status
-    * and bytes from the front, the last six fields from the end,
-    * whatever stats digits landed in the middle absorbed. */
-  def parseFile(spark: SparkSession, dir: String): DataFrame = {
-    val l = renderedLines(spark, dir)
-      .withColumn("m", dropHead(spaceMatches(col("line"))))
-    l.select(
-      col("event_id"),
-      reqMethod(col("line")).as("method"),
-      filePath(reqFile(col("line"))).as("path"),
-      fileName(reqFile(col("line"))).as("name"),
-      reqProto(col("line")).as("protocol_version"),
-      element_at(col("m"), 1).cast("long").as("status_code"),
-      element_at(col("m"), 2).cast("long").as("bytes_sent"),
-      element_at(col("m"), -6).cast("long").as("file_size"),
-      element_at(col("m"), -5).cast("long").as("file_time"),
-      element_at(col("m"), -4).cast("long").as("sent_time"),
-      element_at(col("m"), -3).cast("long").as("resends"),
-      element_at(col("m"), -2).cast("long").as("failed_resends"),
-      element_at(col("m"), -1).cast("long").as("presentation_id"))
+  /** The `file` satellite projection (S8; `real_parse.pl:117-155`). */
+  def parseFile(spark: SparkSession, dir: String): DataFrame =
+    parsed(renderedLines(spark, dir))
+      .select("event_id", "method", "path", "name", "protocol_version",
+        "status_code", "bytes_sent", "file_size", "file_time", "sent_time",
+        "resends", "failed_resends", "presentation_id")
       .orderBy("event_id")
-  }
 
   /** Shared DuckDB parse CTEs over `lines`: request-line fields,
     * numeric tokens with the P4 head-drop, brackets, path/name.
@@ -378,12 +420,10 @@ object Style5 {
       part(8).as("embedded"))
   }
 
-  def parseClient(spark: SparkSession, dir: String): DataFrame = {
-    val l = renderedLines(spark, dir)
-      .withColumn("cinfo", element_at(brackets(col("line")), 2))
-    l.select(col("event_id") +: clientFieldCols(col("cinfo")): _*)
+  def parseClient(spark: SparkSession, dir: String): DataFrame =
+    parsed(renderedLines(spark, dir))
+      .select(col("event_id") +: clientFieldCols(col("client_info")): _*)
       .orderBy("event_id")
-  }
 
   val parseClientSql: String =
     s"""WITH $renderCtes,
@@ -460,20 +500,21 @@ object Style5 {
     * field parses and the `""` → UNKNOWN audio_format default.
     * Events with no stat blocks disappear (explode drops empty
     * arrays), matching the reference's 0..n insert loop. */
-  def parseStats(spark: SparkSession, dir: String): DataFrame = {
-    // explode_outer, NOT explode: for plain explode the optimizer's
-    // InferFiltersFromGenerate injects `size(stats) > 0` below the
-    // projections, re-evaluating the whole render+regex chain twice
-    // per row in a pre-projection Filter. explode_outer gets no
-    // inferred filter; the null rows from empty arrays are dropped by
-    // a cheap post-filter on the generator output instead.
-    val l = renderedLines(spark, dir)
-      .withColumn("b", brackets(col("line")))
-      .withColumn("stats", slice(col("b"), lit(4), greatest(size(col("b")) - 3, lit(0))))
-      .select(col("event_id"), explode_outer(col("stats")).as("stat"))
-      .filter(col("stat").isNotNull)
-    statFields(l).orderBy("event_id", "stat_type")
-  }
+  def parseStats(spark: SparkSession, dir: String): DataFrame =
+    statRows(parsed(renderedLines(spark, dir)), col("event_id"))
+      .orderBy("event_id", "stat_type")
+
+  /** One row per stat block of a [[parsed]] frame, keyed `event_id`
+    * by `id`, through [[statFields]] (shared by the contract query and
+    * the star ETL). explode_outer, NOT explode: for plain explode the
+    * optimizer's InferFiltersFromGenerate injects `size(stat_blocks) > 0`
+    * below the projections, re-evaluating the whole render+regex chain
+    * twice per row in a pre-projection Filter. explode_outer gets no
+    * inferred filter; the null rows from empty arrays are dropped by a
+    * cheap post-filter on the generator output instead. */
+  def statRows(lines: DataFrame, id: Column): DataFrame =
+    statFields(lines.select(id, explode_outer(col("stat_blocks")).as("stat"))
+      .filter(col("stat").isNotNull))
 
   /** P13-P17 field extraction over an exploded (event_id, stat)
     * frame (shared by the contract query and the star ETL), at the

@@ -69,15 +69,11 @@ object WebLog {
 
   /** `web_parse.pl:106-107` request regex: request-line + status +
     * bytes + the quoted user-agent tail. */
-  private[graft] val webRe = "\"(\\S+) (.*?) (\\S+)\" (\\d\\d\\d) (\\d+) \"-\" \"(.*?)\""
+  private val webRe = "\"(\\S+) (.*?) (\\S+)\" (\\d\\d\\d) (\\d+) \"-\" \"(.*?)\""
 
-  /** F2 filter + combined-format parse → the web rows' access/file
-    * projection (server_type=1, logging_style NULL —
-    * the web/Real discriminator F8, `web_parse.pl:42,87-95`). */
-  /** The combined-format field projection shared by the batch query
-    * and the streaming parser — one definition, so the batch and
-    * streaming web schemas cannot diverge. */
-  def webFieldCols(line: Column): Seq[Column] = Seq(
+  /** The combined-format field projection (server_type=1, the
+    * web/Real discriminator F8, `web_parse.pl:42,87-95`). */
+  private def webFieldCols(line: Column): Seq[Column] = Seq(
     Style5.clientIp(line).as("client_ip_address"),
     Style5.logTimestamp(line).as("datetime"),
     regexp_extract(line, webRe, 1).as("method"),
@@ -89,12 +85,26 @@ object WebLog {
     regexp_extract(line, webRe, 6).as("client_info"),
     lit(1).cast("int").as("server_type"))
 
-  def parseWeb(spark: SparkSession, dir: String): DataFrame = {
-    renderedLines(spark, dir)
-      .filter(col("line").rlike("\\.wma|\\.wmv"))   // F2 before the big regex
-      .select(col("event_id") +: webFieldCols(col("line")): _*)
-      .orderBy("event_id")
+  /** The combined-format shape: the timestamp bracket (same grammar
+    * as style 5) then the full request regex. A line matching it cannot throw in
+    * [[webFieldCols]] under ANSI mode. */
+  private val webShapeRe: String = Style5.timestampShapeRe + webRe
+
+  /** The one combined-format line → row binding, shared by the batch
+    * query and the streaming parser so their web schemas cannot
+    * diverge. `lines` is any frame with a `line` column; F2 first
+    * (only `.wma`/`.wmv` lines, a cheap filter evaluated before the
+    * big regex), then the shape gate, then [[webFieldCols]] appended. */
+  def parsed(lines: DataFrame): DataFrame = {
+    val line = col("line")
+    lines
+      .filter(line.rlike("\\.wma|\\.wmv"))   // F2 before the big regex
+      .filter(line.rlike(webShapeRe))
+      .select(col("*") +: webFieldCols(line): _*)
   }
+
+  def parseWeb(spark: SparkSession, dir: String): DataFrame =
+    parsed(renderedLines(spark, dir)).drop("line").orderBy("event_id")
 
   /** F3 — the unsupported-format N/A branch
     * (`pull_report.pl:113-115,136-138,159-161`): per media format,
@@ -149,6 +159,6 @@ object WebLog {
          regexp_extract(line, '"(\\S+) (.*?) (\\S+)" (\\d\\d\\d) (\\d+) "-" "(.*?)"', 6) AS client_info,
          CAST(1 AS INTEGER) AS server_type
        FROM wlines
-       WHERE regexp_matches(line, '\\.wma|\\.wmv')
+       WHERE regexp_matches(line, '\\.wma|\\.wmv') AND regexp_matches(line, '$webShapeRe')
        ORDER BY event_id"""
 }

@@ -178,15 +178,13 @@ object Report {
   def nameMatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.parse.Style5
     val assets = Seq("CLIP1.RM", "CLIP42.RM", "CLIP87.RM").map(_.toLowerCase)
-    // project only name + bytes (the full 13-column parse would make
-    // the pushed-down filter re-evaluate every field expression), and
+    // select only name + bytes (pruning drops the rest of the parse,
+    // which the pushed-down filter would re-evaluate per field), and
     // fence with the ZERO-COST barrier — single consumer, so nothing
     // needs to materialize; the isin filter binds to the fenced
     // attribute instead of pushing the whole render into the scan
-    graft.util.Fence.barrier(Style5.renderedLines(spark, dir))
-      .select(Style5.fileName(Style5.reqFile(col("line"))).as("name"),
-        element_at(Style5.dropHead(Style5.spaceMatches(col("line"))), 2)
-          .cast("long").as("bytes_sent"))
+    Style5.parsed(graft.util.Fence.barrier(Style5.renderedLines(spark, dir)))
+      .select(col("name"), col("bytes_sent"))
       .filter(lower(col("name")).isin(assets: _*))
       .groupBy(col("name"))
       .agg(count(lit(1)).as("play_count"), sum(col("bytes_sent")).as("bytes_total"))

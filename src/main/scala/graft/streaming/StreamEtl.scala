@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.parse.Style5
+import graft.parse.{Style5, WebLog}
 
 /** Structured Streaming rebuild of the cron + high-watermark ingest
   * loop (`/root/reference/real_parse.pl:21-52,93`; SURVEY.md §2.7).
@@ -28,59 +28,30 @@ import graft.parse.Style5
   */
 object StreamEtl {
 
-  /** The shared line→star-schema parse, usable on batch AND streaming
-    * DataFrames (same Catalyst expressions as the batch queries).
-    *
-    * Malformed lines (truncated partial writes, foreign formats) are
-    * REJECTED up front: under Spark 4's default ANSI mode an
-    * element_at on a short token array would otherwise throw, fail
-    * the micro-batch, and leave a restart loop replaying the same
-    * poison file forever. The filter is the quarantine gate —
-    * [[rejectedLines]] returns the complement for a dead-letter sink. */
-  private def wellFormed(line: org.apache.spark.sql.Column) =
-    // the bracket must hold a PARSEABLE style-5 timestamp (a bare
-    // [^]]* would admit foreign date formats whose to_timestamp("")
-    // then throws under ANSI — the crash this gate exists to stop)
-    line.rlike(Style5.timestampShapeRe + "\"[^\"]*\" \\d+ \\d+ .*\\d$") &&
-      size(Style5.spaceMatches(line)) >= 8
+  /** The style-5 line→row parse for batch AND streaming text frames
+    * (`value` column): [[graft.parse.Style5.wellFormed]] then a
+    * projection of [[graft.parse.Style5.parsed]] — the same Catalyst
+    * expressions as the batch queries. Malformed lines are REJECTED
+    * up front, so a poison file cannot throw under ANSI and loop a
+    * restarting stream; [[rejectedLines]] returns the complement for
+    * a dead-letter sink. */
+  def parseLines(lines: DataFrame): DataFrame =
+    Style5.parsed(lines.filter(Style5.wellFormed(col("value"))).select(col("value").as("line")))
+      .select("client_ip_address", "datetime", "gmt_offset", "method", "path", "name",
+        "status_code", "bytes_sent", "file_size", "file_time", "sent_time",
+        "resends", "failed_resends", "presentation_id")
 
   /** Complement of [[parseLines]]'s accept filter — route to a
     * quarantine sink in production. */
   def rejectedLines(lines: DataFrame): DataFrame =
-    lines.filter(!wellFormed(col("value")))
-
-  def parseLines(lines: DataFrame): DataFrame = {
-    val line = col("value")
-    val m = Style5.dropHead(Style5.spaceMatches(line))
-    lines.filter(wellFormed(line)).select(
-      Style5.clientIp(line).as("client_ip_address"),
-      Style5.logTimestamp(line).as("datetime"),
-      Style5.gmtOffset(line).as("gmt_offset"),
-      Style5.reqMethod(line).as("method"),
-      Style5.filePath(Style5.reqFile(line)).as("path"),
-      Style5.fileName(Style5.reqFile(line)).as("name"),
-      element_at(m, 1).cast("long").as("status_code"),
-      element_at(m, 2).cast("long").as("bytes_sent"),
-      element_at(m, -6).cast("long").as("file_size"),
-      element_at(m, -5).cast("long").as("file_time"),
-      element_at(m, -4).cast("long").as("sent_time"),
-      element_at(m, -3).cast("long").as("resends"),
-      element_at(m, -2).cast("long").as("failed_resends"),
-      element_at(m, -1).cast("long").as("presentation_id"))
-  }
+    lines.filter(!Style5.wellFormed(col("value")))
 
   /** Combined-format (Caudium/Apache) streaming parse —
     * `web_parse.pl` parity in the streaming path (SURVEY.md §3.3:
-    * one parser per format, one watermark per server_type). The F2
-    * media-extension filter doubles as the well-formed gate: a line
-    * matching the full request regex shape cannot throw downstream. */
-  def parseWebLines(lines: DataFrame): DataFrame = {
-    val line = col("value")
-    lines
-      .filter(line.rlike("\\.wma|\\.wmv"))                              // F2
-      .filter(line.rlike(Style5.timestampShapeRe + graft.parse.WebLog.webRe))
-      .select(graft.parse.WebLog.webFieldCols(line): _*)  // shared with the batch query
-  }
+    * one parser per format, one watermark per server_type): the
+    * batch query's [[graft.parse.WebLog.parsed]] over `value`. */
+  def parseWebLines(lines: DataFrame): DataFrame =
+    WebLog.parsed(lines.select(col("value").as("line"))).drop("line")
 
   /** Incremental ingest: rotated log dir → parsed parquet, one file
     * parsed exactly once across restarts (checkpointed). */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.parse.Style5
+import graft.streaming.StreamEtl
 
 /** Unit tests for the §2.2 parser expressions against hand-written
   * log lines covering the reference's edge cases (SURVEY.md §5.2). */
@@ -17,6 +18,10 @@ class ParseSpec extends AnyFunSuite {
     "[Stat1: 1042 3 7 0 2 sipr] " +
     "[Stat2: 225000 225000 225000 80000 198000 1050 1042 2 1.500 1 3 sipr] " +
     "1482931 180 164 5 1 41"
+
+  // a space-digit token starting with 6 in the path → P4 head-drop case
+  private val tricky = "1.2.3.4 - - [13/Oct/2002:09:04:38 -0700] " +
+    "\"GET /m/clip 612.rm RTSP/1.0\" 200 999 [i] [g] 999 180 164 5 1 41"
 
   private def one(line: String) = {
     val df = spark.createDataFrame(
@@ -66,9 +71,6 @@ class ParseSpec extends AnyFunSuite {
   }
 
   test("P3/P4/P6: numeric binding with head-drop heuristic") {
-    // Line whose path injects a space-digit token starting with 6:
-    val tricky = "1.2.3.4 - - [13/Oct/2002:09:04:38 -0700] " +
-      "\"GET /m/clip 612.rm RTSP/1.0\" 200 999 [i] [g] 999 180 164 5 1 41"
     val r = one(tricky).select(Style5.dropHead(Style5.spaceMatches(col("line")))).head()
     val arr = r.getSeq[String](0)
     assert(arr.head == "200", s"head-drop failed: $arr") // "612" dropped
@@ -81,6 +83,40 @@ class ParseSpec extends AnyFunSuite {
     val arr = r.getSeq[String](0)
     assert(arr.take(2) == Seq("200", "1482931"))
     assert(arr.takeRight(6) == Seq("1482931", "180", "164", "5", "1", "41"))
+  }
+
+  test("reject lane: Style5.wellFormed splits every line into exactly one lane under ANSI") {
+    import spark.implicits._
+    val good = Seq(style5Line, tricky)
+    val bad = Seq(
+      style5Line.take(style5Line.indexOf('"') - 3),             // cut before the request
+      "10.0.1.7 - - [13/Oct/2002:09:04:38 -0700] \"GET /web/v7/t3.wmv HTTP/1.1\" " +
+        "206 1482 \"-\" \"Windows-Media-Player/3.0\"",         // combined format
+      "",                                                        // blank
+      style5Line.replaceFirst("\\[[^\\]]*\\]", "[2024-01-01T00:00:00Z]"), // ISO timestamp
+      "1.2.3.4 - - [13/Oct/2002:09:04:38 -0700] " +              // 7 numeric tokens
+        "\"GET /m/clip.rm RTSP/1.0\" 200 999 [i] [g] 180 164 5 1 41")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // one line per frame, every parsed column collected: each line
+      // lands in exactly one lane and no field expression throws
+      def lanes(l: String): (Int, Int) = {
+        val in = Seq(l).toDF("value")
+        (StreamEtl.parseLines(in).collect().length,
+          StreamEtl.rejectedLines(in).collect().length)
+      }
+      good.foreach(l => assert(lanes(l) == (1, 0), s"good line not parsed: $l"))
+      bad.foreach(l => assert(lanes(l) == (0, 1), s"bad line not rejected: '$l'"))
+      // all together: the lanes partition the input
+      val all = (good ++ bad).toDF("value")
+      val parsed = StreamEtl.parseLines(all).collect()
+      val rejected = StreamEtl.rejectedLines(all).collect().map(_.getString(0))
+      assert(parsed.map(_.getAs[String]("client_ip_address")).sorted.toSeq ==
+        Seq("1.2.3.4", "66.31.5.190"))
+      assert(parsed.map(_.getAs[Long]("presentation_id")).toSeq == Seq(41L, 41L))
+      assert(rejected.sorted.toSeq == bad.sorted)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("P7: bracket groups with stats at index >= 3") {

@@ -75,18 +75,16 @@ class PropertySpec extends AnyFunSuite {
             ("e_bytes", org.apache.spark.sql.types.LongType),
             ("e_last6", org.apache.spark.sql.types.StringType)
           ).map { case (n, t) => org.apache.spark.sql.types.StructField(n, t) }))
-        val m = Style5.dropHead(Style5.spaceMatches(col("line")))
-        val parsed = df.select(
+        val parsed = Style5.parsed(df).select(
           col("e_ip"), col("e_method"), col("e_dir"), col("e_name"),
           col("e_status"), col("e_bytes"), col("e_last6"),
-          Style5.clientIp(col("line")).as("ip"),
-          Style5.reqMethod(col("line")).as("method"),
-          Style5.filePath(Style5.reqFile(col("line"))).as("path"),
-          Style5.fileName(Style5.reqFile(col("line"))).as("name"),
-          element_at(m, 1).cast("long").as("status"),
-          element_at(m, 2).cast("long").as("bytes"),
-          concat_ws(",", slice(m, size(m) - 5, lit(6))).as("last6"),
-          Style5.gmtOffset(col("line")).as("off"))
+          col("client_ip_address").as("ip"),
+          col("method"), col("path"), col("name"),
+          col("status_code").as("status"),
+          col("bytes_sent").as("bytes"),
+          concat_ws(",", Seq("file_size", "file_time", "sent_time", "resends",
+            "failed_resends", "presentation_id").map(col(_).cast("string")): _*).as("last6"),
+          col("gmt_offset").as("off"))
         val bad = parsed.filter(
           col("ip") =!= col("e_ip") || col("method") =!= col("e_method") ||
           col("path") =!= col("e_dir") || col("name") =!= col("e_name") ||
@@ -121,14 +119,13 @@ class PropertySpec extends AnyFunSuite {
         ("e_bytes", org.apache.spark.sql.types.LongType),
         ("e_ua", org.apache.spark.sql.types.StringType)
       ).map { case (n, t) => org.apache.spark.sql.types.StructField(n, t) }))
-    val re = graft.parse.WebLog.webRe
-    val parsed = df.select(col("e_ip"), col("e_name"), col("e_status"),
-      col("e_bytes"), col("e_ua"),
-      Style5.clientIp(col("line")).as("ip"),
-      Style5.fileName(regexp_extract(col("line"), re, 2)).as("name"),
-      regexp_extract(col("line"), re, 4).cast("long").as("status"),
-      regexp_extract(col("line"), re, 5).cast("long").as("bytes"),
-      regexp_extract(col("line"), re, 6).as("ua"))
+    val parsed = graft.parse.WebLog.parsed(df).select(col("e_ip"), col("e_name"),
+      col("e_status"), col("e_bytes"), col("e_ua"),
+      col("client_ip_address").as("ip"), col("name"),
+      col("status_code").as("status"), col("bytes_sent").as("bytes"),
+      col("client_info").as("ua"))
+    // every generated line is a well-formed .wmv/.wma line: the gate keeps all
+    assert(parsed.count() == recs.size, "the web gate dropped a well-formed line")
     val bad = parsed.filter(
       col("ip") =!= col("e_ip") || col("name") =!= col("e_name") ||
       col("status") =!= col("e_status") || col("bytes") =!= col("e_bytes") ||

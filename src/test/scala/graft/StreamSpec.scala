@@ -553,10 +553,7 @@ class StreamSpec extends AnyFunSuite {
     val rBatch = StreamEtl.parseLines(spark.read.text(s"$rsIn/*"))
       .select(col("client_ip_address").as("ip"), col("datetime").as("r_time"),
         col("bytes_sent").as("r_bytes"))
-    val wBatch = spark.read.text(s"$webIn/*")
-      .filter(col("value").rlike("\\.wma|\\.wmv"))
-      .filter(col("value").rlike(Style5.timestampShapeRe + graft.parse.WebLog.webRe))
-      .select(graft.parse.WebLog.webFieldCols(col("value")): _*)
+    val wBatch = StreamEtl.parseWebLines(spark.read.text(s"$webIn/*"))
       .select(col("client_ip_address").as("w_ip"),
         col("datetime").as("w_time"), col("bytes_sent").as("w_bytes"))
     val batch = rBatch.join(wBatch, col("ip") === col("w_ip") &&
