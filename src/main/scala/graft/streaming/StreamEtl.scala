@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CommitLog
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.parse.{Style5, WebLog}
 
 /** Structured Streaming rebuild of the cron + high-watermark ingest
@@ -24,7 +26,10 @@ import graft.parse.{Style5, WebLog}
   * Scale: file-source listing is incremental; parsing is narrow
   * (no shuffle); the dedup keeps only in-watermark state keyed by
   * (ip, datetime, presentation_id). At 100 TB/day the state is
-  * bounded by the 1-hour watermark horizon, not the history.
+  * bounded by the 1-hour watermark horizon plus one drain, not the
+  * history: the ingest queries run no empty eviction batch, so a
+  * drain's expired keys leave the state at the end of the next data
+  * batch ([[ingestStream]]).
   */
 object StreamEtl {
 
@@ -54,19 +59,80 @@ object StreamEtl {
     WebLog.parsed(lines.select(col("value").as("line"))).drop("line")
 
   /** Incremental ingest: rotated log dir → parsed parquet, one file
-    * parsed exactly once across restarts (checkpointed). */
+    * parsed exactly once across restarts (checkpointed). One call is
+    * one cron run: an `AvailableNow` drain of the new rotations,
+    * started by [[startDrain]] without Spark's trailing no-data batch.
+    *
+    * The output is the same as with Spark's default. `datetime` is part
+    * of the dedup key (client_ip_address, datetime, presentation_id).
+    * A key's state entry expires once its `datetime + 1 hour` falls
+    * below the watermark, and any later row with that key is then
+    * itself late, so it is dropped before the state lookup. Evicting at
+    * the end of the next data batch instead of in an empty batch thus
+    * keeps the same rows; the state holds expired keys one drain
+    * longer. */
   def ingestStream(spark: SparkSession, inputGlob: String,
                    checkpointDir: String, outDir: String): StreamingQuery =
-    parseLines(spark.readStream.text(inputGlob))
+    startDrain(spark, parseLines(spark.readStream.text(inputGlob)),
+      Seq("client_ip_address", "datetime", "presentation_id"), checkpointDir, outDir)
+
+  /** The ingest sink both formats share: a 1-hour watermark on
+    * `datetime`, `dropDuplicatesWithinWatermark` on `key`, parquet at
+    * `outDir`, checkpointed `AvailableNow` drains. Not started; the
+    * ingest functions start it through [[startDrain]]. */
+  private[graft] def ingestWriter(parsed: DataFrame, key: Seq[String],
+                                  checkpointDir: String, outDir: String): DataStreamWriter[Row] =
+    parsed
       .withWatermark("datetime", "1 hour")
-      .dropDuplicatesWithinWatermark(
-        "client_ip_address", "datetime", "presentation_id")
+      .dropDuplicatesWithinWatermark(key)
       .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start()
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Starts one ingest drain with no-data micro-batches off, for that
+    * query only. After a data batch that moves the watermark, Spark
+    * runs an empty batch whose work is to evict expired state. In a
+    * drain it costs a job and a stage, about a third of a small drain,
+    * and the next data batch evicts the same keys (see [[ingestStream]]).
+    *
+    * The empty batch also carries the new watermark into the offset
+    * log, and Spark drops late rows against the previous batch's
+    * watermark. Without it, a drain's rows would be judged by the
+    * watermark the previous drain started with, so a new key more than
+    * an hour behind the previous drain's rows would be kept. The filter
+    * below drops those rows itself: it applies the watermark that the
+    * last committed batch left for the next one (the commit log's
+    * `nextBatchWatermarkMs`, the value the empty batch would have
+    * carried), with Spark's own rule (late means at or before it).
+    *
+    * Spark reads the switch once per query, from the session that
+    * `StreamExecution` clones when `start()` builds the query. So the
+    * switch is set on the caller's session around `start()` only, and
+    * its previous value (or its absence) is restored in `finally`. The
+    * query stays on the caller's `spark.streams`, so listeners there
+    * see it. Never set the switch session-wide: event-time timeouts and
+    * append-mode window flushes run in no-data batches. */
+  private def startDrain(spark: SparkSession, parsed: DataFrame, key: Seq[String],
+                         checkpointDir: String, outDir: String): StreamingQuery = {
+    val commits = new Path(checkpointDir, "commits")
+    val watermarkMs =
+      if (!commits.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(commits)) None
+      else new CommitLog(spark, commits.toString).getLatest().map(_._2.nextBatchWatermarkMs)
+    val onTime = watermarkMs.fold(parsed)(ms =>
+      parsed.filter(coalesce(col("datetime") > timestamp_millis(lit(ms)), lit(true))))
+    val writer = ingestWriter(onTime, key, checkpointDir, outDir)
+    val prev = spark.conf.getAll.get(NoDataBatches)
+    spark.conf.set(NoDataBatches, "false")
+    try writer.start()
+    finally prev match {
+      case Some(v) => spark.conf.set(NoDataBatches, v)
+      case None => spark.conf.unset(NoDataBatches)
+    }
+  }
 
   /** Fingerprint-on-arrival for the media lane — [[ingestStream]]'s
     * shape over blob columns: a streaming parquet source of
@@ -105,18 +171,15 @@ object StreamEtl {
     * has no presentation_id, so the dedup natural key is
     * (ip, datetime, name) — the same triple the reference's
     * strictly-greater watermark made unique per run (SURVEY §3.3:
-    * one parser and one watermark per server_type). */
+    * one parser and one watermark per server_type). Like
+    * [[ingestStream]] it runs without the trailing no-data batch
+    * ([[startDrain]]); `datetime` is in this key too, so the output is
+    * the same as with Spark's default and expired keys leave the state
+    * one drain later. */
   def ingestWebStream(spark: SparkSession, inputGlob: String,
                       checkpointDir: String, outDir: String): StreamingQuery =
-    parseWebLines(spark.readStream.text(inputGlob))
-      .withWatermark("datetime", "1 hour")
-      .dropDuplicatesWithinWatermark("client_ip_address", "datetime", "name")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startDrain(spark, parseWebLines(spark.readStream.text(inputGlob)),
+      Seq("client_ip_address", "datetime", "name"), checkpointDir, outDir)
 
   /** Running per-client totals carried in custom keyed state
     * (`mapGroupsWithState` — the §2.8 extension point for state the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 import graft.parse.Style5
+import graft.streaming.StreamEtl
 
 /** Property-based round trip (SURVEY.md §5.3): generate structured
   * log records, render them to style-5 lines with an INDEPENDENT
@@ -167,5 +168,99 @@ class PropertySpec extends AnyFunSuite {
         s"${r.getString(0)}: only $dup of $n chunks re-synced — " +
           "boundaries did not recover after the edit")
     }
+  }
+
+  /** One mutation of a valid style-5 line, applied to its bytes. */
+  private sealed trait Mutation { def apply(line: Array[Byte]): Array[Byte] }
+  private case class Truncate(at: Double) extends Mutation {
+    def apply(l: Array[Byte]) = l.take((l.length * at).toInt)
+  }
+  /** Drops the `k`-th `[` (open) or `]` (close) of the line. */
+  private case class Unbalance(open: Boolean, k: Int) extends Mutation {
+    def apply(l: Array[Byte]) = {
+      val at = l.indices.filter(i => l(i) == (if (open) '[' else ']').toByte)
+      if (at.isEmpty) l else l.patch(at(k % at.size), Nil, 1)
+    }
+  }
+  /** Overwrites bytes at relative offsets with bytes that are never
+    * valid UTF-8 on their own (lone continuation or 0xF8..0xFF). */
+  private case class NonUtf8(at: Seq[(Double, Int)]) extends Mutation {
+    def apply(l: Array[Byte]) = {
+      val out = l.clone()
+      at.foreach { case (p, b) => if (out.nonEmpty) out(((out.length - 1) * p).toInt) = b.toByte }
+      out
+    }
+  }
+  /** Grows the line to about 1 MB: a long query string on the request,
+    * or a run of stat blocks before the numeric tail. */
+  private case class Huge(inQuery: Boolean) extends Mutation {
+    def apply(l: Array[Byte]) = {
+      val s = new String(l, java.nio.charset.StandardCharsets.ISO_8859_1)
+      val grown =
+        if (inQuery) s.replaceFirst(" RTSP/1.0\"", "?q=" + ("a1b2" * 262144) + " RTSP/1.0\"")
+        else s.replaceFirst("] (\\d)", "]" + (" [Stat1: 10 2 3 4 5 sipr]" * 42000) + " $1")
+      grown.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    }
+  }
+  /** Inserts a `[Stat1: …]` block at a relative offset: inside the
+    * request, a bracket or the numeric tail. */
+  private case class StrayStat(at: Double, closed: Boolean) extends Mutation {
+    def apply(l: Array[Byte]) = {
+      val block = (if (closed) " [Stat1: 7 8 9 1 2 sipr] " else " [Stat1: 7 8 9 ").getBytes("US-ASCII")
+      val i = (l.length * at).toInt
+      l.take(i) ++ block ++ l.drop(i)
+    }
+  }
+
+  private val mutationGen: Gen[Mutation] = Gen.frequency(
+    3 -> Gen.choose(0.0, 1.0).map(Truncate),
+    3 -> (for { o <- Gen.oneOf(true, false); k <- Gen.choose(0, 5) } yield Unbalance(o, k)),
+    3 -> Gen.nonEmptyListOf(Gen.zip(Gen.choose(0.0, 1.0),
+      Gen.oneOf(Gen.choose(0x80, 0xBF), Gen.choose(0xF8, 0xFF)))).map(NonUtf8),
+    1 -> Gen.oneOf(true, false).map(Huge),
+    3 -> Gen.zip(Gen.choose(0.0, 1.0), Gen.oneOf(true, false)).map(StrayStat.tupled))
+
+  test("mutated style-5 lines: each lands in parseLines or rejectedLines exactly once, " +
+       "nothing throws under ANSI") {
+    // one to three mutations per line; a fifth of the lines stay valid
+    val caseGen = for {
+      r <- recGen
+      n <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 3))
+      ms <- Gen.listOfN(n, mutationGen)
+    } yield (r, ms)
+    val cases = Gen.listOfN(400, caseGen)
+      .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(2718L))
+      .getOrElse(fail("generator produced no sample"))
+    // ~1 MB growth only on every hundredth line, plus one of each
+    // kind on a valid line, keeps the file a few MB
+    val lines = cases.zipWithIndex.map { case ((r, ms), i) =>
+      val kept = if (i % 100 == 0) ms else ms.filterNot(_.isInstanceOf[Huge])
+      kept.foldLeft(render(r).getBytes("UTF-8"))((l, m) => m(l))
+    } ++ Seq(Huge(true), Huge(false)).map(_(render(cases.head._1).getBytes("UTF-8")))
+    assert(lines.forall(l => !l.contains('\n'.toByte) && !l.contains('\r'.toByte)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_fuzz")
+    val file = dir.resolve("fuzz.log")
+    val bytes = new java.io.ByteArrayOutputStream()
+    lines.foreach { l => bytes.write(l); bytes.write('\n') }
+    java.nio.file.Files.write(file, bytes.toByteArray)
+
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val text = spark.read.text(file.toString)
+      assert(text.count() == lines.size, "the text source split or merged lines")
+      // collect every parsed field: a throwing cast or element_at fails here
+      val parsed = StreamEtl.parseLines(text).collect()
+      val rejected = StreamEtl.rejectedLines(text).collect()
+      assert(parsed.length + rejected.length == lines.size,
+        s"parsed ${parsed.length} + rejected ${rejected.length} != ${lines.size} lines")
+      // no valid line is rejected, and the mutations reach both lanes
+      val valid = cases.filter(_._2.isEmpty).map(c => render(c._1))
+      assert(rejected.forall(r => !valid.contains(r.getString(0))), "a valid line was rejected")
+      assert(parsed.length > valid.size && rejected.nonEmpty,
+        s"weak mutations: ${parsed.length} parsed, ${rejected.length} rejected, ${valid.size} valid")
+      assert(parsed.forall(r => r.getAs[java.sql.Timestamp]("datetime") != null),
+        "a parsed line has no datetime")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

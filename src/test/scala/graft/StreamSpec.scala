@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.parse.Style5
 import graft.streaming.StreamEtl
@@ -1011,5 +1013,157 @@ class StreamSpec extends AnyFunSuite {
     // are fewer than the no-TTL pair closure
     val noTtl = StreamEtl.nearDupTtlBatchOf(feed, 10L * DAY).count()
     assert(batchHits.size < noTtl, "TTL never evicted anything — weak corpus")
+  }
+
+  // ---- ingest drains without the no-data batch ---------------------
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  private def hms(sec: Int): String = f"${sec / 3600}%02d:${sec / 60 % 60}%02d:${sec % 60}%02d"
+
+  /** Style-5 line for event `id` at `sec` seconds past midnight; the
+    * id picks the ip and the presentation_id. */
+  private def s5Line(id: Int, sec: Int): String =
+    s"10.0.${id / 250}.${id % 250 + 1} - - [13/Oct/2002:${hms(sec)} -0700] " +
+      s""""GET /media/clip$id.rm RTSP/1.0" 200 4096 """ +
+      s"[WinNT_5.1_6.0.11.818_play32_RN01_EN_586_0] [abc-def-123] 10 20 30 0 0 ${1000 + id}"
+
+  /** Combined-format line for event `id` at `sec`; the id picks the
+    * ip and the clip name. */
+  private def webLine(id: Int, sec: Int): String =
+    s"10.0.${id / 250}.${id % 250 + 1} - - [13/Oct/2002:${hms(sec)} -0700] " +
+      s""""GET /media/clip$id.wmv HTTP/1.1" 200 4096 "-" "Windows-Media-Player/9.0""""
+
+  /** Three rotations, drained one by one (hours are 3,600 s):
+    *  1. ids 0..24 from 07:00 to 10:00 — the watermark then sits at 09:00
+    *     and the 07:00 key (id 0) has expired;
+    *  2. id 24's line again (boundary duplicate), a new key at 08:30
+    *     (late: 1.5 h behind 10:00), id 22's 09:45 line again (key
+    *     still in state), then ids 100..123 up to 11:00;
+    *  3. id 123's line again (boundary duplicate), id 0's 07:00 line
+    *     again (its key expired two drains ago), a new key at 09:30
+    *     (late), id 111's 10:30 line again, then ids 300..323 up to 12:00. */
+  private def pinRotations(line: (Int, Int) => String): Seq[Seq[String]] = {
+    val h = 3600
+    val r1 = (0 until 25).map(i => line(i, 7 * h + 450 * i))
+    val r2n = (0 until 24).map(j => line(100 + j, 10 * h + 150 * (j + 1)))
+    val r3n = (0 until 24).map(j => line(300 + j, 11 * h + 150 * (j + 1)))
+    Seq(r1,
+      Seq(r1.last, line(200, 8 * h + 30 * 60), r1(22)) ++ r2n,
+      Seq(r2n.last, r1.head, line(201, 9 * h + 30 * 60), r2n(11)) ++ r3n)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** The batch twin of a drained ingest over `rotations`: each
+    * rotation's rows minus those at or behind the watermark its drain
+    * starts with (max `datetime` of the earlier rotations − 1 h), then
+    * the first row per key. */
+  private def batchTwin(rotations: Seq[DataFrame],
+                        key: Seq[String]): Seq[String] = {
+    var maxMs = Long.MinValue
+    val seen = scala.collection.mutable.Set[Seq[Any]]()
+    rotations.flatMap { rot =>
+      val rows = rot.collect().toSeq
+      val wm = if (maxMs == Long.MinValue) None else Some(maxMs - 3600L * 1000)
+      def ms(r: Row) = r.getAs[java.sql.Timestamp]("datetime").getTime
+      val kept = rows.filter(r => wm.forall(ms(r) > _) && seen.add(key.map(r.getAs[Any](_))))
+      maxMs = (maxMs +: rows.map(ms)).max
+      kept.map(_.toString)
+    }.sorted
+  }
+
+  /** Drains `ingest` (which starts without no-data batches) and the
+    * same sink started with Spark's default over the same rotations,
+    * each on its own checkpoint, and requires after every drain that
+    * both outputs equal the batch twin. */
+  private def pinIngest(name: String, line: (Int, Int) => String,
+                        parse: DataFrame => DataFrame, key: Seq[String],
+                        ingest: (SparkSession, String, String, String) => StreamingQuery): Unit = {
+    val base = Files.createTempDirectory(s"graft_pin_$name").toString
+    val in = s"$base/in"; new java.io.File(in).mkdirs()
+    assert(spark.conf.getOption(NoDataBatches).forall(_ == "true"),
+      "the twin must run with Spark's default")
+    val rotations = pinRotations(line)
+    var emptyBatches = 0L
+    rotations.zipWithIndex.foreach { case (lines, r) =>
+      Files.writeString(Paths.get(s"$in/rot$r.log"), lines.mkString("", "\n", "\n"))
+      ingest(spark, s"$in/*", s"$base/cp", s"$base/out").awaitTermination()
+      val default = StreamEtl.ingestWriter(parse(spark.readStream.text(s"$in/*")), key,
+        s"$base/cp_default", s"$base/out_default").start()
+      default.awaitTermination()
+      emptyBatches += default.recentProgress.count(_.numInputRows == 0)
+      val twin = batchTwin((0 to r).map(i => parse(spark.read.text(s"$in/rot$i.log"))), key)
+      val got = rowsOf(spark.read.parquet(s"$base/out"))
+      assert(got == rowsOf(spark.read.parquet(s"$base/out_default")),
+        s"$name drain ${r + 1}: output differs from the default-conf twin")
+      assert(got == twin, s"$name drain ${r + 1}: output differs from the batch twin; " +
+        s"stream-only ${got.diff(twin).take(3)}, batch-only ${twin.diff(got).take(3)}")
+    }
+    // the rotations exercise every case the batch twin drops
+    assert(rowsOf(spark.read.parquet(s"$base/out")).size == 25 + 24 + 24)
+    assert(emptyBatches > 0, "the default-conf twin ran no eviction batch — weak corpus")
+  }
+
+  test("ingestStream without the no-data batch: same rows as Spark's default " +
+       "and the batch twin after every drain") {
+    pinIngest("s5", s5Line, StreamEtl.parseLines,
+      Seq("client_ip_address", "datetime", "presentation_id"), StreamEtl.ingestStream)
+  }
+
+  test("ingestWebStream without the no-data batch: same rows as Spark's default " +
+       "and the batch twin after every drain") {
+    pinIngest("web", webLine, StreamEtl.parseWebLines,
+      Seq("client_ip_address", "datetime", "name"), StreamEtl.ingestWebStream)
+  }
+
+  test("ingestStream leaves the caller's conf as it was, stays on spark.streams, " +
+       "and ends on its data batch") {
+    import StreamingQueryListener._
+    val started, progressed = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progressed.add(e.progress.id)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val prev = spark.conf.getAll.get(NoDataBatches)
+    spark.streams.addListener(listener)
+    try {
+      // once with the switch unset, once with the caller's own value
+      Seq(None, Some("true")).zipWithIndex.foreach { case (callerValue, r) =>
+        callerValue match {
+          case Some(v) => spark.conf.set(NoDataBatches, v)
+          case None => spark.conf.unset(NoDataBatches)
+        }
+        val base = Files.createTempDirectory("graft_scope").toString
+        val in = s"$base/in"; new java.io.File(in).mkdirs()
+        val lines = pinRotations(s5Line).head
+        Files.writeString(Paths.get(s"$in/rot.log"), lines.mkString("", "\n", "\n"))
+        val before = spark.conf.getOption(NoDataBatches)
+        val q = StreamEtl.ingestStream(spark, s"$in/*", s"$base/cp", s"$base/out")
+        q.awaitTermination()
+        assert(spark.conf.getOption(NoDataBatches) == before,
+          s"run ${r + 1}: the ingest changed the caller's $NoDataBatches")
+        // getOption falls back to Spark's default; getAll holds only what was set
+        assert(spark.conf.getAll.get(NoDataBatches) == callerValue,
+          s"run ${r + 1}: the ingest left $NoDataBatches set where the caller had not")
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!(started.contains(q.id) && progressed.contains(q.id)) &&
+               System.nanoTime() < deadline) Thread.sleep(50)
+        assert(started.contains(q.id), s"run ${r + 1}: no start event on spark.streams")
+        assert(progressed.contains(q.id), s"run ${r + 1}: no progress event on spark.streams")
+        val ps = q.recentProgress.toSeq
+        assert(ps.map(_.numInputRows).sum == lines.size)
+        assert(ps.lastOption.exists(_.numInputRows > 0),
+          s"run ${r + 1}: the drain ended on an empty batch: ${ps.map(_.numInputRows)}")
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      prev match {
+        case Some(v) => spark.conf.set(NoDataBatches, v)
+        case None => spark.conf.unset(NoDataBatches)
+      }
+    }
   }
 }
