@@ -2,6 +2,7 @@ package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Style5Scan
 import graft.model.Tables
 
 /** RealServer "logging style 5" line renderer + parser
@@ -181,55 +182,89 @@ object Style5 {
   // ----------------------------------------------------------------
 
   /** Shape prefix every parseable line must carry: leading tokens +
-    * a bracket holding a style-5 timestamp. Kept in sync with
-    * [[logTimestamp]]'s pattern — a line passing a gate built on
-    * this cannot throw in to_timestamp under ANSI mode. */
+    * a bracket holding a style-5 timestamp. The shape alone does not
+    * make the timestamp parseable (`13/Ocu/2002`, hour 29): a gate
+    * built on it also needs [[stampOk]] of the bound timestamp text.
+    * Spelled out here for the DuckDB twins and the web shape; the
+    * style-5 gate reads the same shape from [[Style5Scan]]. */
   private[parse] val timestampShapeRe: String =
     "^\\S+ \\S+ \\S+ \\[\\d\\d/\\w\\w\\w/\\d{4}:\\d\\d:\\d\\d:\\d\\d [^\\]]*\\] "
 
   /** The full style-5 shape: [[timestampShapeRe]], then the quoted
     * request, status, bytes and a numeric tail. */
-  private val lineShapeRe: String = timestampShapeRe + "\"[^\"]*\" \\d+ \\d+ .*\\d$"
+  private[graft] val lineShapeRe: String = timestampShapeRe + "\"[^\"]*\" \\d+ \\d+ .*\\d$"
 
-  /** The one style-5 gate. Malformed lines (truncated partial writes,
-    * foreign formats, blank lines) fail it: under Spark 4's default
-    * ANSI mode an element_at on a short token array, or a to_timestamp
-    * of a foreign date, would otherwise throw and fail the whole job —
-    * in a stream, a restart loop replaying the same poison file
-    * forever. A line passing it binds every [[parsed]] field without
-    * throwing: the bracket holds a parseable timestamp (a bare `[^]]*`
-    * would admit foreign date formats) and there are at least the
-    * eight numeric tokens the positional binding reads. */
-  def wellFormed(line: Column): Column =
-    line.rlike(lineShapeRe) && size(spaceMatches(line)) >= 8
+  /** The first `[dd/MMM/yyyy:HH:mm:ss` bracket anywhere in a line
+    * (P8), for the DuckDB twins. */
+  private[graft] val stampRe: String = "\\[(\\d\\d/\\w\\w\\w/\\d{4}:\\d\\d:\\d\\d:\\d\\d)"
 
-  /** P1 — leading token (`real_parse.pl:65-66`). */
-  def clientIp(line: Column): Column = regexp_extract(line, "^(\\S*)", 1)
+  private val stampFormat = "dd/MMM/yyyy:HH:mm:ss"
 
-  /** P8 — timestamp bracket → TimestampType (`real_parse.pl:87-90,238-247`).
+  /** P8 — timestamp text → TimestampType (`real_parse.pl:87-90,238-247`).
     * The GMT offset is captured and stored but never applied, exactly
-    * like the reference. */
-  def logTimestamp(line: Column): Column =
-    to_timestamp(
-      regexp_extract(line, "\\[(\\d\\d/\\w\\w\\w/\\d{4}:\\d\\d:\\d\\d:\\d\\d)", 1),
-      "dd/MMM/yyyy:HH:mm:ss")
+    * like the reference. Throws under ANSI on text that does not
+    * parse; gates check [[stampOk]] first. */
+  private[parse] def stamp(text: Column): Column = to_timestamp(text, stampFormat)
+  private[parse] def stampOk(text: Column): Column =
+    try_to_timestamp(text, lit(stampFormat)).isNotNull
 
-  def gmtOffset(line: Column): Column = regexp_extract(line, " -(\\d{4})\\]", 1)
+  /** A token a gated binding casts to long fits one (a 20-digit token
+    * throws `CAST_INVALID_INPUT` under ANSI). */
+  private[parse] def fitsLong(token: Column): Column = token.try_cast("long").isNotNull
 
-  /** P3 — all space-prefixed numeric tokens (`real_parse.pl:70`). */
-  def spaceMatches(line: Column): Column = regexp_extract_all(line, lit("\\s(\\d+)"), lit(1))
+  /** P3/P6 — the positional numeric binding over the head-dropped
+    * token array (`real_parse.pl:70-80`): status and bytes from the
+    * front, the last six from the end, whatever stats digits landed in
+    * the middle absorbed. The gate checks exactly these slots. */
+  private val numericSlots: Seq[(Int, String)] = Seq(
+    1 -> "status_code", 2 -> "bytes_sent", -6 -> "file_size", -5 -> "file_time",
+    -4 -> "sent_time", -3 -> "resends", -2 -> "failed_resends", -1 -> "presentation_id")
 
-  /** P4 — head-drop heuristic: first numeric token matching [6_9]\w+
-    * came from a digit-leading path segment, not the status code
-    * (`real_parse.pl:71-72`). */
-  def dropHead(arr: Column): Column =
-    when(element_at(arr, 1).rlike("^[6_9]\\w+"),
-      slice(arr, lit(2), greatest(size(arr) - 1, lit(0)))).otherwise(arr)
+  /** The one style-5 gate, over a [[Style5Scan]] struct. Malformed
+    * lines (truncated partial writes, foreign formats, blank lines,
+    * garbled timestamps, overlong numbers) fail it: under Spark 4's
+    * default ANSI mode an element_at on a short token array, a
+    * to_timestamp of an impossible date or a long cast of a 20-digit
+    * token would otherwise throw and fail the whole job — in a stream,
+    * a restart loop replaying the same poison file forever. A line
+    * passing it binds every [[parsed]] numeric and timestamp field
+    * without throwing: the line has the full shape, at least the
+    * eight numeric tokens the positional binding reads, a timestamp
+    * that parses, and a long in every bound slot.
+    *
+    * The slots are read from the scanned tokens, not from
+    * [[dropHead]]'s array: with eight or more tokens, slot `i > 0` of
+    * the head-dropped array is token `i + 1` when the head drops and
+    * token `i` when it stays, and slot `i < 0` is token `i` either
+    * way. So the head-drop test runs once, where a filter (which has
+    * no subexpression elimination) would rebuild the dropped array
+    * once per slot. */
+  private def gate(scan: Column): Column = {
+    val tokens = scan("tokens")
+    def fits(slots: Seq[Int], shift: Int): Column =
+      slots.map(i => fitsLong(try_element_at(tokens, lit(i + shift)))).reduce(_ && _)
+    val (front, back) = numericSlots.map(_._1).partition(_ > 0)
+    scan("shape") && size(tokens) >= 8 && stampOk(scan("ts")) && fits(back, 0) &&
+      when(headDropped(tokens), fits(front, 1)).otherwise(fits(front, 0))
+  }
 
-  /** P9 — request-line parse (`real_parse.pl:117-118`). */
-  def reqMethod(line: Column): Column = regexp_extract(line, "\"(\\S+) (.*?) (\\S+)\"", 1)
-  def reqFile(line: Column): Column   = regexp_extract(line, "\"(\\S+) (.*?) (\\S+)\"", 2)
-  def reqProto(line: Column): Column  = regexp_extract(line, "\"(\\S+) (.*?) (\\S+)\"", 3)
+  /** [[gate]] over a line column. In a projection, subexpression
+    * elimination evaluates its one [[Style5Scan]] once; a filter has
+    * no such pass and would scan once per conjunct, so filter lines
+    * with [[accepted]] / [[rejected]] instead. */
+  def wellFormed(line: Column): Column = gate(Style5Scan(line))
+
+  /** P4 — head-drop heuristic: a first numeric token matching
+    * `[6_9]\w+` came from a digit-leading path segment, not the status
+    * code (`real_parse.pl:71-72`). */
+  private def headDropped(tokens: Column): Column =
+    try_element_at(tokens, lit(1)).rlike("^[6_9]\\w+")
+
+  /** The token array after the [[headDropped]] test. An empty array
+    * stays empty. */
+  def dropHead(tokens: Column): Column =
+    when(headDropped(tokens), slice(tokens, lit(2), greatest(size(tokens) - 1, lit(0))))
+      .otherwise(tokens)
 
   /** P10 — path/name split + extension truncation (`real_parse.pl:120-131`).
     * name loses anything past the extension (query strings,
@@ -237,10 +272,6 @@ object Style5 {
   def fileName(fname: Column): Column =
     regexp_extract(regexp_extract(fname, "([^/]*)$", 1), "^(.+\\.\\w*)", 1)
   def filePath(fname: Column): Column = regexp_extract(fname, "^(.*)/[^/]*$", 1)
-
-  /** P7 — bracket payload groups (`real_parse.pl:82-85`). */
-  def brackets(line: Column): Column =
-    regexp_extract_all(line, lit("\\[([^\\]]*)\\]"), lit(1))
 
   // ----------------------------------------------------------------
   // Queries (driver contract) + DuckDB oracle twins
@@ -254,53 +285,73 @@ object Style5 {
   val renderSql: String =
     s"WITH $renderCtes SELECT event_id, line FROM lines ORDER BY event_id"
 
+  /** The scanned lines that pass (`keep`) or fail [[gate]]. The scan
+    * is bound by a generator (`explode_outer` over a one-element array:
+    * one row out per row in, nulls kept), not a projection: Catalyst
+    * pushes a filter through a projection by inlining the projected
+    * expression into each conjunct, and a Filter has no subexpression
+    * elimination, so the scan would run once per conjunct. A filter on
+    * a generated column stays above the generator, so every conjunct
+    * reads the one bound `sc`. */
+  private def gated(lines: DataFrame, keep: Boolean): DataFrame = {
+    val ok = gate(col("sc"))
+    lines.select(col("*"), explode_outer(array(Style5Scan(col("line")))).as("sc"))
+      .filter(if (keep) ok else !ok)
+  }
+
   /** The one style-5 line → row binding. `lines` is any frame with a
-    * `line` column (and none named `m`, `b` or `cinfo`, the scratch
-    * columns dropped on the way out); every named field is appended:
-    * the access hub (P1, P8), the request line and path/name split
-    * (P9, P10), the variable-arity positional numeric binding
-    * (P3/P4/P6 — status and bytes from the front, the last six from
-    * the end, whatever stats digits landed in the middle absorbed),
-    * the client-info and guid brackets and the stat blocks (P7). It
-    * does not gate: apply [[wellFormed]] first where input may be
-    * malformed.
+    * `line` column (and none named `sc`, `m`, `b` or `cinfo`, the
+    * scratch columns dropped on the way out); every named field is
+    * appended: the access hub (P1, P8), the request line and path/name
+    * split (P9, P10), the variable-arity positional numeric binding
+    * ([[numericSlots]], P3/P4/P6), the client-info and guid brackets
+    * and the stat blocks (P7). It does not gate: use [[accepted]]
+    * where input may be malformed.
+    *
+    * Every capture comes from one [[Style5Scan]] of the line, bound
+    * in its own projection: it is referenced by every field above, so
+    * CollapseProject leaves it bound and the line is read once, not
+    * once per field. The head-dropped token array `m` and the bracket
+    * list `b` are bound too, and so is the client-info bracket
+    * `cinfo`, which the star projections read as an attribute. The
+    * casts, `to_timestamp`, the path/name split and the stat slice
+    * stay Catalyst expressions over the captures.
     *
     * Consumers select what they need and column pruning drops the
-    * rest, so each projection plans exactly like a hand-bound one.
-    * The token array `m` and the bracket list `b` sit in their own
-    * projections: each is referenced several times above, so
-    * CollapseProject leaves them bound and the regex runs once per
-    * line, not once per field. The client-info bracket `cinfo` is
-    * bound there too, so the star projections read it as an
-    * attribute. */
-  def parsed(lines: DataFrame): DataFrame = {
-    val line = col("line")
-    val (m, b) = (col("m"), col("b"))
-    lines
-      .withColumn("m", dropHead(spaceMatches(line)))
-      .withColumn("b", brackets(line))
+    * rest, so each projection plans exactly like a hand-bound one. */
+  def parsed(lines: DataFrame): DataFrame = bound(lines.withColumn("sc", Style5Scan(col("line"))))
+
+  /** [[parsed]] of the lines that pass [[wellFormed]]: one scan per
+    * line serves the gate and the binding. */
+  def accepted(lines: DataFrame): DataFrame = bound(gated(lines, keep = true))
+
+  /** The rows of `lines` whose `line` fails [[wellFormed]], as they
+    * came: the complement of [[accepted]], for a quarantine sink. */
+  def rejected(lines: DataFrame): DataFrame = gated(lines, keep = false).drop("sc")
+
+  /** The fields of a frame whose `sc` column holds the [[Style5Scan]]
+    * of its `line`. */
+  private def bound(scanned: DataFrame): DataFrame = {
+    val (sc, m, b) = (col("sc"), col("m"), col("b"))
+    scanned
+      .withColumn("m", dropHead(sc("tokens")))
+      .withColumn("b", sc("brackets"))
       .withColumn("cinfo", element_at(b, 2))
-      .select(col("*"),
-        clientIp(line).as("client_ip_address"),
-        logTimestamp(line).as("datetime"),
-        unix_timestamp(logTimestamp(line)).as("epoch"),
-        gmtOffset(line).as("gmt_offset"),
-        reqMethod(line).as("method"),
-        filePath(reqFile(line)).as("path"),
-        fileName(reqFile(line)).as("name"),
-        reqProto(line).as("protocol_version"),
-        element_at(m, 1).cast("long").as("status_code"),
-        element_at(m, 2).cast("long").as("bytes_sent"),
-        element_at(m, -6).cast("long").as("file_size"),
-        element_at(m, -5).cast("long").as("file_time"),
-        element_at(m, -4).cast("long").as("sent_time"),
-        element_at(m, -3).cast("long").as("resends"),
-        element_at(m, -2).cast("long").as("failed_resends"),
-        element_at(m, -1).cast("long").as("presentation_id"),
-        col("cinfo").as("client_info"),
-        element_at(b, 3).as("client_guid"),
-        slice(b, lit(4), greatest(size(b) - 3, lit(0))).as("stat_blocks"))
-      .drop("m", "b", "cinfo")
+      .select(col("*") +: (Seq(
+        sc("lead").as("client_ip_address"),
+        stamp(sc("ts")).as("datetime"),
+        unix_timestamp(stamp(sc("ts"))).as("epoch"),
+        sc("gmt").as("gmt_offset"),
+        sc("method").as("method"),
+        filePath(sc("file")).as("path"),
+        fileName(sc("file")).as("name"),
+        sc("proto").as("protocol_version")) ++
+        numericSlots.map { case (i, name) => element_at(m, i).cast("long").as(name) } ++
+        Seq(
+          col("cinfo").as("client_info"),
+          element_at(b, 3).as("client_guid"),
+          slice(b, lit(4), greatest(size(b) - 3, lit(0))).as("stat_blocks"))): _*)
+      .drop("sc", "m", "b", "cinfo")
   }
 
   /** Reject-lane ETL quality gate: corrupt a deterministic slice of
@@ -322,17 +373,30 @@ object Style5 {
       .orderBy(col("ok"))
   }
 
-  val parseRejectsSql: String =
+  val parseRejectsSql: String = {
+    val bound = numericSlots.map { case (i, _) => s"TRY_CAST(m[$i] AS BIGINT) IS NOT NULL" }
+      .mkString(" AND ")
     s"""WITH $renderCtes,
        c AS (
          SELECT event_id,
            CASE WHEN event_id % 13 = 7 THEN substr(line, 1, 40) ELSE line END AS line2
-         FROM lines)
+         FROM lines),
+       t AS (
+         SELECT event_id, line2, regexp_extract_all(line2, '\\s(\\d+)', 1) AS m0
+         FROM c),
+       g AS (
+         SELECT *,
+           CASE WHEN len(m0) > 0 AND regexp_matches(m0[1], '^[6_9]\\w+')
+                THEN m0[2:] ELSE m0 END AS m
+         FROM t)
        SELECT regexp_matches(line2, '$lineShapeRe')
-           AND len(regexp_extract_all(line2, '\\s(\\d+)', 1)) >= 8 AS ok,
+           AND len(m0) >= 8
+           AND try_strptime(regexp_extract(line2, '$stampRe', 1), '%d/%b/%Y:%H:%M:%S') IS NOT NULL
+           AND $bound AS ok,
          CAST(count(*) AS BIGINT) AS n,
          min(event_id) AS first_event
-       FROM c GROUP BY 1 ORDER BY ok"""
+       FROM g GROUP BY 1 ORDER BY ok"""
+  }
 
   /** The `access` hub projection (S7; `real_parse.pl:96-106`). */
   def parseAccess(spark: SparkSession, dir: String): DataFrame =

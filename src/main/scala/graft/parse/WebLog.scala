@@ -2,6 +2,7 @@ package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Style5Scan
 import graft.model.Tables
 
 /** Caudium / Apache combined-format web log render + parser —
@@ -72,36 +73,44 @@ object WebLog {
   private val webRe = "\"(\\S+) (.*?) (\\S+)\" (\\d\\d\\d) (\\d+) \"-\" \"(.*?)\""
 
   /** The combined-format field projection (server_type=1, the
-    * web/Real discriminator F8, `web_parse.pl:42,87-95`). */
-  private def webFieldCols(line: Column): Seq[Column] = Seq(
-    Style5.clientIp(line).as("client_ip_address"),
-    Style5.logTimestamp(line).as("datetime"),
-    regexp_extract(line, webRe, 1).as("method"),
-    Style5.filePath(regexp_extract(line, webRe, 2)).as("path"),
-    Style5.fileName(regexp_extract(line, webRe, 2)).as("name"),
-    regexp_extract(line, webRe, 3).as("protocol_version"),
-    regexp_extract(line, webRe, 4).cast("long").as("status_code"),
-    regexp_extract(line, webRe, 5).cast("long").as("bytes_sent"),
-    regexp_extract(line, webRe, 6).as("client_info"),
-    lit(1).cast("int").as("server_type"))
+    * web/Real discriminator F8, `web_parse.pl:42,87-95`). The leading
+    * token and the timestamp bracket share style 5's grammar, so they
+    * come from the same [[Style5Scan]] captures. */
+  private def webFieldCols(line: Column): Seq[Column] = {
+    val scan = Style5Scan(line)
+    Seq(
+      scan("lead").as("client_ip_address"),
+      Style5.stamp(scan("ts")).as("datetime"),
+      regexp_extract(line, webRe, 1).as("method"),
+      Style5.filePath(regexp_extract(line, webRe, 2)).as("path"),
+      Style5.fileName(regexp_extract(line, webRe, 2)).as("name"),
+      regexp_extract(line, webRe, 3).as("protocol_version"),
+      regexp_extract(line, webRe, 4).cast("long").as("status_code"),
+      regexp_extract(line, webRe, 5).cast("long").as("bytes_sent"),
+      regexp_extract(line, webRe, 6).as("client_info"),
+      lit(1).cast("int").as("server_type"))
+  }
 
   /** The combined-format shape: the timestamp bracket (same grammar
-    * as style 5) then the full request regex. A line matching it cannot throw in
-    * [[webFieldCols]] under ANSI mode. */
+    * as style 5) then the full request regex. */
   private val webShapeRe: String = Style5.timestampShapeRe + webRe
+
+  /** The one combined-format gate: F2 first (only `.wma`/`.wmv`
+    * lines, a cheap filter evaluated before the big regex), then the
+    * shape, a timestamp that parses (the shape admits `13/Ocu/2002`
+    * or hour 29) and a bytes group that fits a long (the status group
+    * is three digits). A line passing it cannot throw in
+    * [[webFieldCols]] under ANSI mode. */
+  def wellFormed(line: Column): Column =
+    line.rlike("\\.wma|\\.wmv") && line.rlike(webShapeRe) &&
+      Style5.stampOk(Style5Scan(line)("ts")) && Style5.fitsLong(regexp_extract(line, webRe, 5))
 
   /** The one combined-format line → row binding, shared by the batch
     * query and the streaming parser so their web schemas cannot
-    * diverge. `lines` is any frame with a `line` column; F2 first
-    * (only `.wma`/`.wmv` lines, a cheap filter evaluated before the
-    * big regex), then the shape gate, then [[webFieldCols]] appended. */
-  def parsed(lines: DataFrame): DataFrame = {
-    val line = col("line")
-    lines
-      .filter(line.rlike("\\.wma|\\.wmv"))   // F2 before the big regex
-      .filter(line.rlike(webShapeRe))
-      .select(col("*") +: webFieldCols(line): _*)
-  }
+    * diverge. `lines` is any frame with a `line` column; [[wellFormed]]
+    * filters it, then [[webFieldCols]] are appended. */
+  def parsed(lines: DataFrame): DataFrame =
+    lines.filter(wellFormed(col("line"))).select(col("*") +: webFieldCols(col("line")): _*)
 
   def parseWeb(spark: SparkSession, dir: String): DataFrame =
     parsed(renderedLines(spark, dir)).drop("line").orderBy("event_id")
@@ -160,5 +169,7 @@ object WebLog {
          CAST(1 AS INTEGER) AS server_type
        FROM wlines
        WHERE regexp_matches(line, '\\.wma|\\.wmv') AND regexp_matches(line, '$webShapeRe')
+         AND try_strptime(regexp_extract(line, '${Style5.stampRe}', 1), '%d/%b/%Y:%H:%M:%S') IS NOT NULL
+         AND TRY_CAST(regexp_extract(line, '$webRe', 5) AS BIGINT) IS NOT NULL
        ORDER BY event_id"""
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - S1 directory scan + name-filter + sort (`real_parse.pl:208-216`)
   *  - S2 last-N rotated file selection (`real_parse.pl:27-28`)
-  *  - S3 mtime-based selection (`open_log.pl:21-28`)
   *  - S5 `rmserver.cfg` config scan (`real_parse.pl:218-235`)
   *
   * Listing happens on the driver against the Hadoop FileSystem (the
@@ -46,11 +45,6 @@ object LogSources {
           org.apache.spark.sql.types.StringType))))
     else spark.read.text(files: _*)
   }
-
-  /** S3: files modified in a time window — pushed to the reader's
-    * file index, no driver listing needed. */
-  def readModifiedAfter(spark: SparkSession, glob: String, isoTs: String): DataFrame =
-    spark.read.option("modifiedAfter", isoTs).text(glob)
 
   /** S5 parse result: `(loggingStyle, statsMask)`. */
   final case class LogConfig(loggingStyle: Int, statsMask: Int)

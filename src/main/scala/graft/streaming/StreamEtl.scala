@@ -34,14 +34,14 @@ import graft.parse.{Style5, WebLog}
 object StreamEtl {
 
   /** The style-5 line→row parse for batch AND streaming text frames
-    * (`value` column): [[graft.parse.Style5.wellFormed]] then a
-    * projection of [[graft.parse.Style5.parsed]] — the same Catalyst
-    * expressions as the batch queries. Malformed lines are REJECTED
-    * up front, so a poison file cannot throw under ANSI and loop a
-    * restarting stream; [[rejectedLines]] returns the complement for
-    * a dead-letter sink. */
+    * (`value` column): [[graft.parse.Style5.accepted]], the lines that
+    * pass [[graft.parse.Style5.wellFormed]] bound by
+    * [[graft.parse.Style5.parsed]] — the same Catalyst expressions as
+    * the batch queries. Malformed lines are REJECTED up front, so a
+    * poison file cannot throw under ANSI and loop a restarting stream;
+    * [[rejectedLines]] returns the complement for a dead-letter sink. */
   def parseLines(lines: DataFrame): DataFrame =
-    Style5.parsed(lines.filter(Style5.wellFormed(col("value"))).select(col("value").as("line")))
+    Style5.accepted(lines.select(col("value").as("line")))
       .select("client_ip_address", "datetime", "gmt_offset", "method", "path", "name",
         "status_code", "bytes_sent", "file_size", "file_time", "sent_time",
         "resends", "failed_resends", "presentation_id")
@@ -49,7 +49,7 @@ object StreamEtl {
   /** Complement of [[parseLines]]'s accept filter — route to a
     * quarantine sink in production. */
   def rejectedLines(lines: DataFrame): DataFrame =
-    lines.filter(!Style5.wellFormed(col("value")))
+    Style5.rejected(lines.withColumnRenamed("value", "line")).withColumnRenamed("line", "value")
 
   /** Combined-format (Caudium/Apache) streaming parse —
     * `web_parse.pl` parity in the streaming path (SURVEY.md §3.3:

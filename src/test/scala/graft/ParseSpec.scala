@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.Style5Scan
 import graft.parse.Style5
 import graft.streaming.StreamEtl
 
-/** Unit tests for the §2.2 parser expressions against hand-written
-  * log lines covering the reference's edge cases (SURVEY.md §5.2). */
+/** Unit tests for the §2.2 parser ([[Style5.parsed]] over one
+  * [[Style5Scan]] per line) against hand-written log lines covering
+  * the reference's edge cases (SURVEY.md §5.2). */
 class ParseSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -32,29 +34,27 @@ class ParseSpec extends AnyFunSuite {
     df
   }
 
+  private def scanOf(line: String) =
+    one(line).select(Style5Scan(col("line")).as("s")).select("s.*").head()
+
   test("P1: client ip is the leading token") {
-    assert(one(style5Line).select(Style5.clientIp(col("line"))).head().getString(0)
+    assert(Style5.parsed(one(style5Line)).select("client_ip_address").head().getString(0)
       == "66.31.5.190")
   }
 
   test("P8: timestamp parses; offset captured but not applied") {
-    val r = one(style5Line).select(
-      Style5.logTimestamp(col("line")).cast("string"),
-      Style5.gmtOffset(col("line"))).head()
+    val r = Style5.parsed(one(style5Line)).select(
+      col("datetime").cast("string"), col("gmt_offset")).head()
     assert(r.getString(0) == "2002-10-13 09:04:38")
     assert(r.getString(1) == "0700")
   }
 
   test("P9/P10: request line, path/name split") {
-    val r = one(style5Line).select(
-      Style5.reqMethod(col("line")), Style5.reqFile(col("line")),
-      Style5.reqProto(col("line"))).head()
-    assert(r.getString(0) == "GET")
-    assert(r.getString(1) == "/media/promo/clip01.rm")
-    assert(r.getString(2) == "RTSP/1.0")
-    val n = one(style5Line).select(
-      Style5.fileName(Style5.reqFile(col("line"))),
-      Style5.filePath(Style5.reqFile(col("line")))).head()
+    val r = scanOf(style5Line)
+    assert(r.getAs[String]("method") == "GET")
+    assert(r.getAs[String]("file") == "/media/promo/clip01.rm")
+    assert(r.getAs[String]("proto") == "RTSP/1.0")
+    val n = Style5.parsed(one(style5Line)).select("name", "path").head()
     assert(n.getString(0) == "clip01.rm")
     assert(n.getString(1) == "/media/promo")
   }
@@ -71,7 +71,7 @@ class ParseSpec extends AnyFunSuite {
   }
 
   test("P3/P4/P6: numeric binding with head-drop heuristic") {
-    val r = one(tricky).select(Style5.dropHead(Style5.spaceMatches(col("line")))).head()
+    val r = one(tricky).select(Style5.dropHead(Style5Scan(col("line"))("tokens"))).head()
     val arr = r.getSeq[String](0)
     assert(arr.head == "200", s"head-drop failed: $arr") // "612" dropped
     assert(arr(1) == "999")
@@ -79,7 +79,7 @@ class ParseSpec extends AnyFunSuite {
   }
 
   test("P6: variable middle absorbed — last six bind from the end") {
-    val r = one(style5Line).select(Style5.dropHead(Style5.spaceMatches(col("line")))).head()
+    val r = one(style5Line).select(Style5.dropHead(Style5Scan(col("line"))("tokens"))).head()
     val arr = r.getSeq[String](0)
     assert(arr.take(2) == Seq("200", "1482931"))
     assert(arr.takeRight(6) == Seq("1482931", "180", "164", "5", "1", "41"))
@@ -87,7 +87,10 @@ class ParseSpec extends AnyFunSuite {
 
   test("reject lane: Style5.wellFormed splits every line into exactly one lane under ANSI") {
     import spark.implicits._
-    val good = Seq(style5Line, tricky)
+    // past Long.MaxValue, and not a head-drop token (those start with 6 or 9)
+    val twenty = "12345678901234567890"
+    // in the stats middle a 20-digit token is absorbed: no slot binds it
+    val good = Seq(style5Line, tricky, style5Line.replace("[Stat1: 1042 ", s"[Stat1: $twenty "))
     val bad = Seq(
       style5Line.take(style5Line.indexOf('"') - 3),             // cut before the request
       "10.0.1.7 - - [13/Oct/2002:09:04:38 -0700] \"GET /web/v7/t3.wmv HTTP/1.1\" " +
@@ -95,7 +98,18 @@ class ParseSpec extends AnyFunSuite {
       "",                                                        // blank
       style5Line.replaceFirst("\\[[^\\]]*\\]", "[2024-01-01T00:00:00Z]"), // ISO timestamp
       "1.2.3.4 - - [13/Oct/2002:09:04:38 -0700] " +              // 7 numeric tokens
-        "\"GET /m/clip.rm RTSP/1.0\" 200 999 [i] [g] 180 164 5 1 41")
+        "\"GET /m/clip.rm RTSP/1.0\" 200 999 [i] [g] 180 164 5 1 41",
+      // the shape admits these timestamps, but they do not parse
+      style5Line.replace("13/Oct/2002:09", "01/Ocu/2024:09"),
+      style5Line.replace("13/Oct/2002:09", "13/Oct/2002:29"),
+      style5Line.replace("13/Oct/2002:09", "99/Oct/2002:09"),
+      // a token past the long range in a bound slot: status, bytes,
+      // file_size, presentation_id (and after a head drop)
+      style5Line.replace("\" 200 ", s"\" $twenty "),
+      style5Line.replace(" 1482931 [", s" $twenty ["),
+      style5Line.replace("] 1482931 180", s"] $twenty 180"),
+      style5Line.stripSuffix(" 41") + s" $twenty",
+      tricky.replace(" 200 999 ", s" 200 $twenty "))
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
@@ -113,15 +127,15 @@ class ParseSpec extends AnyFunSuite {
       val parsed = StreamEtl.parseLines(all).collect()
       val rejected = StreamEtl.rejectedLines(all).collect().map(_.getString(0))
       assert(parsed.map(_.getAs[String]("client_ip_address")).sorted.toSeq ==
-        Seq("1.2.3.4", "66.31.5.190"))
-      assert(parsed.map(_.getAs[Long]("presentation_id")).toSeq == Seq(41L, 41L))
+        Seq("1.2.3.4", "66.31.5.190", "66.31.5.190"))
+      assert(parsed.map(_.getAs[Long]("presentation_id")).toSeq == Seq(41L, 41L, 41L))
       assert(rejected.sorted.toSeq == bad.sorted)
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("P7: bracket groups with stats at index >= 3") {
-    val r = one(style5Line).select(Style5.brackets(col("line"))).head()
-    val b = r.getSeq[String](0)
+    val r = scanOf(style5Line)
+    val b = r.getSeq[String](r.fieldIndex("brackets"))
     assert(b.length == 5)
     assert(b(3).startsWith("Stat1:") && b(4).startsWith("Stat2:"))
   }

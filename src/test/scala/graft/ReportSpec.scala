@@ -17,6 +17,8 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** The sf0.01 fixtures beside [[sf]], the scale the oracle check runs at. */
+  val sf01: String = sf.replace("sf0.001", "sf0.01")
 }
 
 class ReportSpec extends AnyFunSuite {

@@ -36,18 +36,4 @@ class SourcesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](LogSources.requireStyle5(bad))
     intercept[IllegalArgumentException](LogSources.parseConfig("no config here"))
   }
-
-  test("S3: modifiedAfter prunes old files at the reader") {
-    val dir = Files.createTempDirectory("graft_mtime").toString
-    Files.writeString(Paths.get(dir, "old.log"), "old\n")
-    Files.writeString(Paths.get(dir, "new.log"), "new\n")
-    // old.log gets an mtime in the past; new.log stays current
-    Files.setLastModifiedTime(Paths.get(dir, "old.log"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 86400000L))
-    val cutoff = java.time.Instant.now().minusSeconds(3600).toString
-    val got = LogSources.readModifiedAfter(spark, s"$dir/*.log", cutoff)
-      .collect().map(_.getString(0))
-    assert(got.toSeq == Seq("new"))
-  }
 }
