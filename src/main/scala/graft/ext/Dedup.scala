@@ -1115,25 +1115,23 @@ object Dedup {
     graft.util.Fence.lineage(simhashOf(corpus(spark, dir)))
       .orderBy(col("doc_id"))
 
-  /** Pure-Scala SimHash of one document — EXACTLY the [[simhashOf]]
-    * construction (same `sim_` md5 salt, same 60-bit hex windows,
-    * same ±1 vote and bit-packing rule; ExtSpec asserts bit-equality
-    * against the distributed query on the real corpus). Exists so a
-    * STREAMING kernel ([[graft.streaming.StreamEtl.nearDupStream]])
-    * can hash an arriving document inside `flatMapGroupsWithState`
-    * without a pre-aggregation stage. */
   private val simMd = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** Pure-Scala SimHash of one document — EXACTLY the [[simhashOf]]
+    * construction (same `sim_` md5 salt, same 60-bit hex windows,
+    * same ±1 vote and bit-packing rule). It is the scalar reference
+    * for [[simhashOf]]'s native `SimhashPacked` kernel: ExtSpec
+    * asserts bit-equality against the distributed query on the real
+    * corpus and on a 70k-token document. */
   private[graft] def simhash64(text: String): Long = {
-    // Streaming hot path (one call per arriving document): the digest
-    // is thread-local, not per-call, and the two 60-bit words come
-    // straight from the digest bytes — hex chars [0,15) are bytes 0-6
-    // plus the high nibble of byte 7, chars [16,31) are bytes 8-14
-    // plus the high nibble of byte 15 — so no per-byte hex formatting
-    // or string parsing allocates per token.
+    // The digest is thread-local, not per-call, and the two 60-bit
+    // words come straight from the digest bytes — hex chars [0,15)
+    // are bytes 0-6 plus the high nibble of byte 7, chars [16,31) are
+    // bytes 8-14 plus the high nibble of byte 15 — so no per-byte hex
+    // formatting or string parsing allocates per token.
     val md = simMd.get()
     val votes = new Array[Int](SIMBITS)
     text.trim.split("\\s+").distinct.foreach { t =>

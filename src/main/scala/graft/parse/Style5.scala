@@ -227,10 +227,13 @@ object Style5 {
     * to_timestamp of an impossible date or a long cast of a 20-digit
     * token would otherwise throw and fail the whole job — in a stream,
     * a restart loop replaying the same poison file forever. A line
-    * passing it binds every [[parsed]] numeric and timestamp field
-    * without throwing: the line has the full shape, at least the
-    * eight numeric tokens the positional binding reads, a timestamp
-    * that parses, and a long in every bound slot.
+    * passing it binds every [[parsed]] field without throwing: the
+    * line has the full shape, at least the eight numeric tokens the
+    * positional binding reads, a timestamp that parses, and a long in
+    * every bound slot. The gate does not count brackets: the
+    * client-info and guid brackets (the second and third) bind with
+    * `try_element_at`, so a line that lacks one binds NULL there, as
+    * a DuckDB list index past the end (the twins' `bl[2]`) does.
     *
     * The slots are read from the scanned tokens, not from
     * [[dropHead]]'s array: with eight or more tokens, slot `i > 0` of
@@ -336,7 +339,7 @@ object Style5 {
     scanned
       .withColumn("m", dropHead(sc("tokens")))
       .withColumn("b", sc("brackets"))
-      .withColumn("cinfo", element_at(b, 2))
+      .withColumn("cinfo", try_element_at(b, lit(2)))
       .select(col("*") +: (Seq(
         sc("lead").as("client_ip_address"),
         stamp(sc("ts")).as("datetime"),
@@ -349,7 +352,7 @@ object Style5 {
         numericSlots.map { case (i, name) => element_at(m, i).cast("long").as(name) } ++
         Seq(
           col("cinfo").as("client_info"),
-          element_at(b, 3).as("client_guid"),
+          try_element_at(b, lit(3)).as("client_guid"),
           slice(b, lit(4), greatest(size(b) - 3, lit(0))).as("stat_blocks"))): _*)
       .drop("sc", "m", "b", "cinfo")
   }

@@ -134,37 +134,6 @@ object StreamEtl {
     }
   }
 
-  /** Fingerprint-on-arrival for the media lane — [[ingestStream]]'s
-    * shape over blob columns: a streaming parquet source of
-    * `(media_id, blob)` rows is decoded by the SAME perceptual
-    * fingerprint kernel the batch index uses
-    * ([[graft.ext.Multimodal.fingerprintImagesOf]] — one decoder per
-    * partition, rows streamed), and the fingerprints land in parquet
-    * exactly once across restarts (checkpointed `AvailableNow`
-    * drains; the file source tracks consumed blob files like the
-    * rotated-log sources). At 100 TB the pattern is unchanged: blobs
-    * arrive as object-store files, the fingerprint parquet is the
-    * persisted index every near-dup probe joins
-    * ([[graft.ext.Multimodal.mediaNeardup]]'s split 17+3 probe fan) —
-    * decode work is partition-parallel, and no raw byte ever rides a
-    * join shuffle (the kernel's repartition spreads arrival files,
-    * then only 5-long fingerprint rows move). */
-  def mediaFingerprintStream(spark: SparkSession, inputGlob: String,
-                             checkpointDir: String, outDir: String): StreamingQuery = {
-    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("media_id", LongType), StructField("blob", BinaryType)))
-    graft.ext.Multimodal
-      .fingerprintImagesOf(spark.readStream.schema(schema).parquet(inputGlob))
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
   /** Incremental web-log ingest — `web_parse.pl` in the streaming
     * path, mirroring [[ingestStream]]: rotated Caudium logs → parsed
     * parquet, one file exactly once across restarts. The web format
@@ -181,323 +150,6 @@ object StreamEtl {
     startDrain(spark, parseWebLines(spark.readStream.text(inputGlob)),
       Seq("client_ip_address", "datetime", "name"), checkpointDir, outDir)
 
-  /** Running per-client totals carried in custom keyed state
-    * (`mapGroupsWithState` — the §2.8 extension point for state the
-    * built-in aggregations can't express). State lives in the
-    * checkpointed store, so totals accumulate across restarts and
-    * log rotations; at scale state is partitioned by key like any
-    * shuffle, bounded here by the client-IP cardinality. */
-  case class ClientTotals(client_ip: String, n_requests: Long, total_bytes: Long)
-
-  def runningClientTotals(spark: SparkSession, inputGlob: String)
-      : org.apache.spark.sql.Dataset[ClientTotals] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    parseLines(spark.readStream.text(inputGlob))
-      .select(col("client_ip_address"), col("bytes_sent"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[ClientTotals, ClientTotals](GroupStateTimeout.NoTimeout) {
-        case (ip, rows, state) =>
-          val prev = state.getOption.getOrElse(ClientTotals(ip, 0L, 0L))
-          val (n, b) = rows.foldLeft((0L, 0L)) { case ((cn, cb), r) => (cn + 1, cb + r._2) }
-          val next = ClientTotals(ip, prev.n_requests + n, prev.total_bytes + b)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Streaming first-seen content dedup — the streaming mirror of
-    * the batch dedup_exact operator: every line keys by its content
-    * hash, only the FIRST occurrence ever is emitted, and later
-    * copies (within a run or across restarts/rotations) are
-    * suppressed by the checkpointed seen-state. Append-mode
-    * `flatMapGroupsWithState` because the built-in dropDuplicates
-    * variants cannot bound state by "first ever across restarts"
-    * without a watermark column that a content feed does not have.
-    *
-    * Scale: state is one boolean per distinct content hash,
-    * partitioned by the hash like any shuffle. For a bounded-horizon
-    * variant (dedup only within the watermark window, state that
-    * expires) use `dropDuplicatesWithinWatermark` as
-    * [[ingestStream]] does — this operator is the unbounded
-    * first-ever guarantee a corpus-ingest feed needs. */
-  case class FirstSeen(content_hash: String, line: String)
-
-  def firstSeenLines(spark: SparkSession, inputGlob: String)
-      : org.apache.spark.sql.Dataset[FirstSeen] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // keyed by the FULL 128-bit md5, not the 60-bit phash: first-ever
-    // state is forever, so at corpus-ingest cardinality (10^9+ lines)
-    // a 60-bit key space gives a real birthday probability of two
-    // DISTINCT lines colliding — and a collision here silently drops
-    // content. 2^-64 per pair is the dedup_exact standard instead.
-    spark.readStream.text(inputGlob)
-      .select(md5(col("value")).as("h"), col("value"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, FirstSeen](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (h, rows, state) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            // rows within one batch arrive in scan order; emit one
-            Iterator.single(FirstSeen(h, rows.next()._2))
-          }
-      }
-  }
-
-  /** A streaming near-duplicate hit: `doc_id` arrived and matched the
-    * already-seen `dup_of` within `hamming` SimHash bits in band
-    * `band` (a pair colliding in several bands emits once per band,
-    * same per-band multiplicity as the batch LSH — consumers
-    * `dropDuplicates("doc_id", "dup_of")`). */
-  case class NearDupHit(band: Int, doc_id: Long, dup_of: Long, hamming: Int)
-
-  /** Checkpointed members of one (band, bucket) LSH cell. */
-  case class BandMembers(memberIds: Array[Long], memberSims: Array[Long],
-                         maxSeenTs: Long = Long.MinValue)
-
-  /** Streaming NEAR-duplicate gate — `dedup_incremental`'s semantics
-    * on a LIVE feed: every arriving document (a `doc_id\ttext` line)
-    * is SimHash-banded (4×16 bits of [[graft.ext.Dedup.simhash64]],
-    * the bit-identical kernel twin of the batch `simhash` query) and
-    * checked against every document EVER seen in any of its 4 band
-    * buckets; matches within `maxHamming` bits emit as they arrive.
-    * Pigeonhole: hamming ≤ 3 over 4 bands always leaves one band
-    * intact, so recall at the default threshold is exact, streamed.
-    *
-    * State layout is the LSH geometry itself: one
-    * `flatMapGroupsWithState` group per (band, 16-bit bucket), each
-    * holding its members' (id, simhash) pairs — the same ~N/2¹⁶
-    * collision classes the batch banded join shuffles on, here living
-    * in the checkpointed state store partitioned by bucket key. The
-    * pairwise hamming check within a bucket is the verify step, run
-    * only against a bucket's own members. Malformed lines drop in the
-    * parse (corpus feeds carry a quarantine lane upstream); re-arrived
-    * doc_ids neither re-enter state nor match themselves. Within a
-    * micro-batch, arrivals are ordered by doc_id so emissions are
-    * deterministic.
-    *
-    * Bounded state at crawl scale — the lambda handoff: `stateTtlMs`
-    * ages quiet buckets out of the state store (ProcessingTimeTimeout;
-    * an evicted bucket's history is OWNED by the periodic batch index
-    * from then on — the batch `dedupIncremental` pass catches any
-    * cross-TTL duplicate the stream can no longer see), and
-    * `seedIndex` (a `(doc_id, simhash)` batch index) re-seeds every
-    * bucket's membership at query START via `initialState` — the
-    * redeploy recipe: stop the stream, compact state into the batch
-    * index, restart with a fresh checkpoint and the refreshed index.
-    * `initialState` is distributed (grouped like the stream itself),
-    * never collected to the driver.
-    *
-    * Trigger caveat: with a ProcessingTimeTimeout armed,
-    * `FlatMapGroupsWithStateExec.shouldRunAnotherBatch` is
-    * unconditionally true, so a `Trigger.AvailableNow` query never
-    * self-terminates — it keeps scheduling timeout-processing batches
-    * forever. Run a TTL'd gate on a periodic trigger (the live-crawl
-    * shape) or drain with single-batch `Trigger.Once` runs; reserve
-    * AvailableNow for the untimed (`stateTtlMs = None`) variant — or
-    * use [[nearDupStreamEventTime]], whose watermark-driven aging has
-    * no such trap and drains cleanly under AvailableNow.
-    *
-    * BAND-WIDTH CONTRACT vs the batch knob: the stream keeps the
-    * FIXED narrow 4×16 layout at every scale. A state-keyed stream
-    * cannot count its corpus (the in-query 1-row broadcast that picks
-    * [[graft.ext.Dedup.simhashPairsOf]]'s rung needs the whole input),
-    * and switching layouts mid-stream would orphan every live bucket
-    * key. That is safe for RESULTS because both batch rungs and this
-    * stream share complete candidate recall at hamming ≤ 3 plus the
-    * same exact bit_count verify — the stream's distinct pair set
-    * equals the batch output at EITHER rung (StreamSpec pins this
-    * pair-for-pair). What the narrow layout costs at scale is state
-    * fan-in (~N²/2¹⁷ per-bucket pair work on skewed corpora), and the
-    * levers for that are the ones this operator already has — state
-    * TTL + the compacted batch seed index — not band width. */
-  def nearDupStream(spark: SparkSession, inputGlob: String, maxHamming: Int = 3,
-                    stateTtlMs: Option[Long] = None,
-                    seedIndex: Option[org.apache.spark.sql.Dataset[(Long, Long)]] = None)
-      : org.apache.spark.sql.Dataset[NearDupHit] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val docs = spark.readStream.text(inputGlob)
-      .as[String]
-      .flatMap { line =>
-        val i = line.indexOf('\t')
-        if (i <= 0) None
-        else line.substring(0, i).toLongOption
-          .map(id => (id, graft.ext.Dedup.simhash64(line.substring(i + 1))))
-      }
-    def band(id: Long, sh: Long): Seq[(Int, Long, Long, Long)] =
-      (0 until 4).map(b => (b, (sh >>> (16 * b)) & 0xffffL, id, sh))
-    val banded = docs.flatMap { case (id, sh) => band(id, sh) }
-
-    val kernel: ((Int, Long), Iterator[(Int, Long, Long, Long)],
-                 GroupState[BandMembers]) => Iterator[NearDupHit] = {
-      case (_, _, state) if state.hasTimedOut =>
-        // quiet bucket aged out: hand its history to the batch index
-        state.remove()
-        Iterator.empty
-      case (_, rows, state) =>
-        val st = state.getOption.getOrElse(BandMembers(Array.empty, Array.empty))
-        val ids = scala.collection.mutable.ArrayBuffer(st.memberIds.toSeq: _*)
-        val hs = scala.collection.mutable.ArrayBuffer(st.memberSims.toSeq: _*)
-        val out = scala.collection.mutable.ArrayBuffer[NearDupHit]()
-        rows.toSeq.sortBy(_._3).foreach { case (b, _, id, sh) =>
-          if (!ids.contains(id)) {
-            var k = 0
-            while (k < ids.length) {
-              val d = java.lang.Long.bitCount(sh ^ hs(k))
-              if (d <= maxHamming) out += NearDupHit(b, id, ids(k), d)
-              k += 1
-            }
-            ids += id; hs += sh
-          }
-        }
-        state.update(BandMembers(ids.toArray, hs.toArray))
-        // update() clears any pending timeout — re-arm after every write
-        stateTtlMs.foreach(state.setTimeoutDuration)
-        out.iterator
-    }
-
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val grouped = banded.groupByKey(r => (r._1, r._2))
-    seedIndex match {
-      case Some(seed) =>
-        val init = seed
-          .flatMap { case (id, sh) => band(id, sh) }
-          .groupByKey(r => (r._1, r._2))
-          .mapGroups { (k: (Int, Long), rows: Iterator[(Int, Long, Long, Long)]) =>
-            val rs = rows.toArray.sortBy(_._3)
-            (k, BandMembers(rs.map(_._3), rs.map(_._4)))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState[BandMembers, NearDupHit](
-          OutputMode.Append(), timeoutConf, init)(kernel)
-      case None =>
-        grouped.flatMapGroupsWithState[BandMembers, NearDupHit](
-          OutputMode.Append(), timeoutConf)(kernel)
-    }
-  }
-
-  /** Event-time variant of [[nearDupStream]] — the aging option that
-    * removes the ProcessingTimeTimeout scheduling trap documented
-    * there. Input lines are `id \t epoch_millis \t text` (a crawl
-    * feed's fetch timestamp); buckets age by WATERMARK: each bucket
-    * re-arms its timeout at (max event time it has seen) + `ttlMs`,
-    * and is evicted when the watermark passes that instant — wall
-    * clock and trigger cadence are irrelevant, replays age
-    * identically (the determinism processing-time TTL can't give).
-    *
-    * Because `FlatMapGroupsWithStateExec.shouldRunAnotherBatch` under
-    * `EventTimeTimeout` re-fires only while the watermark ADVANCES,
-    * a `Trigger.AvailableNow` drain terminates: data batches, then at
-    * most one timeout-processing batch per watermark step, then done
-    * — no self-scheduling-forever. Late rows (event time at or below
-    * the current watermark) may arrive while their bucket still
-    * lives; the re-arm clamps to watermark + 1 so Spark's "timeout
-    * must be ahead of the watermark" contract holds. */
-  def nearDupStreamEventTime(spark: SparkSession, inputGlob: String,
-                             ttlMs: Long, maxHamming: Int = 3,
-                             watermarkDelay: String = "0 milliseconds",
-                             seedIndex: Option[org.apache.spark.sql.Dataset[(Long, Long)]] = None,
-                             maxFilesPerTrigger: Option[Int] = None)
-      : org.apache.spark.sql.Dataset[NearDupHit] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val reader0 = spark.readStream
-    // one file per micro-batch makes the batch sequence (and so the
-    // watermark trajectory) a deterministic function of file order —
-    // the knob the batch-twin parity test ([[nearDupTtlBatchOf]])
-    // turns to replay day-batches exactly
-    val reader = maxFilesPerTrigger
-      .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))
-    val docs = reader.text(inputGlob)
-      .as[String]
-      .flatMap { line =>
-        line.split("\t", 3) match {
-          case Array(idS, tsS, text) =>
-            for { id <- idS.toLongOption; ts <- tsS.toLongOption }
-              yield (id, ts, graft.ext.Dedup.simhash64(text))
-          case _ => None
-        }
-      }
-      .toDF("id", "ts_ms", "sh")
-      .withColumn("event_time", timestamp_millis(col("ts_ms")))
-      .withWatermark("event_time", watermarkDelay)
-    // banding stays in DataFrame ops: a typed flatMap would mint new
-    // attributes WITHOUT the watermark metadata and the stateful op
-    // would reject the event-time timeout ("watermark must be
-    // specified"). The & 0xffff mask makes arithmetic shiftright
-    // equal to >>> here (shift ≤ 48 bits).
-    val banded = docs
-      .withColumn("band", explode(lit((0 until 4).toArray)))
-      .select(col("band"),
-        expr("shiftright(sh, 16 * band) & 65535").as("bucket"),
-        col("id"), col("sh"), col("ts_ms"), col("event_time"))
-      .as[(Int, Long, Long, Long, Long, java.sql.Timestamp)]
-
-    val kernel: ((Int, Long),
-                 Iterator[(Int, Long, Long, Long, Long, java.sql.Timestamp)],
-                 GroupState[BandMembers]) => Iterator[NearDupHit] = {
-      case (_, _, state) if state.hasTimedOut =>
-        // the watermark passed this bucket's last activity + TTL:
-        // its history is the batch index's from here on
-        state.remove()
-        Iterator.empty
-      case (_, rows, state) =>
-        val st = state.getOption.getOrElse(BandMembers(Array.empty, Array.empty))
-        val ids = scala.collection.mutable.ArrayBuffer(st.memberIds.toSeq: _*)
-        val hs = scala.collection.mutable.ArrayBuffer(st.memberSims.toSeq: _*)
-        val out = scala.collection.mutable.ArrayBuffer[NearDupHit]()
-        // seed from the max EVER seen, not this batch's max: a later
-        // batch carrying only older (above-watermark) rows must not
-        // pull the armed timeout EARLIER — eviction stays monotone
-        // per bucket and independent of batch composition.
-        var maxTs = st.maxSeenTs
-        rows.toSeq.sortBy(_._3).foreach { case (b, _, id, sh, ts, _) =>
-          if (ts > maxTs) maxTs = ts
-          if (!ids.contains(id)) {
-            var k = 0
-            while (k < ids.length) {
-              val d = java.lang.Long.bitCount(sh ^ hs(k))
-              if (d <= maxHamming) out += NearDupHit(b, id, ids(k), d)
-              k += 1
-            }
-            ids += id; hs += sh
-          }
-        }
-        state.update(BandMembers(ids.toArray, hs.toArray, maxTs))
-        state.setTimeoutTimestamp(
-          math.max(state.getCurrentWatermarkMs() + 1, maxTs + ttlMs))
-        out.iterator
-    }
-
-    val grouped = banded.groupByKey(r => (r._1, r._2))
-    seedIndex match {
-      case Some(seed) =>
-        val init = seed
-          .flatMap { case (id, sh) =>
-            (0 until 4).map(b => (b, (sh >>> (16 * b)) & 0xffffL, id, sh))
-          }
-          .groupByKey(r => (r._1, r._2))
-          .mapGroups { (k: (Int, Long), rows: Iterator[(Int, Long, Long, Long)]) =>
-            val rs = rows.toArray.sortBy(_._3)
-            (k, BandMembers(rs.map(_._3), rs.map(_._4)))
-          }
-          .groupByKey(_._1).mapValues(_._2)
-        grouped.flatMapGroupsWithState[BandMembers, NearDupHit](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout, init)(kernel)
-      case None =>
-        grouped.flatMapGroupsWithState[BandMembers, NearDupHit](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(kernel)
-    }
-  }
-
   /** Millis per day — the batch granularity of [[nearDupTtlBatchOf]]
     * and the TTL unit of the `near_dup_ttl_batch` query. */
   private val DAY_MS = 86400000L
@@ -505,14 +157,19 @@ object StreamEtl {
     * every event_id at any test scale). */
   private val TTL_TWIN_OFF = 20000000L
 
-  /** BATCH TWIN of [[nearDupStreamEventTime]]'s accept/reject kernel —
-    * the oracle anchor the streaming path can't have directly (DuckDB
-    * doesn't run micro-batches). Input is the same feed shape
-    * `(id, ts_ms, text)`; batches are DAYS (`ts_ms div 86400000` —
-    * every row's event time lies inside its batch's day, the file-per-
-    * day replay the parity test drives), and the function reproduces
-    * the stream's hit set EXACTLY under that batching:
+  /** The hit set of an event-time, TTL-bounded near-duplicate gate,
+    * computed in batch. Input is a feed `(id, ts_ms, text)`, SimHash-
+    * banded 4×16 bits. Documents arrive in DAY batches (`ts_ms div
+    * 86400000`; every row's event time lies inside its batch's day). A
+    * (band, bucket) cell keeps its members until the watermark (the
+    * max ts_ms so far, delay 0) passes the cell's max event time +
+    * `ttlMs` in a batch in which the cell has no data; each arrival
+    * matches every live member within `maxHamming` bits. These are the
+    * semantics of a `flatMapGroupsWithState` stream under
+    * `EventTimeTimeout` replayed one day per micro-batch; StreamSpec
+    * pins the hit set such a stream produced on a corpus that evicts.
     *
+    * The window form:
     *  - watermark after the batch of day g = max ts_ms over global
     *    days <= g (delay 0), which for day-contained timestamps is
     *    just day g's max — the `cal` frame, with `lag(w, 2)` giving
@@ -532,7 +189,7 @@ object StreamEtl {
     *    needs no per-session reset;
     *  - within a session, every unordered pair at hamming <=
     *    `maxHamming` is emitted exactly once, ordered by arrival
-    *    ((day, id) — the kernel sorts each batch's rows by id).
+    *    (day, then id).
     *
     * Scale shape: one simhash aggregation, one (band,bucket,day)
     * groupBy, windows partitioned by (band,bucket) over <= n_days
@@ -787,158 +444,4 @@ object StreamEtl {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Stream-static enrichment join — the reference's per-row
-    * dimension lookups (`pull_report.pl`'s customer→project→file
-    * chain, SURVEY §2.3 J2/J3) re-expressed in the streaming path:
-    * each parsed line is joined against a STATIC asset-catalog
-    * DataFrame on `name`. Structured Streaming re-plans the static
-    * side every micro-batch (a catalog refresh between batches is
-    * picked up without restarting), and a small dim side broadcasts,
-    * so the stream side never shuffles. Left join + explicit default:
-    * an uncatalogued asset must flow through tagged, not vanish —
-    * the N/A-format rule (F3) applied to enrichment. */
-  def enrichedStream(spark: SparkSession, inputGlob: String,
-                     assetDim: DataFrame): DataFrame =
-    parseLines(spark.readStream.text(inputGlob))
-      .join(broadcast(assetDim), Seq("name"), "left")
-      .withColumn("category",
-        coalesce(col("category"), lit("uncategorized")))
-
-  /** Stream-STREAM interval join — correlates the two live server
-    * feeds the reference could only process in separate cron passes
-    * (real_parse.pl and web_parse.pl each own a format; SURVEY §3.3):
-    * a RealServer access joined to same-client Caudium web hits
-    * within ±30 minutes ("which streaming clients also pulled the
-    * web assets, live"). Both sides carry watermarks and the join
-    * condition carries the time range, so Spark bounds the buffered
-    * state on each side to watermark + range — the state-cleanup
-    * contract stream-stream joins require. Inner join: rows emit as
-    * soon as both sides arrive (append mode safe). */
-  def crossServerJoin(spark: SparkSession, rsGlob: String,
-                      webGlob: String): DataFrame = {
-    val r = parseLines(spark.readStream.text(rsGlob))
-      .select(col("client_ip_address").as("ip"), col("datetime").as("r_time"),
-        col("name").as("r_name"), col("bytes_sent").as("r_bytes"))
-      .withWatermark("r_time", "1 hour")
-    val w = parseWebLines(spark.readStream.text(webGlob))
-      .select(col("client_ip_address").as("w_ip"),
-        col("datetime").as("w_time"), col("name").as("w_name"),
-        col("bytes_sent").as("w_bytes"))
-      .withWatermark("w_time", "1 hour")
-    r.join(w, col("ip") === col("w_ip") &&
-        col("w_time") >= col("r_time") - expr("INTERVAL 30 MINUTES") &&
-        col("w_time") <= col("r_time") + expr("INTERVAL 30 MINUTES"))
-      .select(col("ip"), col("r_time"), col("w_time"),
-        col("r_name"), col("w_name"), col("r_bytes"), col("w_bytes"))
-  }
-
-  /** Streaming per-hour per-status counts with late-data drop — the
-    * §2.7 windowed-aggregation extension. Append mode: a window only
-    * emits once the watermark passes it (deterministic final counts). */
-  def hourlyCounts(spark: SparkSession, inputGlob: String): DataFrame =
-    parseLines(spark.readStream.text(inputGlob))
-      .withWatermark("datetime", "1 hour")
-      .groupBy(window(col("datetime"), "1 hour"), col("status_code"))
-      .agg(count(lit(1)).as("n"), sum(col("bytes_sent")).as("bytes"))
-      .select(col("window.start").as("window_start"), col("status_code"),
-        col("n"), col("bytes"))
-
-  /** Streaming per-client SESSION windows (30-minute inactivity gap)
-    * — the stream analog of the batch `sessionize` query: state is
-    * one open session per active client, merged as events arrive and
-    * closed (append-mode emit) once the watermark passes the gap.
-    * `session_window` keeps the state bounded the way the batch
-    * gaps-and-islands window cannot: the store holds only OPEN
-    * sessions, and a closed session's state is dropped at emit —
-    * exactly the semantics `mapGroupsWithState` would hand-build,
-    * from the built-in operator (checkpointable, AQE-planned,
-    * restart-safe for free). */
-  def sessionWindows(spark: SparkSession, inputGlob: String): DataFrame =
-    parseLines(spark.readStream.text(inputGlob))
-      .withWatermark("datetime", "1 hour")
-      .groupBy(session_window(col("datetime"), "30 minutes"),
-        col("client_ip_address"))
-      .agg(count(lit(1)).as("n_req"), sum(col("bytes_sent")).as("bytes"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("client_ip_address"), col("n_req"), col("bytes"))
-
-  private[graft] val CM_ROWS = 4
-  private[graft] val CM_COLS = 2048
-
-  /** The streamed key's Count-Min cell set — shared by the stream and
-    * its batch twin so StreamSpec's parity assertion is structural. */
-  private[graft] def cmCells(k: org.apache.spark.sql.Column) =
-    array((0 until CM_ROWS).map(r => struct(lit(r).as("r"),
-      (graft.util.Hashing.phash(k, s"scm${r}_") % CM_COLS).as("c"))): _*)
-
-  /** Streaming Count-Min sketch over asset names — the frequency
-    * sketch maintained INCREMENTALLY on the live feed (the streaming
-    * mirror of the batch `heavy_hitters_cm` operator). Each arriving
-    * line lands in [[CM_ROWS]] cells; the streaming aggregation's
-    * keyed state is the cell grid itself, so state is bounded at
-    * [[CM_ROWS]]·[[CM_COLS]] rows FOREVER — no watermark needed, no
-    * growth with stream length: the defining property of a sketch as
-    * streaming state. Counts accumulate across restarts/rotations via
-    * the checkpoint, and any key's frequency estimate is min over its
-    * cells, never an undercount — queryable mid-stream without
-    * stopping ingestion. */
-  def cmSketchStream(spark: SparkSession, inputGlob: String): DataFrame =
-    parseLines(spark.readStream.text(inputGlob))
-      .select(explode(cmCells(col("name"))).as("rc"))
-      .groupBy(col("rc.r").as("r"), col("rc.c").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-
-  case class HourAssess(status_code: Long, hour_epoch: Long, n: Long,
-    trail_sum: Long, trail_hours: Long, is_anomaly: Boolean)
-
-  /** Streaming rate-anomaly gate — the live mirror of the batch
-    * `rate_anomaly` operator (same rule: a full 24-hour baseline and
-    * the integer compare `n·24 > 2·trail`): per status code, a RING
-    * of the last 25 hourly counts rides as keyed state, each arriving
-    * hour re-emits its current assessment (update-mode upsert
-    * semantics — a late line corrects its hour's verdict on the next
-    * batch), and state prunes to the 25-hour horizon every batch, so
-    * store size is STRUCTURALLY ≤ 26 entries per status forever — the
-    * cmSketchStream bounded-state property, here via explicit
-    * pruning in `flatMapGroupsWithState` because the trailing-window
-    * compare needs cross-window state no built-in windowed agg can
-    * express.
-    *
-    * For a time-ordered feed (log rotation), an hour's trailing
-    * baseline always arrives no later than the hour itself, so the
-    * LAST emission per (status, hour) equals the batch assessment —
-    * StreamSpec pins that parity. */
-  def anomalyGateStream(spark: SparkSession, inputGlob: String)
-      : org.apache.spark.sql.Dataset[HourAssess] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    parseLines(spark.readStream.text(inputGlob))
-      .select(col("status_code").cast("long"),
-        (floor(unix_timestamp(col("datetime")) / 3600) * 3600).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Map[Long, Long], HourAssess](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (status, rows, state) =>
-          val prev = state.getOption.getOrElse(Map.empty[Long, Long])
-          val arrived = rows.foldLeft(Map.empty[Long, Long]) { (m, r) =>
-            m.updated(r._2, m.getOrElse(r._2, 0L) + 1L)
-          }
-          val merged = arrived.foldLeft(prev) { case (m, (h, c)) =>
-            m.updated(h, m.getOrElse(h, 0L) + c)
-          }
-          val horizon = merged.keys.max - 25L * 3600
-          state.update(merged.filter { case (h, _) => h >= horizon })
-          arrived.keys.toSeq.sorted.iterator.map { h =>
-            val trail = merged.view
-              .filterKeys(k => k >= h - 24L * 3600 && k <= h - 3600)
-            val ts = trail.values.sum
-            val th = trail.size.toLong
-            HourAssess(status, h, merged(h), ts, th,
-              th == 24L && merged(h) * 24 > ts * 2)
-          }
-      }
-  }
 }

@@ -138,6 +138,20 @@ object LineFuzz {
     }
   }
 
+  /** Drops the `k`-th `[…]` group with the space before it: a line
+    * keeps its shape with one bracket fewer (no client-info or guid
+    * bracket, or one stat block less). */
+  case class DropBracket(k: Int) extends Mutation {
+    def apply(l: Array[Byte]) = {
+      val groups = "\\s?\\[[^\\]]*\\]".r
+        .findAllMatchIn(new String(l, java.nio.charset.StandardCharsets.ISO_8859_1)).toSeq
+      if (groups.isEmpty) l else {
+        val g = groups(k % groups.size)
+        l.take(g.start) ++ l.drop(g.end)
+      }
+    }
+  }
+
   val mutationGen: Gen[Mutation] = Gen.frequency(
     3 -> Gen.choose(0.0, 1.0).map(Truncate),
     3 -> (for { o <- Gen.oneOf(true, false); k <- Gen.choose(0, 5) } yield Unbalance(o, k)),
@@ -146,6 +160,7 @@ object LineFuzz {
     1 -> Gen.oneOf(true, false).map(Huge),
     3 -> Gen.zip(Gen.choose(0.0, 1.0), Gen.oneOf(true, false)).map(StrayStat.tupled),
     2 -> Gen.choose(0, 40).map(StampSwap),
+    3 -> Gen.choose(0, 5).map(DropBracket),
     2 -> (for {
       k <- Gen.choose(0, 30)
       n <- Gen.choose(19, 25)

@@ -90,7 +90,14 @@ class ParseSpec extends AnyFunSuite {
     // past Long.MaxValue, and not a head-drop token (those start with 6 or 9)
     val twenty = "12345678901234567890"
     // in the stats middle a 20-digit token is absorbed: no slot binds it
-    val good = Seq(style5Line, tricky, style5Line.replace("[Stat1: 1042 ", s"[Stat1: $twenty "))
+    // fewer than three brackets: the first line has no guid bracket,
+    // the second no client-info bracket either; a missing one binds
+    // NULL instead of throwing
+    val twoBrackets = "1.2.3.4 - - [13/Oct/2002:09:04:38 -0700] " +
+      "\"GET /m/clip.rm RTSP/1.0\" 200 999 [i] 999 180 164 5 1 41"
+    val oneBracket = twoBrackets.replace("[i] ", "")
+    val good = Seq(style5Line, tricky, style5Line.replace("[Stat1: 1042 ", s"[Stat1: $twenty "),
+      twoBrackets, oneBracket)
     val bad = Seq(
       style5Line.take(style5Line.indexOf('"') - 3),             // cut before the request
       "10.0.1.7 - - [13/Oct/2002:09:04:38 -0700] \"GET /web/v7/t3.wmv HTTP/1.1\" " +
@@ -117,8 +124,9 @@ class ParseSpec extends AnyFunSuite {
       // lands in exactly one lane and no field expression throws
       def lanes(l: String): (Int, Int) = {
         val in = Seq(l).toDF("value")
-        (StreamEtl.parseLines(in).collect().length,
-          StreamEtl.rejectedLines(in).collect().length)
+        val n = StreamEtl.parseLines(in).collect().length
+        assert(Style5.accepted(in.withColumnRenamed("value", "line")).collect().length == n)
+        (n, StreamEtl.rejectedLines(in).collect().length)
       }
       good.foreach(l => assert(lanes(l) == (1, 0), s"good line not parsed: $l"))
       bad.foreach(l => assert(lanes(l) == (0, 1), s"bad line not rejected: '$l'"))
@@ -127,9 +135,15 @@ class ParseSpec extends AnyFunSuite {
       val parsed = StreamEtl.parseLines(all).collect()
       val rejected = StreamEtl.rejectedLines(all).collect().map(_.getString(0))
       assert(parsed.map(_.getAs[String]("client_ip_address")).sorted.toSeq ==
-        Seq("1.2.3.4", "66.31.5.190", "66.31.5.190"))
-      assert(parsed.map(_.getAs[Long]("presentation_id")).toSeq == Seq(41L, 41L, 41L))
+        Seq("1.2.3.4", "1.2.3.4", "1.2.3.4", "66.31.5.190", "66.31.5.190"))
+      assert(parsed.map(_.getAs[Long]("presentation_id")).toSeq == Seq.fill(5)(41L))
       assert(rejected.sorted.toSeq == bad.sorted)
+      val brackets = Style5.accepted(Seq(twoBrackets, oneBracket).toDF("line"))
+        .select("line", "client_info", "client_guid", "stat_blocks").collect()
+        .map(r => r.getString(0) -> (Option(r.getString(1)), Option(r.getString(2)),
+          r.getSeq[String](3))).toMap
+      assert(brackets == Map(twoBrackets -> (Some("i"), None, Seq()),
+        oneBracket -> (None, None, Seq())))
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 

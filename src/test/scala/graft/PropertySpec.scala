@@ -125,8 +125,8 @@ class PropertySpec extends AnyFunSuite {
        "nothing throws under ANSI") {
     // one to three mutations per line (truncation, unbalanced
     // brackets, non-UTF-8 bytes, ~1 MB growth, stray stat blocks,
-    // digit/letter swaps in the timestamp, 19-25 digit tokens); a
-    // fifth of the lines stay valid
+    // digit/letter swaps in the timestamp, 19-25 digit tokens, a
+    // dropped bracket group); a fifth of the lines stay valid
     val (lines, valid) = corpus(recGen, render, 400, 2718L)
     val file = writeLines(lines, "graft_fuzz")
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
@@ -135,8 +135,13 @@ class PropertySpec extends AnyFunSuite {
       val text = spark.read.text(file)
       assert(text.count() == lines.size, "the text source split or merged lines")
       // collect every parsed field: a throwing cast or element_at fails here
+      val accepted = Style5.accepted(text.withColumnRenamed("value", "line")).collect()
       val parsed = StreamEtl.parseLines(text).collect()
       val rejected = StreamEtl.rejectedLines(text).collect()
+      assert(accepted.length == parsed.length, "parseLines and Style5.accepted disagree")
+      // a dropped bracket group reaches the lane with no guid bracket
+      assert(accepted.exists(r => r.isNullAt(r.fieldIndex("client_guid"))),
+        "no accepted line lacks the guid bracket")
       assert(parsed.length + rejected.length == lines.size,
         s"parsed ${parsed.length} + rejected ${rejected.length} != ${lines.size} lines")
       // no valid line is rejected, and the mutations reach both lanes
@@ -162,8 +167,11 @@ class PropertySpec extends AnyFunSuite {
     try {
       val text = spark.read.text(file)
       assert(text.count() == lines.size, "the text source split or merged lines")
-      val parsed = StreamEtl.parseWebLines(text).collect()
+      // collect every parsed field
+      val parsed = WebLog.parsed(text.withColumnRenamed("value", "line")).collect()
       val rejected = text.filter(!WebLog.wellFormed(col("value"))).collect()
+      assert(StreamEtl.parseWebLines(text).count() == parsed.length,
+        "parseWebLines and WebLog.parsed disagree")
       assert(parsed.length + rejected.length == lines.size,
         s"parsed ${parsed.length} + rejected ${rejected.length} != ${lines.size} lines")
       assert(rejected.forall(r => !valid.contains(r.getString(0))), "a valid line was rejected")
