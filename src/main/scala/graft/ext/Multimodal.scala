@@ -7,11 +7,11 @@ import graft.util.Hashing
 
 /** Multimodal-column plumbing (BASELINE.json north-star): media as
   * opaque `binary` columns with typed metadata, batch-shaped
-  * decode / feature-extract / frame-sample operators.
+  * decode / feature-extract operators.
   *
-  * The decode kernels ([[decodeImages]], [[decodeFrames]],
-  * [[mediaDecode]]) do REAL bytes-to-pixels decoding of binary P6
-  * PPM images — header parse + raster walk — inside the production
+  * The decode kernels ([[decodeImages]], [[mediaDecode]]) do REAL
+  * bytes-to-pixels decoding of binary P6 PPM images — header parse +
+  * raster walk — inside the production
   * `mapPartitions` shape (one decoder scope per partition, streaming
   * over rows — exactly where a JNI/FFmpeg/torch call would sit for
   * compressed codecs this container doesn't ship). The decoded
@@ -202,18 +202,17 @@ object Multimodal {
   /** The mapPartitions decode kernel — REAL bytes-to-pixels decoding
     * (P6 PPM: header parse + raster walk), in the exact production
     * shape: one decoder scope per partition, rows streamed through
-    * it, `repartition(parallelism)` sizing the decode to the decoder
-    * count rather than the data size (`parallelism <= 0`, the
-    * default, takes the session's `defaultParallelism` — the repo's
-    * repartition convention — so the kernels saturate a local master
-    * and any cluster alike). A JPEG/H.264 deployment swaps
+    * it, repartitioned to the session's `defaultParallelism` (the
+    * repo's repartition convention), which sizes the decode to the
+    * decoder count rather than the data size, so the kernels saturate
+    * a local master and any cluster alike. A JPEG/H.264 deployment swaps
     * the parser body for the codec call; schema, batching and
     * partition layout stay as they are here. */
-  def decodeImages(spark: SparkSession, dir: String, parallelism: Int = -1): Dataset[DecodedImage] = {
+  def decodeImages(spark: SparkSession, dir: String): Dataset[DecodedImage] = {
     import spark.implicits._
     val m = ppmMediaTable(spark, dir)
       .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
+      .repartition(spark.sparkContext.defaultParallelism)
     m.as[(Long, Array[Byte])].mapPartitions { rows =>
       rows.map { case (id, blob) =>
         val (w, h, off) = parsePpmHeader(blob)
@@ -276,11 +275,11 @@ object Multimodal {
     * ASCII source, so a half-pixel error anywhere in the walk
     * hash-mismatches. Ceil dimensions ((w+1)/2) keep odd sizes
     * honest. */
-  def resizeImages(spark: SparkSession, dir: String, parallelism: Int = -1): Dataset[ResizedImage] = {
+  def resizeImages(spark: SparkSession, dir: String): Dataset[ResizedImage] = {
     import spark.implicits._
     val m = ppmMediaTable(spark, dir)
       .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
+      .repartition(spark.sparkContext.defaultParallelism)
     m.as[(Long, Array[Byte])].mapPartitions { rows =>
       rows.map { case (id, blob) =>
         val (w, h, off) = parsePpmHeader(blob)
@@ -330,29 +329,6 @@ object Multimodal {
        SELECT media_id, width, height, out_w, out_h,
          ${chanSql(0)} AS sum_r, ${chanSql(1)} AS sum_g, ${chanSql(2)} AS sum_b
        FROM m ORDER BY media_id"""
-  }
-
-  /** Per-scanline brightness sampling over the decoded raster — the
-    * frame-sampling shape (every 2nd scanline stands in for every
-    * Nth video frame). Brightness is the scanline's mean byte in
-    * [0, 1]; REAL pixels via the same P6 parse as [[decodeImages]]. */
-  case class FrameFeature(media_id: Long, frame_idx: Int, brightness: Double)
-
-  def decodeFrames(spark: SparkSession, dir: String, parallelism: Int = -1): Dataset[FrameFeature] = {
-    import spark.implicits._
-    val m = ppmMediaTable(spark, dir)
-      .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
-    m.as[(Long, Array[Byte])].mapPartitions { rows =>
-      rows.flatMap { case (id, blob) =>
-        val (w, h, off) = parsePpmHeader(blob)
-        (0 until h by 2).iterator.map { line =>
-          var k = 0; var s = 0L
-          while (k < w * 3) { s += (blob(off + line * w * 3 + k) & 0xff); k += 1 }
-          FrameFeature(id, line, s.toDouble / (w * 3) / 255.0)
-        }
-      }
-    }
   }
 
   // ---- Real decode path: RIFF/WAVE 16-bit PCM audio -----------------
@@ -482,12 +458,11 @@ object Multimodal {
     * interleaved two's-complement sample walk accumulating per-
     * channel sum/min/max/sum-of-squares. An MP3/AAC deployment swaps
     * the walk for the codec call; schema and layout stay. */
-  def decodeAudio(spark: SparkSession, dir: String,
-                  parallelism: Int = -1): Dataset[DecodedAudio] = {
+  def decodeAudio(spark: SparkSession, dir: String): Dataset[DecodedAudio] = {
     import spark.implicits._
     val m = wavMediaTable(spark, dir)
       .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
+      .repartition(spark.sparkContext.defaultParallelism)
     m.as[(Long, Array[Byte])].mapPartitions { rows =>
       rows.flatMap { case (id, blob) =>
         val (c, rate, off, len) = parseWavHeader(blob)
@@ -539,12 +514,11 @@ object Multimodal {
     * integers the oracle recomputes from the ASCII source (longest
     * run via a cur·1000+best encoded list_reduce). Same kernel shape
     * as [[decodeAudio]]. */
-  def audioSegments(spark: SparkSession, dir: String,
-                    parallelism: Int = -1): Dataset[AudioSegments] = {
+  def audioSegments(spark: SparkSession, dir: String): Dataset[AudioSegments] = {
     import spark.implicits._
     val m = wavMediaTable(spark, dir)
       .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism)
+      .repartition(spark.sparkContext.defaultParallelism)
     m.as[(Long, Array[Byte])].mapPartitions { rows =>
       rows.map { case (id, blob) =>
         val (c, _, off, len) = parseWavHeader(blob)
@@ -700,22 +674,19 @@ object Multimodal {
     * scope as [[decodeImages]] (one decoder per partition, rows
     * streamed); a production pipeline swaps the bucket fold for a
     * DCT/pHash over the decoded pixels and keeps the shape. */
-  def fingerprintImages(spark: SparkSession, dir: String,
-                        parallelism: Int = -1): Dataset[ImageFingerprint] =
-    fingerprintImagesOf(ppmMediaTwinTable(spark, dir), parallelism)
+  def fingerprintImages(spark: SparkSession, dir: String): Dataset[ImageFingerprint] =
+    fingerprintImagesOf(ppmMediaTwinTable(spark, dir))
 
   /** [[fingerprintImages]] over an arbitrary `(media_id, blob)`
     * frame — the Of-variant that lets specs fingerprint OTHER media
     * corpora (e.g. [[ppmPhashTwinTable]]'s noise twins) with the
     * same kernel. */
-  private[graft] def fingerprintImagesOf(m0: DataFrame,
-                                         parallelism: Int = -1): Dataset[ImageFingerprint] = {
+  private[graft] def fingerprintImagesOf(m0: DataFrame): Dataset[ImageFingerprint] = {
     val spark = m0.sparkSession
     import spark.implicits._
     val m = m0
       .select(col("media_id").cast("long"), col("blob"))
-      .repartition(if (parallelism > 0) parallelism
-                   else spark.sparkContext.defaultParallelism)
+      .repartition(spark.sparkContext.defaultParallelism)
     m.as[(Long, Array[Byte])].mapPartitions { rows =>
       rows.map { case (id, blob) =>
         val (w, h, off) = parsePpmHeader(blob)
@@ -916,7 +887,7 @@ object Multimodal {
     * check is load-bearing: Σ_i C(k,i) = 0 for every k ≥ 1 survives
     * the ×64 rounding (verified over all n here), which makes every
     * non-DC coefficient EXACTLY invariant under a uniform luminance
-    * shift — the provable brightness-invariance [[phashImages]]
+    * shift — the provable brightness-invariance [[phashImagesOf]]
     * documents. */
   private val cosTables: Map[Int, Array[Array[Long]]] =
     (3 to 8).map { n =>
@@ -996,11 +967,9 @@ object Multimodal {
     * total-luminance band gate (its aHash signature is also
     * shift-invariant, but `total` moves by Δ·npix and the twin exits
     * the ±1 band probe). That band-free matchability is the
-    * perturbation class this operator adds over the aHash rung. */
-  def phashImages(spark: SparkSession, dir: String): Dataset[PhashFingerprint] =
-    phashImagesOf(ppmPhashTwinTable(spark, dir))
-
-  /** [[phashImages]] over an arbitrary `(media_id, blob)` frame. */
+    * perturbation class this operator adds over the aHash rung. Runs
+    * over any `(media_id, blob)` frame; [[mediaPhash]] feeds it
+    * [[ppmPhashTwinTable]]. */
   private[graft] def phashImagesOf(m0: DataFrame): Dataset[PhashFingerprint] = {
     val spark = m0.sparkSession
     import spark.implicits._

@@ -576,29 +576,8 @@ object Similarity {
 
   /** [[dedupSemantic]] over an arbitrary (vec_id, embedding) frame —
     * the ScaleTrial2 entry point. vec_ids must stay below the 1,000,000
-    * twin offset.
-    *
-    * `hierarchical = true` switches the cell ASSIGNMENT from the flat
-    * N·C scan to the coarse-then-fine rung: route each vector to the
-    * nearest of ~√C coarse centroids (the first ⌈√C⌉ cells), then
-    * rank only that coarse cell's children (~√C on average) — 2·N·√C
-    * distance evaluations instead of N·C = N·√N. At 10⁹ vectors that
-    * is the difference between ~3×10¹³ and ~2×10⁸·√C dot products.
-    * The routing is an approximation (a vector whose true nearest
-    * fine centroid lives under a different coarse parent mis-routes),
-    * so the ORACLED query keeps the flat assignment and the rung is
-    * exercised by ScaleTrial2, which measures both the wall-clock
-    * growth and the dup-pair recall against the flat verify —
-    * measured at 10×: 99.8% dup-pair recall (2,819/2,825), with the
-    * trade that mis-routing skews cell sizes, growing the within-cell
-    * candidate count ~2.5× over the flat assignment's (the verify
-    * stays cell-bounded either way; at 10⁹ vectors the N·√N→N·√C
-    * assignment saving dominates that constant). All
-    * levels stay in-query: the coarse count ⌈√C⌉ derives from the
-    * same 1-row broadcast as C itself, and every centroid table is a
-    * bounded broadcast — no driver-side probes. */
+    * twin offset. `autoRung = false` pins the flat assignment. */
   private[graft] def dedupSemanticOf(base: DataFrame,
-                                     hierarchical: Boolean = false,
                                      autoRung: Boolean = true): DataFrame = {
     val spark = base.sparkSession
     val twins = base.filter(col("vec_id") % 7 === 0)
@@ -628,7 +607,7 @@ object Similarity {
         .withColumn("rk", row_number().over(wA)).filter(col("rk") === 1)
         .select(col("vec_id"), col("cid").as("cell"))
     val cells =
-      if (!hierarchical && autoRung) {
+      if (autoRung) {
         // rung knob: 1-row count broadcast, no driver probe. Gating
         // the CENTROID side empties the flat rung's N×C join at
         // runtime (one O(N) scan survives); the IVF side gates its
@@ -642,35 +621,7 @@ object Similarity {
           .filter(col("n_total") > SEM_RUNG_BOUND)
           .select(col("vec_id"), col("qv"))
         flatCellsOver(centsFlat).unionByName(ivfCellsOf(eIvf, ivfCentRows(e)))
-      } else if (!hierarchical) {
-        flatCellsOver(cents)
-      } else {
-        // coarse level: the first ⌈√C⌉ centroids, derived from the
-        // same 1-row n_cells broadcast (floor(sqrt) is bit-stable)
-        val ncoarse = ncells.select(greatest(lit(8L),
-          ceil(sqrt(col("n_cells").cast("double"))).cast("long")).as("n_coarse"))
-        val coarse = cents.crossJoin(broadcast(ncoarse))
-          .filter(col("cid") < col("n_coarse"))
-          .select(col("cid").as("coid"), col("cv").as("cov"))
-        // each fine centroid's parent = its nearest coarse centroid
-        // (C·√C dots over two bounded broadcasts)
-        val wP = Window.partitionBy(col("cid")).orderBy(col("pcos").desc, col("coid"))
-        val parents = cents.crossJoin(broadcast(coarse))
-          .withColumn("pcos", ccosTo(col("cv"), col("cov")))
-          .withColumn("rk", row_number().over(wP)).filter(col("rk") === 1)
-          .select(col("cid"), col("cv"), col("coid").as("parent"))
-        // route: nearest coarse per vector (N·√C dots) ...
-        val wR = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("coid"))
-        val routed = e.crossJoin(broadcast(coarse))
-          .withColumn("ccos", ccosTo(col("qv"), col("cov")))
-          .withColumn("rk", row_number().over(wR)).filter(col("rk") === 1)
-          .select(col("vec_id"), col("qv"), col("coid").as("parent"))
-        // ... then rank only the chosen parent's children (~√C each)
-        routed.join(broadcast(parents), Seq("parent"))
-          .withColumn("ccos", ccosTo(col("qv"), col("cv")))
-          .withColumn("rk", row_number().over(wA)).filter(col("rk") === 1)
-          .select(col("vec_id"), col("cid").as("cell"))
-      }
+      } else flatCellsOver(cents)
     semCellRollup(cells, e)
   }
 

@@ -98,29 +98,3 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Star-schema column layouts inferred from the reference's positional
-  * INSERTs (SURVEY.md §1.3). Kept as plain column-name lists — the ETL
-  * derives every satellite from one wide parsed DataFrame, so these
-  * are projection contracts, not storage schemas.
-  */
-object StarSchema {
-  /** `/root/reference/real_parse.pl:96-106` (9 cols; PK omitted — see
-    * SURVEY.md §7.5 on surrogate keys). */
-  val access: Seq[String] = Seq(
-    "client_ip_address", "identuser", "authuser", "datetime",
-    "gmt_offset", "logging_style", "stats_mask", "server_type")
-
-  /** `/root/reference/real_parse.pl:134-147`. */
-  val file: Seq[String] = Seq(
-    "method", "path", "name", "protocol_version", "status_code",
-    "bytes_sent", "file_size", "file_time", "sent_time",
-    "presentation_id")
-
-  /** `/root/reference/real_parse.pl:262-274`. */
-  val client: Seq[String] = Seq(
-    "client_info", "platform", "os_version", "client_version", "type",
-    "distribution", "language", "cpu", "embedded", "client_guid")
-
-  /** `/root/reference/real_parse.pl:169-176`. */
-  val network: Seq[String] = Seq("resends", "failed_resends")
-}

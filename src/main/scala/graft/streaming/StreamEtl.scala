@@ -344,104 +344,4 @@ object StreamEtl {
        WHERE bit_count(xor(l.simhash, r.simhash)) <= 3
        ORDER BY band, first_id, second_id"""
   }
-
-  /** Streaming → JDBC with exactly-once semantics — the reference's
-    * literal job ("parse logs, INSERT INTO MySQL",
-    * `real_parse.pl:96-177`) in its modern shape: `foreachBatch` with
-    * batch-id scrub-then-append. The checkpoint makes micro-batch
-    * REPLAY the failure mode (a batch can be re-run after a crash
-    * between the JDBC write and the offset commit); tagging every row
-    * with its `batch_id` and deleting that batch's rows before
-    * re-appending makes the write idempotent — the standard
-    * exactly-once recipe for non-transactional streaming sinks, and
-    * the distributed answer to the reference's `LOCK TABLES` (S12).
-    * Batched inserts (batchsize) like the batch JDBC sink; the DELETE
-    * is one indexed statement per (replayed) batch, not per row. */
-  def jdbcIngest(spark: SparkSession, inputGlob: String, checkpointDir: String,
-                 url: String, table: String): StreamingQuery =
-    parseLines(spark.readStream.text(inputGlob))
-      .select(col("client_ip_address"), col("datetime"),
-        col("presentation_id"), col("bytes_sent"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          // First batch: the table doesn't exist yet (the append below
-          // creates it), so probe the catalog instead of swallowing
-          // SQLExceptions — a transient DELETE failure during a REPLAY
-          // must fail the batch, or the re-append would double rows.
-          // The probe must honor a schema-qualified dbtable: match on
-          // (schema, name), or a bare name would never match and the
-          // scrub would silently skip — exactly the double-append the
-          // probe exists to prevent.
-          val (schemaPart, namePart) = table.split("\\.") match {
-            case Array(s, t) => (Some(s), t)
-            // unqualified: scope to the CONNECTION's current schema
-            // (where the unqualified DELETE/append will act) — a
-            // same-named table in another schema must not count. A
-            // driver that reports NO current schema leaves that scope
-            // undefined; degrading to a name-only match across all
-            // schemas would be exactly the cross-schema false positive
-            // this probe exists to prevent, so fail loudly instead.
-            case _ =>
-              val cur = conn.getSchema
-              require(cur != null,
-                s"jdbcIngest: the JDBC driver for $url reports no " +
-                  "current schema, so an unqualified dbtable " +
-                  s"('$table') cannot be scoped for the replay scrub; " +
-                  "use a schema-qualified dbtable")
-              (Some(cur), table)
-          }
-          // Narrowed catalog probe: pass the table name as the
-          // tableNamePattern instead of enumerating every table in the
-          // database per micro-batch. JDBC metadata patterns are
-          // case-SENSITIVE against the stored form and engines
-          // case-fold unquoted DDL identifiers differently (Derby →
-          // upper), so try the distinct case variants; the row filter
-          // stays equalsIgnoreCase because `_` in a pattern is a
-          // single-char wildcard and may over-match.
-          def probe(sp: String, np: String): Boolean = {
-            val rs = conn.getMetaData.getTables(null, sp, np,
-              Array("TABLE"))
-            try Iterator.continually(rs).takeWhile(_.next()).exists { r =>
-              r.getString("TABLE_NAME").equalsIgnoreCase(namePart) &&
-                schemaPart.forall(s =>
-                  s.equalsIgnoreCase(r.getString("TABLE_SCHEM")))
-            }
-            finally rs.close()
-          }
-          val exists = {
-            val schemaPats =
-              schemaPart.toSeq.flatMap(s =>
-                Seq(s, s.toUpperCase, s.toLowerCase).distinct)
-            val namePats =
-              Seq(namePart, namePart.toUpperCase, namePart.toLowerCase)
-                .distinct
-            schemaPats.exists(sp => namePats.exists(np => probe(sp, np)))
-          }
-          if (exists) {
-            // Spark's JDBC writer passes the TABLE name through raw but
-            // quotes every COLUMN name per the url's dialect — the
-            // scrub must match: unquoted table (engine case-folding
-            // applies as at CREATE), dialect-quoted column (a bare
-            // batch_id would fold away from the quoted form).
-            val bid = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-              .quoteIdentifier("batch_id")
-            val st = conn.createStatement()
-            try st.executeUpdate(
-              s"DELETE FROM $table WHERE $bid = $batchId")
-            finally st.close()
-          }
-        } finally conn.close()
-        // No hardcoded driver: DriverManager resolves it from the url
-        // (same mechanism as the scrub connection above).
-        batch.withColumn("batch_id", lit(batchId))
-          .write.format("jdbc")
-          .option("url", url).option("dbtable", table)
-          .option("batchsize", "500")
-          .mode("append").save()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -82,19 +82,6 @@ object ScaleTrial2 {
     val (epN, etN) = trial(f"dedup_embed   ${mult}%2dx", graft.ext.Similarity.dedupEmbeddingOf(ecorpus(mult)))
     val (cp1, ct1) = semTrial("dedup_semantic 1x", graft.ext.Similarity.dedupSemanticOf(ecorpus(1), autoRung = false))
     val (cpN, ctN) = semTrial(f"dedup_semantic${mult}%2dx", graft.ext.Similarity.dedupSemanticOf(ecorpus(mult), autoRung = false))
-    // hierarchical assignment rung: coarse-then-fine routing cuts the
-    // assignment from N·C = N·√N to 2·N·√C evaluations; measure its
-    // growth AND its dup-pair recall against the flat verify
-    def dupPairs(df: DataFrame): Long =
-      df.agg(sum(col("n_dup_pairs")).cast("long")).head().getLong(0)
-    val (hp1, ht1) = semTrial("sem_hier       1x",
-      graft.ext.Similarity.dedupSemanticOf(ecorpus(1), hierarchical = true))
-    val (hpN, htN) = semTrial(f"sem_hier      ${mult}%2dx",
-      graft.ext.Similarity.dedupSemanticOf(ecorpus(mult), hierarchical = true))
-    val flatDups = dupPairs(graft.ext.Similarity.dedupSemanticOf(ecorpus(mult), autoRung = false))
-    val hierDups = dupPairs(graft.ext.Similarity.dedupSemanticOf(ecorpus(mult), hierarchical = true))
-    println(f"SCALE2 sem_hier recall at ${mult}x: $hierDups%,d / $flatDups%,d dup pairs " +
-      f"(${100.0 * hierDups / math.max(flatDups, 1)}%.1f%%)")
     val (fp1, ft1) = trial("fuzzy_edit     1x", Dedup.fuzzyEditOf(corpus(1)))
     val (fpN, ftN) = trial(f"fuzzy_edit    ${mult}%2dx", Dedup.fuzzyEditOf(corpus(mult)))
     println(f"SCALE2 simhash: ${mult}x corpus -> ${spN.toDouble / math.max(sp1, 1)}%.1fx pairs, " +
@@ -106,8 +93,6 @@ object ScaleTrial2 {
     println(f"SCALE2 semantic:${mult}x corpus -> ${cpN.toDouble / math.max(cp1, 1)}%.1fx candidates, " +
       f"${ctN / ct1}%.1fx time (C=sqrt(N) theory ~${math.pow(mult, 1.5)}%.1fx, " +
       f"fixed-C quadratic ~${mult * mult}x)")
-    println(f"SCALE2 sem_hier:${mult}x corpus -> ${hpN.toDouble / math.max(hp1, 1)}%.1fx candidates, " +
-      f"${htN / ht1}%.1fx time (N*sqrt(C) assignment theory ~${math.pow(mult, 1.25)}%.1fx)")
     println(f"SCALE2 fuzzy:   ${mult}x corpus -> ${fpN.toDouble / math.max(fp1, 1)}%.1fx pairs, " +
       f"${ftN / ft1}%.1fx time (linear target ~${mult}x, quadratic ~${mult * mult}x)")
     spark.stop()

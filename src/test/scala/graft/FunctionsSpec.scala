@@ -265,12 +265,16 @@ class FunctionsSpec extends AnyFunSuite {
       composedWin.as("ref"))
     assert(both.filter(not(col("fused") <=> col("ref"))).count() == 0,
       "fused winnowing diverges from the composed form")
-    // edges: n < w -> single global min; singleton array
+    // edges: n < w -> single global min; singleton array; and one
+    // hand-computed n >= w case: windows [9,3,7,8] -> 3, [3,7,8,1] -> 1
     val r = spark.range(1).select(
       graft.functions.WindowMinima(array(lit(9L), lit(3L), lit(7L)), 4).as("short"),
-      graft.functions.WindowMinima(array(lit(5L)), 4).as("one")).head()
+      graft.functions.WindowMinima(array(lit(5L)), 4).as("one"),
+      graft.functions.WindowMinima(
+        array(lit(9L), lit(3L), lit(7L), lit(8L), lit(1L)), 4).as("two")).head()
     assert(r.getSeq[Long](0) == Seq(3L))
     assert(r.getSeq[Long](1) == Seq(5L))
+    assert(r.getSeq[Long](2) == Seq(1L, 3L))
   }
 
   test("LongDot and HyperplaneBucket stay inside whole-stage codegen") {

@@ -130,42 +130,6 @@ class StreamSpec extends AnyFunSuite {
     assert(rows.keySet == Set("ok", "not_found"))   // every status mapped
   }
 
-  test("jdbcIngest is exactly-once into JDBC across rotation AND batch replay") {
-    val base = Files.createTempDirectory("graft_jdbc_stream").toString
-    val in = s"$base/in"; val cp = s"$base/cp"
-    new java.io.File(in).mkdirs()
-    val url = s"jdbc:derby:$base/db;create=true"
-    def tableCount(): Long =
-      spark.read.format("jdbc").option("url", url).option("dbtable", "access_stream")
-        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").load().count()
-
-    val lines = graft.parse.Style5.renderedLines(spark, sf).cache()
-    lines.filter(col("event_id") < 300).select("line")
-      .coalesce(1).write.mode("overwrite").text(s"$in/f1")
-    StreamEtl.jdbcIngest(spark, s"$in/*", cp, url, "access_stream").awaitTermination()
-    assert(tableCount() == 300)
-
-    // rotation: restart ingests ONLY the new file
-    lines.filter(col("event_id") >= 300 && col("event_id") < 500).select("line")
-      .coalesce(1).write.mode("overwrite").text(s"$in/f2")
-    StreamEtl.jdbcIngest(spark, s"$in/*", cp, url, "access_stream").awaitTermination()
-    assert(tableCount() == 500)
-
-    // replay: remove the LAST COMMIT MARKER only (offsets survive) —
-    // exactly the crash-between-JDBC-write-and-offset-commit state.
-    // The restart re-runs the same batch id over the same file, and
-    // the scrub-then-append must leave no duplicates.
-    val commits = new java.io.File(s"$cp/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(commits.nonEmpty, "no commit markers found — checkpoint layout drifted")
-    val last = commits.last
-    val crc = new java.io.File(last.getParentFile, s".${last.getName}.crc")
-    assert(last.delete())
-    if (crc.exists()) crc.delete()
-    StreamEtl.jdbcIngest(spark, s"$in/*", cp, url, "access_stream").awaitTermination()
-    assert(tableCount() == 500, "batch replay duplicated rows in the JDBC sink")
-  }
-
   test("nearDupTtlBatchOf reproduces the event-time stream's hit set exactly") {
     // the hit set a flatMapGroupsWithState stream under EventTimeTimeout
     // (4x16-bit SimHash bands, ttl one day, watermark delay 0) produced
