@@ -14,6 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Every top-level class, object or trait is referenced outside its
   *    own file. Objects that define `def main` are entry points and
   *    exempt.
+  *  - Every such `def` or `val` of the ingest entry objects (`StreamEtl`,
+  *    `LogSources`) is referenced outside its own file.
   * Specs do not count as callers, nor do comment lines. A declaration
   * that only a spec reaches is code no job runs: delete it with its
   * spec, or give it a caller. */
@@ -33,6 +35,8 @@ class EntryGuardSpec extends AnyFunSuite {
     """^(?:(?:final|sealed|abstract|case|implicit) )*(object|class|trait) (\w+)""".r
   /** An object member (two-space indent) with no access modifier. */
   private val publicMember = """^  (?:(?:lazy|final|implicit) )*(?:def|val|case class) (\w+)""".r
+  /** The same, without its case classes: the ingest objects' entry points. */
+  private val publicDefOrVal = """^  (?:(?:lazy|final|implicit) )*(?:def|val) (\w+)""".r
 
   /** Lines of `f`, comment lines blanked so line numbers stay put. */
   private def code(f: Path): IndexedSeq[String] =
@@ -43,15 +47,47 @@ class EntryGuardSpec extends AnyFunSuite {
 
   private case class Decl(file: Path, line: Int, key: String, name: String, member: Boolean)
 
+  /** Every `.scala` file under `src/main/scala` and `perfbench/src`. */
+  private def sources(): Seq[Path] = {
+    val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
+    roots.flatMap(r => Files.walk(r).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList)
+  }
+
+  test("every public StreamEtl / LogSources entry point has a caller outside its file") {
+    // the ingest entry objects are held to the stricter rule: a caller in another file
+    val entryFiles = Seq(
+      "src/main/scala/graft/streaming/StreamEtl.scala" -> "StreamEtl",
+      "src/main/scala/graft/sources/LogSources.scala" -> "LogSources")
+      .map { case (f, o) => Paths.get(f) -> o }
+    val all = sources()
+    entryFiles.foreach { case (f, _) => assert(all.contains(f), s"$f was not scanned") }
+    val text: Map[Path, String] = all.map(f => f -> code(f).mkString("\n")).toMap
+    val declared = entryFiles.map { case (f, o) =>
+      val names = code(f).flatMap(l => publicDefOrVal.findFirstMatchIn(l).map(_.group(1))).distinct
+      assert(names.nonEmpty, s"no public member found in $f")
+      (f, o, names)
+    }
+    def called(name: String, own: Path): Boolean = {
+      val ref = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
+      all.exists(f => f != own && ref.findFirstIn(text(f)).isDefined)
+    }
+    val uncalled = for {
+      (f, o, names) <- declared
+      n <- names if !allowed.contains(s"$o.$n") && !called(n, f)
+    } yield s"$f: $n"
+    if (uncalled.nonEmpty)
+      fail("public entry points with no caller outside their file in src/main/scala or " +
+        "perfbench/src (delete them, or give them a caller):\n" + uncalled.mkString("\n"))
+  }
+
   test("every declaration in src/main/scala has a caller in src/main/scala or perfbench/src") {
     val mainRoot = Paths.get("src/main/scala")
-    val roots = Seq(mainRoot, Paths.get("perfbench/src"))
-    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
-    val sources = roots.flatMap(r => Files.walk(r).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList)
-    val mains = sources.filter(_.startsWith(mainRoot))
+    val all = sources()
+    val mains = all.filter(_.startsWith(mainRoot))
     assert(mains.size > 40, s"scanned only ${mains.size} files under $mainRoot")
-    val text: Map[Path, IndexedSeq[String]] = sources.map(f => f -> code(f)).toMap
+    val text: Map[Path, IndexedSeq[String]] = all.map(f => f -> code(f)).toMap
 
     val decls: Seq[Decl] = mains.flatMap { f =>
       val lines = text(f)
