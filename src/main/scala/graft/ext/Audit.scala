@@ -277,8 +277,6 @@ object Audit {
     * no benefit — conditional aggregation is the one-pass form.) */
   def profileDrift(spark: SparkSession, dir: String): DataFrame = {
     val cut = to_timestamp(lit(DRIFT_CUT))
-    def idiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val byClass = Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .agg(
@@ -294,8 +292,8 @@ object Audit {
       .select(col("o_orderpriority"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
         col("price_a"), col("price_b"),
-        idiv(col("n_a") * 1000000L, col("t_a")).as("share_a_ppm"),
-        idiv(col("n_b") * 1000000L, col("t_b")).as("share_b_ppm"))
+        graft.util.Exact.floorDiv(col("n_a") * 1000000L, col("t_a")).as("share_a_ppm"),
+        graft.util.Exact.floorDiv(col("n_b") * 1000000L, col("t_b")).as("share_b_ppm"))
       .withColumn("shift_ppm",
         abs(col("share_a_ppm") - col("share_b_ppm")))
       .orderBy(col("o_orderpriority"))

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.util.Hashing
+import graft.util.{Exact, Hashing}
 
 /** Corpus-assembly operators — the composition layer of a
   * training-data pipeline over the `documents` table: the quality →
@@ -19,8 +19,7 @@ import graft.util.Hashing
   */
 object Corpus {
 
-  private def toks(c: Column): Column = TextAnalysis.toks(c)
-  private def toksSql(x: String): String = TextAnalysis.toksSql(x)
+  import TextAnalysis.{toks, toksSql}
 
   /** Union of all [[TextAnalysis]] language-marker words — derived,
     * not copied, so the funnel's language gate can never drift from
@@ -527,12 +526,6 @@ object Corpus {
        FROM (SELECT unnest(list_distinct(${toksSql("text")})) AS token FROM documents)
        GROUP BY token ORDER BY df DESC, token LIMIT 20"""
 
-  /** Exact floor division on non-negative longs, portable (same
-    * construction as graft.ext.Graph.idiv: reduce the numerator to a
-    * multiple of the divisor, then the double division is exact). */
-  private def idiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   private val IMP_TARGET = "src0"
 
   /** Importance weights for domain-targeted data selection — the
@@ -575,11 +568,11 @@ object Corpus {
     occ.join(stats, Seq("token"))
       .crossJoin(broadcast(totals))
       .withColumn("ratio_ppm",
-        idiv(lit(1000000L) * col("cnt_t") * col("n_c"), col("cnt_c") * col("n_t")))
+        Exact.floorDiv(lit(1000000L) * col("cnt_t") * col("n_c"), col("cnt_c") * col("n_t")))
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_tok"),
         sum(col("ratio_ppm")).cast("long").as("sum_ppm"))
-      .withColumn("weight_ppm", idiv(col("sum_ppm"), col("n_tok")))
+      .withColumn("weight_ppm", Exact.floorDiv(col("sum_ppm"), col("n_tok")))
       .select(col("doc_id"), col("source"), col("n_tok"), col("weight_ppm"))
   }
 

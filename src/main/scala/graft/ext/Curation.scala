@@ -19,8 +19,7 @@ import graft.util.Hashing
   */
 object Curation {
 
-  private def toks(c: Column): Column = TextAnalysis.toks(c)
-  private def toksSql(x: String): String = TextAnalysis.toksSql(x)
+  import TextAnalysis.{toks, toksSql}
 
   // ---------------------------------------------------------------
   // BPE pair counts — the map-reduce heart of tokenizer training

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
+import graft.util.Exact.floorDiv
 
 /** Link-graph centrality — the crawl-frontier prioritization signal
   * of a web-scale corpus pipeline (rank domains/pages before spending
@@ -34,16 +35,16 @@ object Graph {
   private val BASE  = 1000000L // initial rank, micro-units
   private val TOPK  = 20
 
-  /** Exact floor division on non-negative longs, portable: the
-    * numerator is reduced to a multiple of the divisor first, so the
-    * double division is exact (numerators stay far below 2^53). */
-  private def idiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
+  /** The link graph's node frame: one `id` per document, spread over
+    * the session's cores. Twin: [[linkGraphCtes]]' `nodes`. */
+  private def nodesOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
   /** The synthesized (src, dst) link set over a node frame — three
     * affine out-links per node, kept only when the target id exists
-    * (dangling-probe drop — deterministic in both engines). Shared by
-    * [[pagerankOf]] and [[degreeDistribution]]. */
+    * (dangling-probe drop — deterministic in both engines). The one
+    * Spark copy of the link rule; [[linkGraphCtes]] is its twin. */
   private def edgesOf(nodes: DataFrame): DataFrame = {
     val m = nodes.agg(count(lit(1)).as("m"))
     nodes.crossJoin(broadcast(m))
@@ -53,17 +54,46 @@ object Graph {
       .join(nodes.select(col("id").as("dst")), Seq("dst"))
   }
 
+  /** The simple undirected view of [[edgesOf]]: canonical u < v pairs,
+    * self-loops and multi-edges dropped. Unfenced — each caller picks
+    * its own fence. Twin: [[undirectedCte]]. */
+  private def undirectedOf(nodes: DataFrame): DataFrame =
+    edgesOf(nodes)
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
+  /** DuckDB twin of [[nodesOf]] + [[edgesOf]]: the CTEs `nodes`, `m`,
+    * `probes` and `edges`. The probes are unrolled as UNION ALL, not
+    * unnest: an unnest-derived CTE feeding a multi-way self-join dies
+    * in DuckDB's binder with an internal error that invalidates the
+    * whole session (CLAUDE.md). */
+  private val linkGraphCtes: String =
+    """nodes AS (SELECT doc_id AS id FROM documents),
+       m AS (SELECT count(*) AS m FROM nodes),
+       probes AS (
+         SELECT id AS src, (id * 7 + 13) % m.m AS dst FROM nodes CROSS JOIN m
+         UNION ALL SELECT id, (id * 7 + 26) % m.m FROM nodes CROSS JOIN m
+         UNION ALL SELECT id, (id * 7 + 39) % m.m FROM nodes CROSS JOIN m),
+       edges AS MATERIALIZED (
+         SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst)"""
+
+  /** DuckDB twin of [[undirectedOf]] over [[linkGraphCtes]]' `edges`. */
+  private val undirectedCte: String =
+    """und AS (
+         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+         FROM edges WHERE src <> dst)"""
+
   private[graft] def pagerankOf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val nodes = docs.select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val nodes = nodesOf(docs)
     val edges = edgesOf(nodes)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val edgesD = edges.join(deg, Seq("src"))
       .select(col("src"), col("dst"), col("deg"))
       .transform(graft.util.Fence.lineage)
     // Loop state is the SPARSE per-node in-sum (only nodes that
-    // receive mass): rank(v) = 150000 + idiv(85·coalesce(inc, 0),
+    // receive mass): rank(v) = 150000 + floorDiv(85·coalesce(inc, 0),
     // 100) everywhere, so the dense rank frame never materializes
     // inside the loop — the old per-round `nodes LEFT JOIN inc`
     // re-shuffled all N node rows K times just to attach a constant
@@ -71,14 +101,14 @@ object Graph {
     // Identical ranks: a src absent from inc folds to the same
     // 150000 constant through the coalesce.
     def rankOf(inc: Column): Column =
-      lit(150000L) + idiv(coalesce(inc, lit(0L)) * 85, lit(100L))
+      lit(150000L) + floorDiv(coalesce(inc, lit(0L)) * 85, lit(100L))
     def step(prev: DataFrame): DataFrame = edgesD
       .join(prev.withColumnRenamed("dst", "id"), col("src") === col("id"), "left")
-      .select(col("dst"), idiv(rankOf(col("inc")), col("deg")).as("c"))
+      .select(col("dst"), floorDiv(rankOf(col("inc")), col("deg")).as("c"))
       .groupBy(col("dst")).agg(sum(col("c")).as("inc"))
     // round 1 needs no score join at all: every rank is BASE
     var inc = edgesD
-      .select(col("dst"), idiv(lit(BASE), col("deg")).as("c"))
+      .select(col("dst"), floorDiv(lit(BASE), col("deg")).as("c"))
       .groupBy(col("dst")).agg(sum(col("c")).as("inc"))
     // rounds 1..K-2 are single-consumer and stay LAZY (one fused
     // multi-stage query instead of a materialization job per round);
@@ -124,16 +154,7 @@ object Graph {
            FROM r${i - 1} r JOIN edgesd e ON e.src = r.id
            GROUP BY e.dst) s USING (id))"""
     }.mkString(",\n       ")
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, unnest([(id * 7 + 13) % m.m,
-                                   (id * 7 + 26) % m.m,
-                                   (id * 7 + 39) % m.m]) AS dst
-         FROM nodes CROSS JOIN m),
-       edges AS (
-         SELECT p.src, p.dst FROM probes p
-         JOIN nodes t ON t.id = p.dst),
+    s"""WITH $linkGraphCtes,
        deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
        edgesd AS (
          SELECT e.src, e.dst, d.deg FROM edges e JOIN deg d USING (src)),
@@ -164,8 +185,7 @@ object Graph {
     * rollups on the tiny degree key space, one full-outer stitch.
     * Nothing wider than (id, long) ever shuffles. */
   def degreeDistribution(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val nodes = nodesOf(Tables.documents(spark, dir))
     val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     def hist(keyed: DataFrame, out: String): DataFrame =
       nodes.join(keyed, Seq("id"), "left")
@@ -183,14 +203,7 @@ object Graph {
   }
 
   val degreeDistributionSql: String =
-    """WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, unnest([(id * 7 + 13) % m.m,
-                                   (id * 7 + 26) % m.m,
-                                   (id * 7 + 39) % m.m]) AS dst
-         FROM nodes CROSS JOIN m),
-       edges AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
+    s"""WITH $linkGraphCtes,
        outd AS (
          SELECT COALESCE(e.d, 0) AS degree, count(*) AS n_out_nodes
          FROM nodes n LEFT JOIN (
@@ -222,13 +235,7 @@ object Graph {
     * without changing the plan shape; wedges come from the degree
     * frame alone — deg·(deg−1)/2 per node, never enumerated. */
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val und = edgesOf(nodes)
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirectedOf(nodesOf(Tables.documents(spark, dir)))
       .transform(graft.util.Fence.lineage)
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
@@ -249,21 +256,9 @@ object Graph {
             .cast("long")).otherwise(0L).as("global_cc_ppm"))
   }
 
-  // probes unrolled as UNION ALL (not unnest): DuckDB 1.x hits an
-  // INTERNAL binder error ("Failed to bind column reference dst")
-  // when an unnest-derived CTE flows into the triple self-join —
-  // and an internal error invalidates the whole DuckDB session.
   val triangleCountSql: String =
-    """WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, (id * 7 + 13) % m.m AS dst FROM nodes CROSS JOIN m
-         UNION ALL SELECT id, (id * 7 + 26) % m.m FROM nodes CROSS JOIN m
-         UNION ALL SELECT id, (id * 7 + 39) % m.m FROM nodes CROSS JOIN m),
-       edges AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
-       und AS (
-         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         FROM edges WHERE src <> dst),
+    s"""WITH $linkGraphCtes,
+       $undirectedCte,
        deg AS (
          SELECT id, count(*) AS d FROM (
            SELECT u AS id FROM und UNION ALL SELECT v AS id FROM und)
@@ -306,8 +301,7 @@ object Graph {
     * edge-touched nodes; the census is two map-side-combined
     * groupBys. */
   def graphComponents(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val nodes = nodesOf(Tables.documents(spark, dir))
     val fw = nodes
       .select(col("id").as("id1"),
         ((col("id") - pmod(col("id"), lit(16))) + pmod(col("id") * 7 + 3, lit(16)))
@@ -390,8 +384,7 @@ object Graph {
     * checkpointed once and reused by all steps. */
   def randomWalks(spark: SparkSession, dir: String): DataFrame = {
     import graft.util.Hashing
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val nodes = nodesOf(Tables.documents(spark, dir))
     val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     def step(df: DataFrame, t: Int, curCol: String, outCol: String): DataFrame = {
       val pick = edges
@@ -423,15 +416,7 @@ object Graph {
     // chained scalar walk: wt = coalesce(pick_t[n], w_{t-1}) — unroll
     // via one select per step so each step's column exists for the
     // next join
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, unnest([(id * 7 + 13) % m.m,
-                                   (id * 7 + 26) % m.m,
-                                   (id * 7 + 39) % m.m]) AS dst
-         FROM nodes CROSS JOIN m),
-       edges AS MATERIALIZED (
-         SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
+    s"""WITH $linkGraphCtes,
        ${(1 to WALK_STEPS).map(pickCte).mkString(",\n       ")},
        s0 AS (SELECT id AS start_id, id AS w0 FROM nodes WHERE id % $WALK_START_MOD = 0),
        ${(1 to WALK_STEPS).map(t =>
@@ -464,13 +449,7 @@ object Graph {
     * because the next round AND the round's stats row both consume
     * it. Rounds are a fixed constant, oracle = unrolled CTE chain. */
   def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val und = edgesOf(nodes)
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirectedOf(nodesOf(Tables.documents(spark, dir)))
     var sym = und
       .unionByName(und.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
@@ -514,21 +493,8 @@ object Graph {
          CAST(count(DISTINCT src) AS BIGINT) AS n_nodes,
          CAST(count(*) // 2 AS BIGINT) AS n_edges FROM e$i"""
     }.mkString("\n       UNION ALL ")
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         -- unrolled as UNION ALL: an unnest-derived CTE feeding the
-         -- multi-way self-join chain below trips DuckDB's internal
-         -- binder (see CLAUDE.md / triangle_count's probes CTE)
-         SELECT id AS src, (id * 7 + 13) % m.m AS dst FROM nodes CROSS JOIN m
-         UNION ALL
-         SELECT id AS src, (id * 7 + 26) % m.m AS dst FROM nodes CROSS JOIN m
-         UNION ALL
-         SELECT id AS src, (id * 7 + 39) % m.m AS dst FROM nodes CROSS JOIN m),
-       raw AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
-       und AS (
-         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         FROM raw WHERE src <> dst),
+    s"""WITH $linkGraphCtes,
+       $undirectedCte,
        e0 AS (
          SELECT u AS src, v AS dst FROM und
          UNION ALL SELECT v AS src, u AS dst FROM und),
@@ -556,13 +522,7 @@ object Graph {
     * orientation refinement documented at [[triangleCount]] applies
     * here unchanged for hub-heavy graphs. */
   def linkPrediction(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val und = edgesOf(nodes)
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirectedOf(nodesOf(Tables.documents(spark, dir)))
       .transform(graft.util.Fence.lineage)
     val sym = und
       .unionByName(und.select(col("v").as("u"), col("u").as("v")))
@@ -587,19 +547,8 @@ object Graph {
   }
 
   val linkPredictionSql: String =
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         -- unrolled as UNION ALL around DuckDB's unnest/self-join binder bug
-         SELECT id AS src, (id * 7 + 13) % m.m AS dst FROM nodes CROSS JOIN m
-         UNION ALL
-         SELECT id AS src, (id * 7 + 26) % m.m AS dst FROM nodes CROSS JOIN m
-         UNION ALL
-         SELECT id AS src, (id * 7 + 39) % m.m AS dst FROM nodes CROSS JOIN m),
-       raw AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
-       und AS (
-         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         FROM raw WHERE src <> dst),
+    s"""WITH $linkGraphCtes,
+       $undirectedCte,
        sym AS (
          SELECT u AS src, v AS dst FROM und
          UNION ALL SELECT v AS src, u AS dst FROM und),
@@ -646,11 +595,7 @@ object Graph {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").as("id"), col("source"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val und = edgesOf(docs.select(col("id")))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = undirectedOf(docs.select(col("id")))
       .transform(graft.util.Fence.lineage)
     val lab = docs.select(col("id"), col("source"))
     val labeled = und
@@ -682,21 +627,12 @@ object Graph {
   }
 
   val sourceAssortativitySql: String =
-    """WITH nodes AS (SELECT doc_id AS id, source FROM documents),
-       m0 AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, (id * 7 + 13) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 26) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 39) % m0.m AS dst FROM nodes CROSS JOIN m0),
-       raw AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
-       und AS (
-         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         FROM raw WHERE src <> dst),
+    s"""WITH $linkGraphCtes,
+       $undirectedCte,
        lb AS (
          SELECT e.u, e.v, a.source AS su, b.source AS sv
-         FROM und e JOIN nodes a ON a.id = e.u JOIN nodes b ON b.id = e.v),
+         FROM und e JOIN documents a ON a.doc_id = e.u
+         JOIN documents b ON b.doc_id = e.v),
        mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM lb),
        dm AS (
          SELECT source, CAST(count(*) AS BIGINT) AS d_c FROM (
@@ -743,13 +679,8 @@ object Graph {
     * then symmetrized) and checkpointed; at 100 TB it is the real
     * link table bucketed by node id. */
   def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val und = edgesOf(nodes)
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val nodes = nodesOf(Tables.documents(spark, dir))
+    val und = undirectedOf(nodes)
     // NOTE (r11, measured): do NOT pre-repartition this checkpoint by
     // `a` — a lazy localCheckpoint reports UnknownPartitioning under
     // AQE, so the per-round joins keep their own Exchange either way,
@@ -802,23 +733,13 @@ object Graph {
            SELECT b AS id, max(struct_pack(cnt := cnt, nl := -label)) AS p
            FROM (
              SELECT e.b, l.label, count(*) AS cnt
-             FROM edges e JOIN l${i - 1} l ON l.id = e.a
+             FROM sym e JOIN l${i - 1} l ON l.id = e.a
              GROUP BY e.b, l.label)
            GROUP BY b) pk ON pk.id = p.id)"""
     }.mkString(",\n       ")
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m0 AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, (id * 7 + 13) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 26) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 39) % m0.m AS dst FROM nodes CROSS JOIN m0),
-       raw AS (SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
-       und AS (
-         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-         FROM raw WHERE src <> dst),
-       edges AS MATERIALIZED (
+    s"""WITH $linkGraphCtes,
+       $undirectedCte,
+       sym AS MATERIALIZED (
          SELECT u AS a, v AS b FROM und UNION ALL SELECT v AS a, u AS b FROM und),
        l0 AS (SELECT id, id AS label FROM nodes),
        $rounds,
@@ -847,15 +768,14 @@ object Graph {
     * compute bit-identically — the repo's no-libm rule rules out the
     * usual L2 norm, and max-normalization is the standard integer-
     * safe variant). All values stay non-negative longs ≤ deg·BASE,
-    * so [[idiv]]'s 2^53 exactness bound holds with 6 decades of
-    * headroom.
+    * so [[graft.util.Exact.floorDiv]]'s 2^53 exactness bound holds
+    * with 6 decades of headroom.
     *
     * Scale shape per half-step: one edges⋈scores equi-join + one
     * groupBy partial sum (node-id keyed), one 1-row max broadcast —
     * ×2·K fixed rounds. The final top-20 is TakeOrderedAndProject. */
   def hitsScores(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(spark, dir).select(col("doc_id").as("id"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val nodes = nodesOf(Tables.documents(spark, dir))
     val edges = edgesOf(nodes).transform(graft.util.Fence.lineage)
     // NOTE (r11, measured): a src-keyed second checkpoint for the auth
     // half-steps shuffles MORE, not less (1.69M vs 1.49M records at
@@ -878,7 +798,7 @@ object Graph {
       val mx = rawCp.agg(greatest(max(col("raw")), lit(1L)).as("mx"))
       rawCp.crossJoin(broadcast(mx))
         .select(col("dst").as("id"),
-          idiv(col("raw") * HITS_BASE, col("mx")).as(out))
+          floorDiv(col("raw") * HITS_BASE, col("mx")).as(out))
     }
     // round 1's auth needs no score join: every hub is the BASE
     // constant, so the in-mass is just BASE·in-degree
@@ -920,16 +840,7 @@ object Graph {
          SELECT n.id, COALESCE(r.raw, 0) * $HITS_BASE // m.mx AS hub
          FROM nodes n LEFT JOIN h${i}raw r USING (id) CROSS JOIN h${i}mx m)"""
     }.mkString(",\n       ")
-    s"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-       m0 AS (SELECT count(*) AS m FROM nodes),
-       probes AS (
-         SELECT id AS src, (id * 7 + 13) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 26) % m0.m AS dst FROM nodes CROSS JOIN m0
-         UNION ALL
-         SELECT id AS src, (id * 7 + 39) % m0.m AS dst FROM nodes CROSS JOIN m0),
-       edges AS MATERIALIZED (
-         SELECT p.src, p.dst FROM probes p JOIN nodes t ON t.id = p.dst),
+    s"""WITH $linkGraphCtes,
        h0 AS (SELECT id, $HITS_BASE AS hub FROM nodes),
        $rounds
        SELECT a.id AS doc_id,

@@ -149,7 +149,16 @@ object Multimodal {
     * codegen) — the kernel downstream sees only `(media_id, blob:
     * binary)`, exactly the shape a parquet of real thumbnails
     * presents. */
-  def ppmMediaTable(spark: SparkSession, dir: String): DataFrame = {
+  def ppmMediaTable(spark: SparkSession, dir: String): DataFrame =
+    ppmRasters(spark, dir).select(col("doc_id").as("media_id"),
+      asPpm(col("w"), col("h"), col("raster")).as("blob"))
+
+  /** The raster source every PPM table is built from: one
+    * `(doc_id, w, h, raster)` row per document, the raster being the
+    * first w·h·3 characters of the text repeated four times. The
+    * [[ppmMediaTable]] preconditions are checked here, in-plan.
+    * DuckDB twin: [[rasterCte]]. */
+  private def ppmRasters(spark: SparkSession, dir: String): DataFrame = {
     val w = (col("doc_id") % 5 + 4).cast("int")
     val h = (col("doc_id") % 4 + 3).cast("int")
     val wellFormed =
@@ -157,14 +166,26 @@ object Multimodal {
         !col("text").rlike("[^\\x00-\\x7F]")
     val text = when(wellFormed, col("text")).otherwise(
       raise_error(concat(
-        lit("ppmMediaTable: text must be pure ASCII and >= 36 chars, doc_id="),
+        lit("ppmRasters: text must be pure ASCII and >= 36 chars, doc_id="),
         col("doc_id").cast("string"))))
     Tables.documents(spark, dir).select(
-      col("doc_id").as("media_id"),
-      encode(concat(
-        lit("P6\n"), w.cast("string"), lit(" "), h.cast("string"), lit("\n255\n"),
-        repeat(text, 4).substr(lit(1), w * h * 3)), "UTF-8").as("blob"))
+      col("doc_id"), w.as("w"), h.as("h"),
+      repeat(text, 4).substr(lit(1), w * h * 3).as("raster"))
   }
+
+  /** Binary P6 encode of a raster: `"P6\n{w} {h}\n255\n"` + bytes. */
+  private def asPpm(w: Column, h: Column, raster: Column): Column =
+    encode(concat(lit("P6\n"), w.cast("string"), lit(" "), h.cast("string"),
+      lit("\n255\n"), raster), "UTF-8")
+
+  /** DuckDB twin of [[ppmRasters]]: the CTE `rasters(doc_id, w, h,
+    * raster)`. DuckDB's `substr` counts characters, which on pure-ASCII
+    * text are the bytes Spark encodes. */
+  private val rasterCte: String =
+    """rasters AS (
+         SELECT doc_id, w, h, substr(repeat(text, 4), 1, w * h * 3) AS raster
+         FROM (SELECT doc_id, text, CAST(doc_id % 5 + 4 AS INTEGER) AS w,
+                 CAST(doc_id % 4 + 3 AS INTEGER) AS h FROM documents))"""
 
   /** Minimal binary P6 parser: magic, whitespace-separated
     * width/height/maxval, one whitespace, then w·h·3 raw bytes.
@@ -246,13 +267,10 @@ object Multimodal {
     def chanSql(c: Int) =
       s"""CAST(list_sum(list_transform(generate_series(1, width * height * 3),
            k -> CASE WHEN (k - 1) % 3 = $c THEN unicode(substr(src, k, 1)) ELSE 0 END)) AS BIGINT)"""
-    s"""WITH m AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 5 + 4 AS INTEGER) AS width,
-           CAST(doc_id % 4 + 3 AS INTEGER) AS height,
-           substr(repeat(text, 4), 1,
-             CAST((doc_id % 5 + 4) * (doc_id % 4 + 3) * 3 AS INTEGER)) AS src
-         FROM documents)
+    s"""WITH $rasterCte,
+       m AS (
+         SELECT doc_id AS media_id, w AS width, h AS height, raster AS src
+         FROM rasters)
        SELECT media_id, width, height,
          ${chanSql(0)} AS sum_r, ${chanSql(1)} AS sum_g, ${chanSql(2)} AS sum_b
        FROM m ORDER BY media_id"""
@@ -317,15 +335,12 @@ object Multimodal {
            p -> unicode(substr(src,
              ((p // out_w) * 2 * width + (p % out_w) * 2) * 3 + $c + 1, 1))))
            AS BIGINT)"""
-    s"""WITH m AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 5 + 4 AS INTEGER) AS width,
-           CAST(doc_id % 4 + 3 AS INTEGER) AS height,
-           CAST((doc_id % 5 + 4 + 1) // 2 AS INTEGER) AS out_w,
-           CAST((doc_id % 4 + 3 + 1) // 2 AS INTEGER) AS out_h,
-           substr(repeat(text, 4), 1,
-             CAST((doc_id % 5 + 4) * (doc_id % 4 + 3) * 3 AS INTEGER)) AS src
-         FROM documents)
+    s"""WITH $rasterCte,
+       m AS (
+         SELECT doc_id AS media_id, w AS width, h AS height,
+           CAST((w + 1) // 2 AS INTEGER) AS out_w,
+           CAST((h + 1) // 2 AS INTEGER) AS out_h, raster AS src
+         FROM rasters)
        SELECT media_id, width, height, out_w, out_h,
          ${chanSql(0)} AS sum_r, ${chanSql(1)} AS sum_g, ${chanSql(2)} AS sum_b
        FROM m ORDER BY media_id"""
@@ -631,28 +646,14 @@ object Multimodal {
     * the perturbation are pure in-plan string arithmetic over the
     * ASCII source, so the DuckDB twin reproduces the pixels exactly. */
   def ppmMediaTwinTable(spark: SparkSession, dir: String): DataFrame = {
-    val w = (col("doc_id") % 5 + 4).cast("int")
-    val h = (col("doc_id") % 4 + 3).cast("int")
-    val wellFormed =
-      col("text").isNotNull && length(col("text")) >= 36 &&
-        !col("text").rlike("[^\\x00-\\x7F]")
-    val text = when(wellFormed, col("text")).otherwise(
-      raise_error(concat(
-        lit("ppmMediaTwinTable: text must be pure ASCII and >= 36 chars, doc_id="),
-        col("doc_id").cast("string"))))
-    val base = Tables.documents(spark, dir).select(
-      col("doc_id"), w.as("w"), h.as("h"),
-      repeat(text, 4).substr(lit(1), w * h * 3).as("raster"))
+    val base = ppmRasters(spark, dir)
     val twins = base.filter(col("doc_id") % 5 === 0).select(
       (col("doc_id") + 1000000L).as("doc_id"), col("w"), col("h"),
       concat(col("raster").substr(lit(1), col("w") * col("h") * 3 - 1),
         expr("char(32 + (ascii(substring(raster, w * h * 3, 1)) - 32 + 1) % 95)"))
         .as("raster"))
-    base.unionByName(twins).select(
-      col("doc_id").as("media_id"),
-      encode(concat(lit("P6\n"), col("w").cast("string"), lit(" "),
-        col("h").cast("string"), lit("\n255\n"), col("raster")), "UTF-8")
-        .as("blob"))
+    base.unionByName(twins).select(col("doc_id").as("media_id"),
+      asPpm(col("w"), col("h"), col("raster")).as("blob"))
   }
 
   /** Perceptual fingerprint from the decode kernel: per-pixel
@@ -799,13 +800,8 @@ object Multimodal {
       .orderBy(col("hamming"), col("exact_dup"))
 
   val mediaNeardupSql: String =
-    s"""WITH m0 AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 5 + 4 AS INTEGER) AS w,
-           CAST(doc_id % 4 + 3 AS INTEGER) AS h,
-           substr(repeat(text, 4), 1,
-             CAST((doc_id % 5 + 4) * (doc_id % 4 + 3) * 3 AS INTEGER)) AS raster
-         FROM documents),
+    s"""WITH $rasterCte,
+       m0 AS (SELECT doc_id AS media_id, w, h, raster FROM rasters),
        m AS MATERIALIZED (
          SELECT media_id, w, h, raster FROM m0
          UNION ALL
@@ -914,18 +910,7 @@ object Multimodal {
     * exactly unchanged. Pure in-plan string arithmetic, so the
     * DuckDB twin reproduces the pixels exactly. */
   def ppmPhashTwinTable(spark: SparkSession, dir: String): DataFrame = {
-    val w = (col("doc_id") % 5 + 4).cast("int")
-    val h = (col("doc_id") % 4 + 3).cast("int")
-    val wellFormed =
-      col("text").isNotNull && length(col("text")) >= 36 &&
-        !col("text").rlike("[^\\x00-\\x7F]")
-    val text = when(wellFormed, col("text")).otherwise(
-      raise_error(concat(
-        lit("ppmPhashTwinTable: text must be pure ASCII and >= 36 chars, doc_id="),
-        col("doc_id").cast("string"))))
-    val base = Tables.documents(spark, dir).select(
-      col("doc_id"), w.as("w"), h.as("h"),
-      repeat(text, 4).substr(lit(1), w * h * 3).as("raster"))
+    val base = ppmRasters(spark, dir)
     val bright = array_join(
       transform(sequence(lit(1), length(col("raster"))), i =>
         call_function("char",
@@ -940,11 +925,8 @@ object Multimodal {
       .filter(col("doc_id") % 6 === 0 && !col("raster").rlike("[|}~\\x7F]"))
       .select((col("doc_id") + 1000000L).as("doc_id"), col("w"), col("h"),
         bright.as("raster"))
-    base.unionByName(twins).select(
-      col("doc_id").as("media_id"),
-      encode(concat(lit("P6\n"), col("w").cast("string"), lit(" "),
-        col("h").cast("string"), lit("\n255\n"), col("raster")), "UTF-8")
-        .as("blob"))
+    base.unionByName(twins).select(col("doc_id").as("media_id"),
+      asPpm(col("w"), col("h"), col("raster")).as("blob"))
   }
 
   /** DCT-signature record: the 8 sign bits of the low-band 3×3
@@ -1024,13 +1006,8 @@ object Multimodal {
   val mediaPhashSql: String = {
     val ctVals = (for { n <- 3 to 8; k <- 0 to 2; i <- 0 until n }
       yield s"($n, $k, $i, ${intCos(n, k, i)})").mkString(", ")
-    s"""WITH m0 AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 5 + 4 AS INTEGER) AS w,
-           CAST(doc_id % 4 + 3 AS INTEGER) AS h,
-           substr(repeat(text, 4), 1,
-             CAST((doc_id % 5 + 4) * (doc_id % 4 + 3) * 3 AS INTEGER)) AS raster
-         FROM documents),
+    s"""WITH $rasterCte,
+       m0 AS (SELECT doc_id AS media_id, w, h, raster FROM rasters),
        m AS MATERIALIZED (
          SELECT media_id, w, h, raster FROM m0
          UNION ALL

@@ -136,15 +136,11 @@ object Retrieval {
       .withColumn("qv", Similarity.quant(col("embedding")))
     val q = e.filter(col("vec_id") === 0)
       .select(col("qv").as("qvec"))
-    def n2(c: Column): Column = graft.functions.LongDot(c, c)
     val wDen = Window.orderBy(col("cosine").desc, col("doc_id"))
     val dense = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
-        (floor(graft.functions.LongDot(col("qvec"), col("qv")).cast("double") /
-          (sqrt(n2(col("qvec")).cast("double")) *
-           sqrt(n2(col("qv")).cast("double"))) * 1000000 + 0.5) / 1000000)
-          .as("cosine"))
+        Similarity.cosine(col("qvec"), col("qv")).as("cosine"))
       .orderBy(col("cosine").desc, col("doc_id")).limit(FUSE_N)
       .withColumn("dense_rank", row_number().over(wDen).cast("long"))
       .select(col("doc_id"), col("dense_rank"))
@@ -188,10 +184,7 @@ object Retrieval {
            CAST(row_number() OVER (ORDER BY cosine DESC, vec_id)
              AS BIGINT) AS dense_rank
          FROM (
-           SELECT e.vec_id,
-             floor(CAST(list_sum(list_transform(generate_series(1, ${Similarity.DIM}), i -> qvec[i] * qv[i])) AS DOUBLE) /
-                   (sqrt(CAST(list_sum(list_transform(qvec, x -> x * x)) AS DOUBLE)) *
-                    sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cosine
+           SELECT e.vec_id, ${Similarity.cosSql("qvec", "qv")} AS cosine
            FROM e CROSS JOIN q WHERE e.vec_id <> 0)
          QUALIFY dense_rank <= $FUSE_N)
        SELECT coalesce(lex.doc_id, den.doc_id) AS doc_id,

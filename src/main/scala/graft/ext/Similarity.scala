@@ -78,6 +78,48 @@ object Similarity {
   /** Portable 6-dp rounding. */
   private def pr6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
 
+  /** Rounded cosine of two quantized vectors: exact long dots, one
+    * IEEE sqrt/divide on identical operands, 6-dp floor. The one Spark
+    * copy; [[cosSql]] is its twin. */
+  private[ext] def cosine(a: Column, b: Column): Column =
+    pr6(dot(a, b).cast("double") /
+      (sqrt(norm2(a).cast("double")) * sqrt(norm2(b).cast("double"))))
+
+  /** Rounded-cosine SQL between two quantized list columns — the
+    * DuckDB twin of [[cosine]]. */
+  private[ext] def cosSql(a: String, b: String): String =
+    s"""floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> $a[i] * $b[i])) AS DOUBLE) /
+          (sqrt(CAST(list_sum(list_transform($a, x -> x * x)) AS DOUBLE)) *
+           sqrt(CAST(list_sum(list_transform($b, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000"""
+
+  /** The per-query head of a scored `(qid, vec_id, cosine)` frame: the
+    * [[TOPK]] best by (cosine desc, vec_id) per qid, numbered `rank`.
+    * Each caller selects its own output columns. */
+  private def topK(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= TOPK)
+  }
+
+  /** `(vec_id, embedding)` rows plus their injected near-duplicates:
+    * every vec_id % 7 == 0 row reappears at vec_id + 1,000,000 with
+    * dim 2 nudged by +0.01 (cosine ≈ 0.9999 to its source). Base
+    * vec_ids must stay below the offset. Twin: [[twinBaseCte]]. */
+  private def twinned(base: DataFrame): DataFrame =
+    base.unionAll(base.filter(col("vec_id") % 7 === 0)
+      .select((col("vec_id") + 1000000).as("vec_id"),
+        transform(col("embedding"),
+          (x, i) => when(i === 1, x + lit(0.01f)).otherwise(x)).as("embedding")))
+
+  /** DuckDB twin of [[twinned]] over `embeddings`: the CTE `base`. */
+  private val twinBaseCte: String =
+    s"""base AS (
+         SELECT vec_id, embedding FROM embeddings
+         UNION ALL
+         SELECT vec_id + 1000000 AS vec_id,
+           list_transform(generate_series(1, $DIM),
+             i -> CASE WHEN i = 2 THEN embedding[i] + CAST(0.01 AS FLOAT) ELSE embedding[i] END) AS embedding
+         FROM embeddings WHERE vec_id % 7 = 0)"""
+
   /** Exact cosine top-k: query vectors vec_id < 8 against the full
     * table. */
   def knnBruteforce(spark: SparkSession, dir: String): DataFrame = {
@@ -87,12 +129,8 @@ object Similarity {
     val c = e.select(col("vec_id"), col("qv").as("cvec"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", pr6(
-        dot(col("qvec"), col("cvec")).cast("double") /
-          (sqrt(norm2(col("qvec")).cast("double")) * sqrt(norm2(col("cvec")).cast("double")))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TOPK)
+      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
+    topK(scored)
       .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -101,10 +139,7 @@ object Similarity {
     s"""WITH e AS (SELECT vec_id, $quantSql AS qv FROM embeddings),
        q AS (SELECT vec_id AS qid, qv AS qvec FROM e WHERE vec_id < $NQUERIES),
        scored AS (
-         SELECT q.qid, e.vec_id,
-           floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> qvec[i] * qv[i])) AS DOUBLE) /
-                 (sqrt(CAST(list_sum(list_transform(qvec, x -> x * x)) AS DOUBLE)) *
-                  sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cosine
+         SELECT q.qid, e.vec_id, ${cosSql("qvec", "qv")} AS cosine
          FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
        ranked AS (
          SELECT qid, vec_id, cosine,
@@ -135,44 +170,26 @@ object Similarity {
     * cells — the band is a per-pair filter, so it composes with any
     * candidate generator unchanged. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val twins = base.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 1, x + lit(0.01f)).otherwise(x)).as("embedding"))
-    val e = base.unionAll(twins).withColumn("qv", quant(col("embedding")))
+    val e = twinned(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
+      .withColumn("qv", quant(col("embedding")))
     val q = e.filter(col("vec_id") < NQUERIES)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
     val scored = e.select(col("vec_id"), col("qv").as("cvec"))
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", pr6(
-        dot(col("qvec"), col("cvec")).cast("double") /
-          (sqrt(norm2(col("qvec")).cast("double")) * sqrt(norm2(col("cvec")).cast("double")))))
+      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
       .filter(col("cosine") >= HN_FLOOR && col("cosine") < HN_CEIL)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TOPK)
+    topK(scored)
       .select(col("qid"), col("rank"), col("vec_id").as("negative_id"), col("cosine"))
       .orderBy(col("qid"), col("rank"))
   }
 
   val hardNegativesSql: String =
-    s"""WITH base AS (
-         SELECT vec_id, embedding FROM embeddings
-         UNION ALL
-         SELECT vec_id + 1000000 AS vec_id,
-           list_transform(generate_series(1, $DIM),
-             i -> CASE WHEN i = 2 THEN embedding[i] + CAST(0.01 AS FLOAT) ELSE embedding[i] END) AS embedding
-         FROM embeddings WHERE vec_id % 7 = 0),
+    s"""WITH $twinBaseCte,
        e AS (SELECT vec_id, $quantSql AS qv FROM base),
        q AS (SELECT vec_id AS qid, qv AS qvec FROM e WHERE vec_id < $NQUERIES),
        scored AS (
-         SELECT q.qid, e.vec_id,
-           floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> qvec[i] * qv[i])) AS DOUBLE) /
-                 (sqrt(CAST(list_sum(list_transform(qvec, x -> x * x)) AS DOUBLE)) *
-                  sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cosine
+         SELECT q.qid, e.vec_id, ${cosSql("qvec", "qv")} AS cosine
          FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
        banded AS (
          SELECT qid, vec_id, cosine FROM scored
@@ -224,12 +241,8 @@ object Similarity {
     val c = e.select(col("vec_id"), col("qv").as("cvec"), col("bucket"))
     val scored = c.join(broadcast(probes), col("bucket") === col("probe"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", pr6(
-        dot(col("qvec"), col("cvec")).cast("double") /
-          (sqrt(norm2(col("qvec")).cast("double")) * sqrt(norm2(col("cvec")).cast("double")))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TOPK)
+      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
+    topK(scored)
       .select(col("qid"), col("qbucket").as("bucket"), col("rank"),
         col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("qid"), col("rank"))
@@ -242,12 +255,6 @@ object Similarity {
                                   // at ANY corpus size, so the centroid broadcast
                                   // stays bounded (IVF trains on a sample anyway)
   private val NPROBE = 2
-
-  /** Rounded-cosine SQL between two quantized list columns. */
-  private def cosSql(a: String, b: String): String =
-    s"""floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> $a[i] * $b[i])) AS DOUBLE) /
-          (sqrt(CAST(list_sum(list_transform($a, x -> x * x)) AS DOUBLE)) *
-           sqrt(CAST(list_sum(list_transform($b, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000"""
 
   /** ANN via an IVF (inverted-file) coarse quantizer — the documented
     * next rung above hyperplane LSH for 10⁹-vector corpora: every
@@ -291,12 +298,8 @@ object Similarity {
     val scored = cells.join(broadcast(qprobes), Seq("cell"))
       .join(broadcast(q), Seq("qid"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", pr6(
-        dot(col("qvec"), col("qv")).cast("double") /
-          (sqrt(norm2(col("qvec")).cast("double")) * sqrt(norm2(col("qv")).cast("double")))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TOPK)
+      .withColumn("cosine", cosine(col("qvec"), col("qv")))
+    topK(scored)
       .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -359,12 +362,8 @@ object Similarity {
     val scored = cells.join(broadcast(qprobes), Seq("cell"))
       .join(broadcast(q), Seq("qid"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine", pr6(
-        dot(col("qvec"), col("qv")).cast("double") /
-          (sqrt(norm2(col("qvec")).cast("double")) * sqrt(norm2(col("qv")).cast("double")))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TOPK)
+      .withColumn("cosine", cosine(col("qvec"), col("qv")))
+    topK(scored)
       .select(col("qid"), col("rank"), col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("qid"), col("rank"))
   }
@@ -452,11 +451,7 @@ object Similarity {
     * twin offset. */
   private[graft] def dedupEmbeddingOf(base: DataFrame): DataFrame = {
     val spark = base.sparkSession
-    val twins = base.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 1, x + lit(0.01f)).otherwise(x)).as("embedding"))
-    val e = base.unionAll(twins)
+    val e = twinned(base)
       .withColumn("qv", quant(col("embedding")))
       .withColumn("b1", bucketWith(planes16)(col("qv")))
       .withColumn("b2", bucketWith(planes16b)(col("qv")))
@@ -475,22 +470,14 @@ object Similarity {
       .dropDuplicates("id1", "id2")
       .join(qvs.select(col("vec_id").as("id1"), col("qv").as("qv1")), Seq("id1"))
       .join(qvs.select(col("vec_id").as("id2"), col("qv").as("qv2")), Seq("id2"))
-      .withColumn("cosine", pr6(
-        dot(col("qv1"), col("qv2")).cast("double") /
-          (sqrt(norm2(col("qv1")).cast("double")) * sqrt(norm2(col("qv2")).cast("double")))))
+      .withColumn("cosine", cosine(col("qv1"), col("qv2")))
       .filter(col("cosine") >= 0.99)
       .select(col("id1"), col("id2"), col("cosine"))
       .orderBy(col("id1"), col("id2"))
   }
 
   val dedupEmbeddingSql: String =
-    s"""WITH base AS (
-         SELECT vec_id, embedding FROM embeddings
-         UNION ALL
-         SELECT vec_id + 1000000 AS vec_id,
-           list_transform(generate_series(1, $DIM),
-             i -> CASE WHEN i = 2 THEN embedding[i] + CAST(0.01 AS FLOAT) ELSE embedding[i] END) AS embedding
-         FROM embeddings WHERE vec_id % 7 = 0),
+    s"""WITH $twinBaseCte,
        e AS (
          SELECT vec_id, $quantSql AS qv, ${bucketSqlWith(planes16, quantSql)} AS b1,
                 ${bucketSqlWith(planes16b, quantSql)} AS b2
@@ -508,10 +495,7 @@ object Similarity {
          SELECT DISTINCT l.vec_id AS id1, r.vec_id AS id2
          FROM p2 l JOIN e r ON l.probe = r.b2 AND l.vec_id < r.vec_id),
        p AS (
-         SELECT id1, id2,
-           floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> a.qv[i] * b.qv[i])) AS DOUBLE) /
-                 (sqrt(CAST(list_sum(list_transform(a.qv, x -> x * x)) AS DOUBLE)) *
-                  sqrt(CAST(list_sum(list_transform(b.qv, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cosine
+         SELECT id1, id2, ${cosSql("a.qv", "b.qv")} AS cosine
          FROM cand c
          JOIN e a ON a.vec_id = c.id1
          JOIN e b ON b.vec_id = c.id2)
@@ -580,11 +564,7 @@ object Similarity {
   private[graft] def dedupSemanticOf(base: DataFrame,
                                      autoRung: Boolean = true): DataFrame = {
     val spark = base.sparkSession
-    val twins = base.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 1, x + lit(0.01f)).otherwise(x)).as("embedding"))
-    val e = base.unionAll(twins)
+    val e = twinned(base)
       .withColumn("qv", quant(col("embedding")))
       .select(col("vec_id"), col("qv"))
       .repartition(spark.sparkContext.defaultParallelism)
@@ -597,13 +577,10 @@ object Similarity {
     val cents = e.crossJoin(broadcast(ncells))
       .filter(col("vec_id") < col("n_cells"))
       .select(col("vec_id").as("cid"), col("qv").as("cv"))
-    def ccosTo(v: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
-      pr6(dot(v, c).cast("double") /
-        (sqrt(norm2(v).cast("double")) * sqrt(norm2(c).cast("double"))))
     val wA = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
     def flatCellsOver(fc: DataFrame): DataFrame =
       e.crossJoin(broadcast(fc))
-        .withColumn("ccos", ccosTo(col("qv"), col("cv")))
+        .withColumn("ccos", cosine(col("qv"), col("cv")))
         .withColumn("rk", row_number().over(wA)).filter(col("rk") === 1)
         .select(col("vec_id"), col("cid").as("cell"))
     val cells =
@@ -644,9 +621,7 @@ object Similarity {
     val scored = pairs
       .join(e.select(col("vec_id").as("id1"), col("qv").as("v1")), Seq("id1"))
       .join(e.select(col("vec_id").as("id2"), col("qv").as("v2")), Seq("id2"))
-      .withColumn("cosine", pr6(
-        dot(col("v1"), col("v2")).cast("double") /
-          (sqrt(norm2(col("v1")).cast("double")) * sqrt(norm2(col("v2")).cast("double")))))
+      .withColumn("cosine", cosine(col("v1"), col("v2")))
       .filter(col("cosine") >= SEM_THRESH)
     cells.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
       .join(scored.groupBy(col("cell"))
@@ -684,11 +659,7 @@ object Similarity {
     * 1,000,000 twin offset. */
   private[graft] def dedupSemanticIvfOf(base: DataFrame): DataFrame = {
     val spark = base.sparkSession
-    val twins = base.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 1, x + lit(0.01f)).otherwise(x)).as("embedding"))
-    val e = base.unionAll(twins)
+    val e = twinned(base)
       .withColumn("qv", quant(col("embedding")))
       .select(col("vec_id"), col("qv"))
       .repartition(spark.sparkContext.defaultParallelism)
@@ -717,13 +688,7 @@ object Similarity {
       element_at(graft.functions.TopCentroids(col("qv"), centRows, 1), 1).as("cell"))
 
   val dedupSemanticIvfSql: String =
-    s"""WITH base AS (
-         SELECT vec_id, embedding FROM embeddings
-         UNION ALL
-         SELECT vec_id + 1000000 AS vec_id,
-           list_transform(generate_series(1, $DIM),
-             i -> CASE WHEN i = 2 THEN embedding[i] + CAST(0.01 AS FLOAT) ELSE embedding[i] END) AS embedding
-         FROM embeddings WHERE vec_id % 7 = 0),
+    s"""WITH $twinBaseCte,
        e AS (SELECT vec_id, $quantSql AS qv FROM base),
        c AS (SELECT vec_id AS cid, qv AS cv FROM e
              WHERE vec_id % $CENT_MOD = 1 AND vec_id < $CENT_CAP),
@@ -753,13 +718,7 @@ object Similarity {
        FROM sz LEFT JOIN dups d ON sz.cell = d.cell ORDER BY sz.cell"""
 
   val dedupSemanticSql: String =
-    s"""WITH base AS (
-         SELECT vec_id, embedding FROM embeddings
-         UNION ALL
-         SELECT vec_id + 1000000 AS vec_id,
-           list_transform(generate_series(1, $DIM),
-             i -> CASE WHEN i = 2 THEN embedding[i] + CAST(0.01 AS FLOAT) ELSE embedding[i] END) AS embedding
-         FROM embeddings WHERE vec_id % 7 = 0),
+    s"""WITH $twinBaseCte,
        e AS (SELECT vec_id, $quantSql AS qv FROM base),
        nt AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM e),
        nc AS (SELECT greatest($SEM_CELLS_MIN,
@@ -807,9 +766,7 @@ object Similarity {
          FROM q),
        scored AS (
          SELECT pr.qid, pr.qbucket AS bucket, e.vec_id,
-           floor(CAST(list_sum(list_transform(generate_series(1, $DIM), i -> qvec[i] * e.qv[i])) AS DOUBLE) /
-                 (sqrt(CAST(list_sum(list_transform(qvec, x -> x * x)) AS DOUBLE)) *
-                  sqrt(CAST(list_sum(list_transform(e.qv, x -> x * x)) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cosine
+           ${cosSql("qvec", "e.qv")} AS cosine
          FROM e JOIN pr ON e.bucket = pr.probe WHERE e.vec_id <> pr.qid),
        ranked AS (
          SELECT qid, bucket, vec_id, cosine,
@@ -1009,9 +966,7 @@ object Similarity {
     a.join(b, col("label1") < col("label2"))
       .select(col("label1").cast("long").as("label1"),
         col("label2").cast("long").as("label2"),
-        pr6(dot(col("sa"), col("sb")).cast("double") /
-          (sqrt(norm2(col("sa")).cast("double")) *
-           sqrt(norm2(col("sb")).cast("double")))).as("cosine"))
+        cosine(col("sa"), col("sb")).as("cosine"))
       .orderBy(col("label1"), col("label2"))
   }
 
@@ -1026,11 +981,7 @@ object Similarity {
          FROM x GROUP BY label, u.dim),
        vecs AS (SELECT label, list(sv ORDER BY dim) AS sv FROM s GROUP BY label)
        SELECT CAST(a.label AS BIGINT) AS label1, CAST(b.label AS BIGINT) AS label2,
-         floor(CAST(list_sum(list_transform(generate_series(1, $DIM),
-                 i -> a.sv[i] * b.sv[i])) AS DOUBLE) /
-               (sqrt(CAST(list_sum(list_transform(a.sv, x -> x * x)) AS DOUBLE)) *
-                sqrt(CAST(list_sum(list_transform(b.sv, x -> x * x)) AS DOUBLE)))
-               * 1000000 + 0.5) / 1000000 AS cosine
+         ${cosSql("a.sv", "b.sv")} AS cosine
        FROM vecs a JOIN vecs b ON a.label < b.label
        ORDER BY label1, label2"""
 

@@ -270,8 +270,9 @@ object AsOf {
     asofAgg(asofCandidatesW(spark, dir, W), col("fwd"))
 
   // Spark's unix_timestamp truncates to whole seconds; mirror with
-  // floor(epoch(..)) before the BIGINT cast (double→long convention)
-  private def es(x: String) = s"CAST(floor(epoch($x)) AS BIGINT)"
+  // floor(epoch(..)) before the BIGINT cast (double→long convention).
+  // Shared with the Windows twins.
+  private[report] def es(x: String) = s"CAST(floor(epoch($x)) AS BIGINT)"
 
   /** Shared CTE prefix (through candidate selection `j`) for the
     * nearest/forward oracle twins — mirrors [[asofCandidatesW]]. */

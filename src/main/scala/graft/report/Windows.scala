@@ -873,7 +873,7 @@ object Windows {
   }
 
   val funnelTimingSql: String = {
-    def es(x: String) = s"CAST(floor(epoch($x)) AS BIGINT)"
+    import AsOf.es
     s"""WITH e AS (
          SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
        v AS (SELECT user_id, min(ts) AS t1 FROM e

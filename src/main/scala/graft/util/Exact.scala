@@ -63,4 +63,10 @@ object Exact {
   def cents(x: Column): Column = floor(x * 100 + 0.5).cast("long")
 
   def centsSql(x: String): String = s"CAST(floor(($x) * 100 + 0.5) AS BIGINT)"
+
+  /** Exact floor division of a non-negative long by a positive one,
+    * portable: the numerator is reduced to a multiple of `b` first, so
+    * the double division is exact (numerators stay far below 2^53).
+    * SQL twin: `a // b`. */
+  def floorDiv(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
 }
