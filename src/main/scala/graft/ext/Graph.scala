@@ -68,7 +68,7 @@ object Graph {
     * `probes` and `edges`. The probes are unrolled as UNION ALL, not
     * unnest: an unnest-derived CTE feeding a multi-way self-join dies
     * in DuckDB's binder with an internal error that invalidates the
-    * whole session (CLAUDE.md). */
+    * whole session. */
   private val linkGraphCtes: String =
     """nodes AS (SELECT doc_id AS id FROM documents),
        m AS (SELECT count(*) AS m FROM nodes),

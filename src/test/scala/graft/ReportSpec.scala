@@ -52,7 +52,7 @@ class ReportSpec extends AnyFunSuite {
   }
 
   test("every query name has either an oracle or is documented rows-only") {
-    // every query has a DuckDB twin (CLAUDE.md), so the key sets are equal
+    // every query has a DuckDB twin, so the key sets are equal
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
