@@ -64,13 +64,23 @@ object Md5Word {
   /** The low (hex chars 0-14) or high (chars 16-30) 60-bit word of
     * md5(salt || data) — kept in lockstep with [[Md5Word]]'s scaladoc
     * and [[graft.ext.Dedup.simhash64]]. */
-  def word(salt: Array[Byte], data: Array[Byte], hi: Boolean): Long = {
+  def word(salt: Array[Byte], data: Array[Byte], hi: Boolean): Long =
+    wordOf(digest(salt, data, 0, data.length), if (hi) 8 else 0)
+
+  /** md5(salt || data[from, from + len)) on this thread's digest. */
+  private[functions] def digest(salt: Array[Byte], data: Array[Byte],
+                                from: Int, len: Int): Array[Byte] = {
     val d0 = md.get()
     d0.reset()
     if (salt.length > 0) d0.update(salt)
-    d0.update(data)
-    val d = d0.digest()
-    val base = if (hi) 8 else 0
+    d0.update(data, from, len)
+    d0.digest()
+  }
+
+  /** The 60-bit word of digest bytes [base, base+8): bytes base..base+6
+    * whole, plus the high nibble of byte base+7 (base 0 is the low
+    * word, 8 the high). */
+  private[functions] def wordOf(d: Array[Byte], base: Int): Long = {
     var h = 0L
     var k = base
     while (k < base + 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -18,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * K·|hs| boxed writes per row) and then K array_min passes; this
   * expression makes ONE pass over the array holding K running minima
   * in a primitive long[] — no intermediate allocation, and the loop
-  * lives inside whole-stage codegen via [[doGenCode]] (the "custom
+  * runs inside whole-stage codegen via [[doGenCode]] (the "custom
   * Expression beats UDF" tier of the extension ladder: a Scala UDF
   * here would box every element and break the codegen span).
   *
@@ -31,8 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * exactly what the composed form yields (`transform(NULL)` is NULL,
   * `array_min(NULL)` is NULL, but `array(NULL...)` is a NON-null
   * array), so degenerate docs keep their oracle semantics. That makes
-  * this expression never-null, which [[eval]]/[[doGenCode]] encode
-  * directly instead of inheriting UnaryExpression's null propagation.
+  * this expression never-null: both paths pass a null array on to
+  * [[MinHashSig.compute]] instead of inheriting UnaryExpression's null
+  * propagation.
   *
   * Coefficients are Seq (not Array) fields so case-class equality is
   * structural — Catalyst CSE/canonicalization can match two
@@ -41,13 +43,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], modp: Long)
   extends UnaryExpression {
 
-  private val k = as.length
-  require(bs.length == k, "coefficient arrays must have equal length")
+  require(bs.length == as.length, "coefficient arrays must have equal length")
   @transient private lazy val asArr = as.toArray
   @transient private lazy val bsArr = bs.toArray
 
   override def nullable: Boolean = false
-  private def kNulls = new GenericArrayData(new Array[Any](k))
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -57,65 +57,17 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], modp: Lon
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "minhash_sig"
 
-  override def eval(input: InternalRow): Any = {
-    val value = child.eval(input)
-    if (value == null) kNulls
-    else {
-      val arr = value.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      if (n == 0) kNulls
-      else {
-        val mins = Array.fill(k)(Long.MaxValue)
-        var i = 0
-        while (i < n) {
-          val h = arr.getLong(i)
-          var j = 0
-          while (j < k) {
-            val v = (asArr(j) * h + bsArr(j)) % modp
-            if (v < mins(j)) mins(j) = v
-            j += 1
-          }
-          i += 1
-        }
-        new GenericArrayData(mins)
-      }
-    }
-  }
+  override def eval(input: InternalRow): Any =
+    MinHashSig.compute(child.eval(input).asInstanceOf[ArrayData], asArr, bsArr, modp)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val asRef = ctx.addReferenceObj("as", asArr, "long[]")
     val bsRef = ctx.addReferenceObj("bs", bsArr, "long[]")
-    val gad = classOf[GenericArrayData].getName
-    val ad = classOf[ArrayData].getName
     val childGen = child.genCode(ctx)
-    val n = ctx.freshName("n")
-    val mins = ctx.freshName("mins")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val h = ctx.freshName("h")
-    val v = ctx.freshName("v")
-    // never-null: null or empty input both yield the K-null array
-    // (the composed transform+array_min semantics this fuses)
     ev.copy(code = code"""
       ${childGen.code}
-      $ad ${ev.value};
-      if (${childGen.isNull} || ${childGen.value}.numElements() == 0) {
-        ${ev.value} = new $gad(new Object[$k]);
-      } else {
-        final int $n = ${childGen.value}.numElements();
-        final long[] $mins = new long[$k];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        for (int $i = 0; $i < $n; $i++) {
-          final long $h = ${childGen.value}.getLong($i);
-          for (int $j = 0; $j < $k; $j++) {
-            final long $v = ($asRef[$j] * $h + $bsRef[$j]) % ${modp}L;
-            if ($v < $mins[$j]) $mins[$j] = $v;
-          }
-        }
-        ${ev.value} = new $gad($mins);
-      }
+      ${classOf[ArrayData].getName} ${ev.value} = graft.functions.MinHashSig.compute(
+        ${childGen.isNull} ? null : ${childGen.value}, $asRef, $bsRef, ${modp}L);
     """, isNull = FalseLiteral)
   }
 
@@ -124,6 +76,27 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], modp: Lon
 }
 
 object MinHashSig {
+  /** The `as.length` minima of `(as(j)·h + bs(j)) % modp` over the
+    * hashes h of `arr`; all null for a null or empty array. */
+  def compute(arr: ArrayData, as: Array[Long], bs: Array[Long], modp: Long): ArrayData = {
+    val k = as.length
+    if (arr == null || arr.numElements() == 0) return new GenericArrayData(new Array[Any](k))
+    val n = arr.numElements()
+    val mins = Array.fill(k)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val h = arr.getLong(i)
+      var j = 0
+      while (j < k) {
+        val v = (as(j) * h + bs(j)) % modp
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(mins)
+  }
+
   /** Column-API entry point: `minhashSig($"hs", affine, MODP)`. */
   def apply(c: Column, coeffs: Seq[(Long, Long)], modp: Long): Column =
     GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(c),

@@ -63,34 +63,16 @@ case class SimhashPacked(child: Expression, salt: String)
 }
 
 object SimhashPacked {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** 60-bit word from digest bytes [base, base+8): bytes base..base+6
-    * whole, plus the high nibble of byte base+7 — identical to
-    * [[Md5Word.word]]'s assembly for base 0 (lo) / 8 (hi). */
-  private def wordOf(d: Array[Byte], base: Int): Long = {
-    var h = 0L
-    var k = base
-    while (k < base + 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-    (h << 4) | ((d(base + 7) >> 4) & 0xfL)
-  }
-
   def pack(salt: Array[Byte], arr: ArrayData): Long = {
     val n = arr.numElements()
     val c = new Array[Long](64)
-    val d0 = md.get()
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        d0.reset()
-        if (salt.length > 0) d0.update(salt)
-        d0.update(arr.getUTF8String(i).getBytes)
-        val d = d0.digest()
-        val h1 = wordOf(d, 0)
-        val h2 = wordOf(d, 8)
+        val token = arr.getUTF8String(i).getBytes
+        val d = Md5Word.digest(salt, token, 0, token.length)
+        val h1 = Md5Word.wordOf(d, 0)
+        val h2 = Md5Word.wordOf(d, 8)
         var j = 0
         while (j < 32) {
           c(j) += (h1 >>> j) & 1L

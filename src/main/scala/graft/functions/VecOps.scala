@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused integer dot product over two `array<bigint>` columns as a
   * native Catalyst expression.
@@ -37,13 +39,22 @@ case class LongDot(left: Expression, right: Expression) extends BinaryExpression
   override def nullable: Boolean = true
   override def prettyName: String = "long_dot"
 
-  override def eval(input: InternalRow): Any = {
-    val lv = left.eval(input)
-    if (lv == null) return null
-    val rv = right.eval(input)
-    if (rv == null) return null
-    val la = lv.asInstanceOf[ArrayData]
-    val ra = rv.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    LongDot.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      KernelCode.boxedLong(ctx, ev, s"graft.functions.LongDot.compute($l, $r)"))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongDot {
+  /** The dot product of two non-null arrays; null on a length mismatch
+    * or a null element. */
+  def compute(la: ArrayData, ra: ArrayData): java.lang.Long = {
     val n = la.numElements()
     if (n != ra.numElements()) return null
     var acc = 0L
@@ -56,42 +67,6 @@ case class LongDot(left: Expression, right: Expression) extends BinaryExpression
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    val nullElem = ctx.freshName("nullElem")
-    ev.copy(code = code"""
-      ${leftGen.code}
-      ${rightGen.code}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = 0L;
-      if (!${leftGen.isNull} && !${rightGen.isNull}) {
-        final int $n = ${leftGen.value}.numElements();
-        if ($n == ${rightGen.value}.numElements()) {
-          long $acc = 0L;
-          boolean $nullElem = false;
-          for (int $i = 0; $i < $n; $i++) {
-            if (${leftGen.value}.isNullAt($i) || ${rightGen.value}.isNullAt($i)) {
-              $nullElem = true; break;
-            }
-            $acc += ${leftGen.value}.getLong($i) * ${rightGen.value}.getLong($i);
-          }
-          if (!$nullElem) { ${ev.isNull} = false; ${ev.value} = $acc; }
-        }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongDot =
-    copy(left = newLeft, right = newRight)
-}
-
-object LongDot {
   /** Column-API entry point: `LongDot($"a", $"b")`. */
   def apply(a: Column, b: Column): Column =
     GraftColumnBridge.column(LongDot(
@@ -305,7 +280,7 @@ case class ShingleHashes(child: Expression, n: Int, salt: String)
   require(n > 0, "shingle width must be positive")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
+    case StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"shingle_hashes requires a string input, got ${t.sql}")
   }
@@ -315,8 +290,7 @@ case class ShingleHashes(child: Expression, n: Int, salt: String)
   @transient private lazy val saltBytes = salt.getBytes("UTF-8")
 
   override def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, saltBytes)
+    ShingleHashes.compute(input.asInstanceOf[UTF8String], n, saltBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val saltRef = ctx.addReferenceObj("salt", saltBytes, "byte[]")
@@ -329,44 +303,29 @@ case class ShingleHashes(child: Expression, n: Int, salt: String)
 }
 
 object ShingleHashes {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** One-pass shingle hashing over the UTF-8 bytes; `starts` are the
-    * byte offsets of code-point boundaries so char-window semantics
+    * byte offsets of the characters as Spark `substr` counts them
+    * (`UTF8String.numBytesForFirstByte`, which also counts a stray or
+    * invalid lead byte as one character), so char-window semantics
     * match Spark `substr` on any input. */
-  def compute(s: org.apache.spark.unsafe.types.UTF8String, n: Int,
-              salt: Array[Byte]): ArrayData = {
+  def compute(s: UTF8String, n: Int, salt: Array[Byte]): ArrayData = {
     val bytes = s.getBytes
-    // code-point boundary walk (UTF-8 lead-byte arithmetic)
     val startsBuf = new Array[Int](bytes.length + 1)
     var nChars = 0
     var off = 0
     while (off < bytes.length) {
       startsBuf(nChars) = off
-      val b = bytes(off) & 0xff
-      off += (if (b < 0x80) 1 else if (b < 0xe0) 2 else if (b < 0xf0) 3 else 4)
+      off += UTF8String.numBytesForFirstByte(bytes(off))
       nChars += 1
     }
     startsBuf(nChars) = bytes.length
     val count = math.max(nChars - n + 1, 1)
     val res = new Array[Long](count)
-    val digest = md.get()
     var i = 0
     while (i < count) {
       val from = startsBuf(i)
       val to = startsBuf(math.min(i + n, nChars))
-      digest.reset()
-      digest.update(salt)
-      digest.update(bytes, from, to - from)
-      val d = digest.digest()
-      var h = 0L
-      var k = 0
-      while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-      h = (h << 4) | ((d(7) >>> 4) & 0xfL)
-      res(i) = h
+      res(i) = Md5Word.wordOf(Md5Word.digest(salt, bytes, from, to - from), 0)
       i += 1
     }
     new GenericArrayData(res)
@@ -404,13 +363,26 @@ case class PrefixDots(left: Expression, right: Expression, cuts: Seq[Int])
   override def nullable: Boolean = true
   override def prettyName: String = "prefix_dots"
 
-  override def eval(input: InternalRow): Any = {
-    val lv = left.eval(input)
-    if (lv == null) return null
-    val rv = right.eval(input)
-    if (rv == null) return null
-    val la = lv.asInstanceOf[ArrayData]
-    val ra = rv.asInstanceOf[ArrayData]
+  @transient private lazy val cutsArr = cuts.toArray
+
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    PrefixDots.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], cutsArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cutsRef = ctx.addReferenceObj("cuts", cutsArr, "int[]")
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      KernelCode.orNull(ev, s"graft.functions.PrefixDots.compute($l, $r, $cutsRef)"))
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PrefixDots =
+    copy(left = newLeft, right = newRight)
+}
+
+object PrefixDots {
+  /** The dot over each prefix `cuts(j)` of two non-null arrays; null on
+    * a length mismatch, a cut past the end or a null element. */
+  def compute(la: ArrayData, ra: ArrayData, cuts: Array[Int]): ArrayData = {
     val n = la.numElements()
     if (n != ra.numElements() || cuts.last > n) return null
     val res = new Array[Long](cuts.length)
@@ -423,57 +395,9 @@ case class PrefixDots(left: Expression, right: Expression, cuts: Seq[Int])
       i += 1
       if (i == cuts(j)) { res(j) = acc; j += 1 }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(res)
+    new GenericArrayData(res)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val acc = ctx.freshName("acc")
-    val res = ctx.freshName("res")
-    val bad = ctx.freshName("bad")
-    val cutsArr = ctx.freshName("cuts")
-    val cutsLit = cuts.mkString(", ")
-    ev.copy(code = code"""
-      ${leftGen.code}
-      ${rightGen.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${leftGen.isNull} && !${rightGen.isNull}) {
-        final int[] $cutsArr = new int[]{$cutsLit};
-        final int $n = ${leftGen.value}.numElements();
-        if ($n == ${rightGen.value}.numElements()
-            && $cutsArr[${cuts.length - 1}] <= $n) {
-          final long[] $res = new long[${cuts.length}];
-          long $acc = 0L;
-          boolean $bad = false;
-          int $j = 0;
-          for (int $i = 0; $i < $cutsArr[${cuts.length - 1}]; $i++) {
-            if (${leftGen.value}.isNullAt($i) || ${rightGen.value}.isNullAt($i)) {
-              $bad = true; break;
-            }
-            $acc += ${leftGen.value}.getLong($i) * ${rightGen.value}.getLong($i);
-            if ($i + 1 == $cutsArr[$j]) { $res[$j] = $acc; $j++; }
-          }
-          if (!$bad) {
-            ${ev.isNull} = false;
-            ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($res);
-          }
-        }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PrefixDots =
-    copy(left = newLeft, right = newRight)
-}
-
-object PrefixDots {
   /** Column-API entry point: `PrefixDots($"a", $"b", Seq(8, 16, 64))`. */
   def apply(a: Column, b: Column, cuts: Seq[Int]): Column =
     GraftColumnBridge.column(PrefixDots(
@@ -512,10 +436,21 @@ case class WindowMinima(child: Expression, w: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "window_minima"
 
-  override def eval(input: InternalRow): Any = {
-    val value = child.eval(input)
-    if (value == null) return null
-    val arr = value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    WindowMinima.compute(input.asInstanceOf[ArrayData], w)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      KernelCode.orNull(ev, s"graft.functions.WindowMinima.compute($c, $w)"))
+
+  override protected def withNewChildInternal(newChild: Expression): WindowMinima =
+    copy(child = newChild)
+}
+
+object WindowMinima {
+  /** The sorted distinct `w`-window minima of a non-null array; null
+    * when it is empty or holds a null. */
+  def compute(arr: ArrayData, w: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     var i = 0
@@ -542,64 +477,9 @@ case class WindowMinima(child: Expression, w: Int) extends UnaryExpression {
       if (i == 0 || mins(i) != mins(i - 1)) { mins(k) = mins(i); k += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(mins, k))
+    new GenericArrayData(java.util.Arrays.copyOf(mins, k))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gad = classOf[org.apache.spark.sql.catalyst.util.GenericArrayData].getName
-    val ad = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-    val childGen = child.genCode(ctx)
-    val n = ctx.freshName("n")
-    val nw = ctx.freshName("nw")
-    val win = ctx.freshName("win")
-    val mins = ctx.freshName("mins")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val m = ctx.freshName("m")
-    val v = ctx.freshName("v")
-    val k = ctx.freshName("k")
-    val ok = ctx.freshName("ok")
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = true;
-      $ad ${ev.value} = null;
-      if (!${childGen.isNull} && ${childGen.value}.numElements() > 0) {
-        final int $n = ${childGen.value}.numElements();
-        boolean $ok = true;
-        for (int $i = 0; $i < $n; $i++) {
-          if (${childGen.value}.isNullAt($i)) { $ok = false; break; }
-        }
-        if ($ok) {
-          final int $nw = $n < $w ? 1 : $n - $w + 1;
-          final int $win = $n < $w ? $n : $w;
-          final long[] $mins = new long[$nw];
-          for (int $i = 0; $i < $nw; $i++) {
-            long $m = ${childGen.value}.getLong($i);
-            for (int $j = 1; $j < $win; $j++) {
-              final long $v = ${childGen.value}.getLong($i + $j);
-              if ($v < $m) $m = $v;
-            }
-            $mins[$i] = $m;
-          }
-          java.util.Arrays.sort($mins);
-          int $k = 0;
-          for (int $i = 0; $i < $nw; $i++) {
-            if ($i == 0 || $mins[$i] != $mins[$i - 1]) { $mins[$k++] = $mins[$i]; }
-          }
-          ${ev.isNull} = false;
-          ${ev.value} = new $gad(java.util.Arrays.copyOf($mins, $k));
-        }
-      }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WindowMinima =
-    copy(child = newChild)
-}
-
-object WindowMinima {
   /** Column-API entry point: `WindowMinima($"hs", 4)`. */
   def apply(c: Column, w: Int): Column =
     GraftColumnBridge.column(WindowMinima(GraftColumnBridge.expression(c), w))
@@ -635,19 +515,51 @@ case class ScaledDistSq(first: Expression, second: Expression, third: Expression
   override def nullable: Boolean = true
   override def prettyName: String = "scaled_dist_sq"
 
+  // k is read even when the kernel ignores it (empty arrays): a null
+  // k unboxes to 0L beside its flag
   override def eval(input: InternalRow): Any = {
     val xv = first.eval(input)
     if (xv == null) return null
     val sv = second.eval(input)
     if (sv == null) return null
-    val xa = xv.asInstanceOf[ArrayData]
-    val sa = sv.asInstanceOf[ArrayData]
+    val kv = third.eval(input)
+    ScaledDistSq.compute(xv.asInstanceOf[ArrayData], sv.asInstanceOf[ArrayData],
+      kv == null, kv.asInstanceOf[Long])
+  }
+
+  // not nullSafeCodeGen: two empty arrays give 0 even when k is null
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val xGen = first.genCode(ctx)
+    val sGen = second.genCode(ctx)
+    val kGen = third.genCode(ctx)
+    val call = "graft.functions.ScaledDistSq.compute(" +
+      s"${xGen.value}, ${sGen.value}, ${kGen.isNull}, ${kGen.value})"
+    ev.copy(code = code"""
+      ${xGen.code}
+      ${sGen.code}
+      ${kGen.code}
+      boolean ${ev.isNull} = true;
+      long ${ev.value} = 0L;
+      if (!${xGen.isNull} && !${sGen.isNull}) {
+        ${KernelCode.boxedLong(ctx, ev, call)}
+      }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): ScaledDistSq =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object ScaledDistSq {
+  /** `Σ (x_i·k − s_i)²` over two non-null arrays; 0 for two empty
+    * arrays whatever k is, else null on a length mismatch, a null k or
+    * a null element. */
+  def compute(xa: ArrayData, sa: ArrayData, kNull: Boolean, k: Long): java.lang.Long = {
     val n = xa.numElements()
     if (n != sa.numElements()) return null
     if (n == 0) return 0L
-    val kv = third.eval(input)
-    if (kv == null) return null
-    val k = kv.asInstanceOf[Long]
+    if (kNull) return null
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -659,50 +571,6 @@ case class ScaledDistSq(first: Expression, second: Expression, third: Expression
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val xGen = first.genCode(ctx)
-    val sGen = second.genCode(ctx)
-    val kGen = third.genCode(ctx)
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    val d = ctx.freshName("d")
-    val nullElem = ctx.freshName("nullElem")
-    ev.copy(code = code"""
-      ${xGen.code}
-      ${sGen.code}
-      ${kGen.code}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = 0L;
-      if (!${xGen.isNull} && !${sGen.isNull}) {
-        final int $n = ${xGen.value}.numElements();
-        if ($n == ${sGen.value}.numElements()) {
-          if ($n == 0) {
-            ${ev.isNull} = false;
-          } else if (!${kGen.isNull}) {
-            long $acc = 0L;
-            boolean $nullElem = false;
-            for (int $i = 0; $i < $n; $i++) {
-              if (${xGen.value}.isNullAt($i) || ${sGen.value}.isNullAt($i)) {
-                $nullElem = true; break;
-              }
-              final long $d = ${xGen.value}.getLong($i) * ${kGen.value} - ${sGen.value}.getLong($i);
-              $acc += $d * $d;
-            }
-            if (!$nullElem) { ${ev.isNull} = false; ${ev.value} = $acc; }
-          }
-        }
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): ScaledDistSq =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object ScaledDistSq {
   /** Column-API entry point: `ScaledDistSq($"qv", $"cent", $"k")`. */
   def apply(x: Column, s: Column, k: Column): Column =
     GraftColumnBridge.column(ScaledDistSq(
@@ -723,8 +591,8 @@ object ScaledDistSq {
   * Null parity with the composed form (asserted by FunctionsSpec):
   * a null vector, length mismatch, or any null element turns EVERY
   * plane's dot null, and `when(null > 0, …).otherwise(0)` picks 0 for
-  * each — so the bucket is 0, never null. Hence never-null, encoded
-  * directly in [[eval]]/[[doGenCode]].
+  * each — so the bucket is 0, never null. Hence never-null: both
+  * paths pass a null vector on to [[HyperplaneBucket.compute]].
   *
   * Planes are a Seq-of-Seq field so case-class equality is structural
   * (Catalyst CSE can match separately-built instances).
@@ -749,10 +617,29 @@ case class HyperplaneBucket(child: Expression, planes: Seq[Seq[Long]])
   override def dataType: DataType = LongType
   override def prettyName: String = "hyperplane_bucket"
 
-  override def eval(input: InternalRow): Any = {
-    val value = child.eval(input)
-    if (value == null) return 0L
-    val arr = value.asInstanceOf[ArrayData]
+  override def eval(input: InternalRow): Any =
+    HyperplaneBucket.compute(child.eval(input).asInstanceOf[ArrayData], flat, p, dim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val wRef = ctx.addReferenceObj("planes", flat, "long[]")
+    val childGen = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${childGen.code}
+      long ${ev.value} = graft.functions.HyperplaneBucket.compute(
+        ${childGen.isNull} ? null : ${childGen.value}, $wRef, $p, $dim);
+    """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
+    copy(child = newChild)
+}
+
+object HyperplaneBucket {
+  /** The sign bucket of `arr` against the `p` planes of `flat`
+    * (plane-major, `dim` wide); 0 for a null array, a length mismatch
+    * or a null element. */
+  def compute(arr: ArrayData, flat: Array[Long], p: Int, dim: Int): Long = {
+    if (arr == null) return 0L
     if (arr.numElements() != dim) return 0L
     val sums = new Array[Long](p)
     var i = 0
@@ -775,43 +662,6 @@ case class HyperplaneBucket(child: Expression, planes: Seq[Seq[Long]])
     bucket
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val wRef = ctx.addReferenceObj("planes", flat, "long[]")
-    val childGen = child.genCode(ctx)
-    val sums = ctx.freshName("sums")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val x = ctx.freshName("x")
-    val ok = ctx.freshName("ok")
-    ev.copy(code = code"""
-      ${childGen.code}
-      long ${ev.value} = 0L;
-      if (!${childGen.isNull} && ${childGen.value}.numElements() == $dim) {
-        final long[] $sums = new long[$p];
-        boolean $ok = true;
-        for (int $i = 0; $i < $dim && $ok; $i++) {
-          if (${childGen.value}.isNullAt($i)) { $ok = false; break; }
-          final long $x = ${childGen.value}.getLong($i);
-          for (int $j = 0; $j < $p; $j++) {
-            $sums[$j] += $wRef[$j * $dim + $i] * $x;
-          }
-        }
-        if ($ok) {
-          for (int $j = 0; $j < $p; $j++) {
-            if ($sums[$j] > 0) ${ev.value} |= 1L << $j;
-          }
-        }
-      }
-    """, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucket =
-    copy(child = newChild)
-}
-
-object HyperplaneBucket {
   /** Column-API entry point: `HyperplaneBucket($"qv", planes)`. */
   def apply(c: Column, planes: Seq[Seq[Long]]): Column =
     GraftColumnBridge.column(HyperplaneBucket(
@@ -838,7 +688,7 @@ case class PairCount(child: Expression, w1: String, w2: String)
 
   override def nullable: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
+    case ArrayType(StringType, _) =>
       TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"pair_count requires array<string> input, got ${t.sql}")
@@ -846,15 +696,25 @@ case class PairCount(child: Expression, w1: String, w2: String)
   override def dataType: DataType = LongType
   override def prettyName: String = "pair_count"
 
-  @transient private lazy val u1 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(w1)
-  @transient private lazy val u2 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(w2)
+  @transient private lazy val u1 = UTF8String.fromString(w1)
+  @transient private lazy val u2 = UTF8String.fromString(w2)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    PairCount.count(input.asInstanceOf[ArrayData], u1, u2)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r1 = ctx.addReferenceObj("pcW1", u1)
+    val r2 = ctx.addReferenceObj("pcW2", u2)
+    defineCodeGen(ctx, ev, c => s"graft.functions.PairCount.count($c, $r1, $r2)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PairCount =
+    copy(child = newChild)
+}
+
+object PairCount {
+  /** The adjacent (u1, u2) pairs of a non-null token array. */
+  def count(a: ArrayData, u1: UTF8String, u2: UTF8String): Long = {
     val n = a.numElements()
     var acc = 0L
     var i = 0
@@ -867,39 +727,23 @@ case class PairCount(child: Expression, w1: String, w2: String)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val r1 = ctx.addReferenceObj("pcW1", u1)
-    val r2 = ctx.addReferenceObj("pcW2", u2)
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = ${childGen.isNull};
-      long ${ev.value} = 0L;
-      if (!${ev.isNull}) {
-        final int $n = ${childGen.value}.numElements();
-        long $acc = 0L;
-        for (int $i = 0; $i < $n - 1; $i++) {
-          if (!${childGen.value}.isNullAt($i) && !${childGen.value}.isNullAt($i + 1)
-              && $r1.equals(${childGen.value}.getUTF8String($i))
-              && $r2.equals(${childGen.value}.getUTF8String($i + 1))) {
-            $acc++;
-          }
-        }
-        ${ev.value} = $acc;
-      }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PairCount =
-    copy(child = newChild)
-}
-
-object PairCount {
   /** Column-API entry point: `PairCount($"toks", "hash", "join")`. */
   def apply(c: Column, w1: String, w2: String): Column =
     GraftColumnBridge.column(PairCount(GraftColumnBridge.expression(c), w1, w2))
+}
+
+/** The generated side of a kernel that returns null for an input it
+  * rejects: Java statements that store the call's result in `ev`,
+  * whose `eval` side returns the same call's value as it is. */
+private[functions] object KernelCode {
+  /** For a kernel returning a nullable object (an `ArrayData`). */
+  def orNull(ev: ExprCode, call: String): String =
+    s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+
+  /** For a kernel returning a nullable `java.lang.Long` into a `long`. */
+  def boxedLong(ctx: CodegenContext, ev: ExprCode, call: String): String = {
+    val r = ctx.freshName("boxed")
+    s"java.lang.Long $r = $call;\n${ev.isNull} = $r == null;\n" +
+      s"if ($r != null) ${ev.value} = $r.longValue();"
+  }
 }

@@ -49,8 +49,9 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("MinHashSig interpreted eval matches codegen") {
-    // nullSafeEval is the non-codegen fallback path (used by e.g.
-    // constant folding); pin it against the codegen'd column result
+    // eval is the non-codegen fallback path (used by e.g. constant
+    // folding); pin it against the codegen'd column result, whose
+    // input is per-row (a literal input would be folded through eval)
     val hs = Array(17L, 4294967295L, 0L, 123456789L)
     val expr = MinHashSig(
       org.apache.spark.sql.catalyst.expressions.Literal.create(hs,
@@ -58,9 +59,12 @@ class FunctionsSpec extends AnyFunSuite {
       Dedup.affine.map(_._1), Dedup.affine.map(_._2), Dedup.MODP)
     val interp = expr.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toLongArray.toSeq
-    val viaPlan = spark.range(1)
-      .select(MinHashSig(lit(hs).cast("array<long>"), Dedup.affine, Dedup.MODP))
-      .head().getSeq[Long](0)
+    val planDf = spark.range(1)
+      .select(MinHashSig(when(col("id") === 0, lit(hs)), Dedup.affine, Dedup.MODP).as("sig"))
+    val viaPlan = planDf.head().getSeq[Long](0)
+    val projLine = planDf.queryExecution.executedPlan.toString.linesIterator
+      .find(_.contains("minhash_sig")).getOrElse("")
+    assert(projLine.contains("*("), s"plan side ran no generated code: $projLine")
     assert(interp == viaPlan.toSeq)
     // and against the definition itself
     val want = Dedup.affine.map { case (a, b) => hs.map(h => (a * h + b) % Dedup.MODP).min }
@@ -131,11 +135,20 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  private def ascii(t: String) = t.getBytes("US-ASCII").map("%02X".format(_)).mkString
+
   test("ShingleHashes equals the composed transform+phash form, incl. UTF-8 + edges") {
     val docs = graft.model.Tables.documents(spark, sf).limit(200)
       .select(col("text"))
       .unionAll(spark.range(1).select(lit("tiny").as("text")))       // len < n
       .unionAll(spark.range(1).select(lit("héllо wörld ünïcode £10 ≥é").as("text")))
+      // invalid UTF-8, which Spark counts one character per stray or
+      // invalid lead byte: a continuation byte, an overlong lead, a
+      // lead past F4
+      .unionAll(Seq("6180626364", "C06162", "F86162636465").map { hex =>
+        spark.range(1).select(
+          unhex(lit(ascii("bad bytes ") + hex + ascii(" then words"))).cast("string").as("text"))
+      }.reduce(_ unionAll _))
     def composed(salt: String) = transform(
       sequence(lit(1), greatest(length(col("text")) - 7, lit(1))),
       i => graft.util.Hashing.phash(col("text").substr(i, lit(8)), salt))
@@ -147,6 +160,18 @@ class FunctionsSpec extends AnyFunSuite {
     assert(checked.filter(not(col("fused") <=> col("ref")) ||
       not(col("fusedS") <=> col("refS"))).count() == 0,
       "fused shingle hashes diverge from the composed form")
+    // a 3-byte lead cut off at the end: Spark's substr copies all the
+    // bytes the lead promises, past the end of the value, so the
+    // composed form's last shingle hashes bytes that are not in the
+    // text; the fused one stops at the text's end
+    val cut = spark.range(1)
+      .select(unhex(lit(ascii("bad bytes ") + "E282")).cast("string").as("text"))
+      .select(graft.functions.ShingleHashes(col("text"), 8).as("fused"), composed("").as("ref"),
+        graft.util.Hashing.phash(unhex(lit(ascii(" bytes ") + "E282")).cast("string"), "")
+          .as("tail")).head()
+    val (fused, ref) = (cut.getSeq[Long](0), cut.getSeq[Long](1))
+    assert(fused.size == ref.size && fused.init == ref.init && fused.last == cut.getLong(2),
+      s"cut-off lead: fused $fused, composed $ref")
     // null text: the fused form propagates NULL (the documented
     // contract); the composed form instead yields [null] because
     // `greatest` IGNORES its null operand — a corpus with null texts

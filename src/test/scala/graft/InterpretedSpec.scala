@@ -10,7 +10,8 @@ import graft.parse.Style5
   * whole-stage codegen off and `spark.sql.codegen.factoryMode=NO_CODEGEN`,
   * every projection and predicate evaluates through `eval`, never
   * `doGenCode`. Each case must give the same rows as the default
-  * (generated code) path, over the sf0.01 corpora. */
+  * (generated code) path, over the sf0.01 corpora and over each
+  * kernel's edge rows. */
 class InterpretedSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -106,5 +107,74 @@ class InterpretedSpec extends AnyFunSuite {
           PairCount(split(col("text"), " "), "the", "of").as("pairs"))
         .orderBy("doc_id")
     }
+  }
+
+  /** `values(i)` on the row `id = i` of `spark.range`: an input that
+    * constant folding cannot evaluate at plan time, so the default
+    * side runs each kernel through its generated code. */
+  private def byId(values: Column*): Column =
+    values.zipWithIndex.tail.foldLeft(when(col("id") === 0, values.head)) {
+      case (c, (v, i)) => c.when(col("id") === i, v)
+    }
+
+  private def longs(xs: java.lang.Long*): Column =
+    if (xs.isEmpty) array().cast("array<bigint>")
+    else array(xs.map(x => lit(x).cast("bigint")): _*)
+
+  private def strings(xs: String*): Column =
+    if (xs.isEmpty) array().cast("array<string>")
+    else array(xs.map(x => lit(x).cast("string")): _*)
+
+  private val noLongs = lit(null).cast("array<bigint>")
+
+  /** The values of `op` on rows 0 until `n`, the same both ways, in id order. */
+  private def edges(n: Int, op: Column): Seq[Any] =
+    sameBothWays(() => spark.range(n).select(col("id"), op.as("op")).orderBy("id"))
+      .map(r => r.get(1))
+
+  test("kernel edge rows: interpreted == generated, with FunctionsSpec's values") {
+    // LongDot: null input either side, length mismatch, null element, empty
+    assert(edges(6, LongDot(
+      byId(noLongs, longs(1L), longs(1L, 2L), longs(1L, null), longs(), longs(2L, 3L)),
+      byId(longs(1L), noLongs, longs(3L), longs(3L, 4L), longs(), longs(5L, 7L))))
+      == Seq(null, null, null, null, 0L, 31L))
+    // PrefixDots: null input, cut past the end, null element, mismatch
+    assert(edges(5, PrefixDots(
+      byId(noLongs, longs(1L), longs(1L, null), longs(1L, 2L), longs(2L, 3L)),
+      byId(longs(1L), longs(1L), longs(3L, 4L), longs(3L), longs(5L, 7L)), Seq(1, 2)))
+      == Seq(null, null, null, null, Seq(10L, 31L)))
+    // WindowMinima (w = 4): null, empty, null element, n < w, n = 1, n >= w
+    assert(edges(6, WindowMinima(byId(noLongs, longs(), longs(1L, null, 3L),
+      longs(9L, 3L, 7L), longs(5L), longs(9L, 3L, 7L, 8L, 1L)), 4))
+      == Seq(null, null, null, Seq(3L), Seq(5L), Seq(1L, 3L)))
+    // ScaledDistSq: empty arrays with null and with non-null k, null k
+    // over non-empty arrays, mismatch, null input, null element
+    val nullK = lit(null).cast("bigint")
+    assert(edges(7, ScaledDistSq(
+      byId(longs(), longs(), longs(1L), longs(1L, 2L), longs(4L), noLongs, longs(4L, null)),
+      byId(longs(), longs(), longs(2L), longs(2L), longs(2L), longs(2L), longs(2L, 1L)),
+      byId(nullK, lit(5L), nullK, lit(3L), lit(3L), lit(3L), lit(3L))))
+      == Seq(0L, 0L, null, null, 100L, null, null))
+    // HyperplaneBucket: null, short, null element -> 0, never null
+    assert(edges(4, HyperplaneBucket(
+      byId(noLongs, longs(5L), longs(5L, null), longs(5L, -1L)),
+      Seq(Seq(1L, -1L), Seq(-1L, 1L)))) == Seq(0L, 0L, 0L, 1L))
+    // PairCount: FunctionsSpec's token cases, then a null input and a
+    // null element between the pair
+    assert(edges(10, PairCount(byId(
+      strings("hash", "join"), strings("hash", "join", "hash", "join"),
+      strings("hash", "hash", "join"), strings("hash"), strings(),
+      strings("join", "hash"), strings("a", "hash", "join", "b", "hash"),
+      strings("rehash", "join"), lit(null).cast("array<string>"),
+      strings("hash", null, "join")), "hash", "join"))
+      == Seq(1L, 2L, 1L, 0L, 0L, 0L, 1L, 0L, null, 0L))
+    // MinHashSig: empty and null input both give K nulls
+    val hs = Seq(17L, 4294967295L, 0L, 123456789L)
+    val sigs = edges(3, MinHashSig(
+      byId(longs(), noLongs, longs(hs.map(Long.box): _*)),
+      graft.ext.Dedup.affine, graft.ext.Dedup.MODP))
+    val kNulls = Seq.fill(graft.ext.Dedup.affine.length)(null)
+    assert(sigs == Seq(kNulls, kNulls,
+      graft.ext.Dedup.affine.map { case (a, b) => hs.map(h => (a * h + b) % graft.ext.Dedup.MODP).min }))
   }
 }
